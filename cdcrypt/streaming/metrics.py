@@ -1,7 +1,7 @@
 """Pipeline observability: the checkpoint lineage log as a DataFrame.
 
 Every committed epoch leaves one ``epoch_NNNNNN.json`` in the
-checkpoint directory (streaming/pipeline.py ``_write_checkpoint``) —
+checkpoint directory (streaming/pipeline.py ``write_checkpoint``) —
 offsets, rows merged, per-bucket lineage, DLQ/integrity/txn counters,
 wall seconds. That log IS the pipeline's metrics store (the reference
 delegates this to Connect's JMX metrics + offset topic; this engine

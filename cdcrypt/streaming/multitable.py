@@ -19,7 +19,6 @@ per-table sub-lineage.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from dataclasses import dataclass, field as dc_field
@@ -28,7 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdcrypt.operators.multitable import TableRoute, apply_multi
-from cdcrypt.streaming.pipeline import list_epochs
+from cdcrypt.streaming.pipeline import (
+    aqe_disabled,
+    list_epochs,
+    write_checkpoint,
+    write_epoch_parquet,
+)
 
 
 @dataclass
@@ -62,27 +66,6 @@ class MultiTableIngest:
             return spark.read.json(*files)
         return spark.read.parquet(*files)
 
-    def _write_dlq(self, dead: DataFrame, epoch: int) -> int:
-        """Unroutable rows, per-epoch parquet: hidden-tmp write + atomic
-        rename, row count from the written footers — the exact contract of
-        the single-table pipeline's DLQ sink (streaming/pipeline.py),
-        replay-idempotent because it lands BEFORE any table commit."""
-        import shutil
-
-        import pyarrow.parquet as pq
-
-        os.makedirs(self.dlq_dir, exist_ok=True)
-        tmp = os.path.join(self.dlq_dir, f".epoch_{epoch:06d}.tmp")
-        final = os.path.join(self.dlq_dir, f"epoch={epoch:06d}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        dead.write.mode("overwrite").parquet(tmp)
-        rows = sum(
-            pq.ParquetFile(os.path.join(tmp, name)).metadata.num_rows
-            for name in os.listdir(tmp) if name.endswith(".parquet"))
-        shutil.rmtree(final, ignore_errors=True)  # replayed epoch
-        os.replace(tmp, final)
-        return rows
-
     def process_epoch(self, spark: SparkSession, epoch: int,
                       files: list[str]) -> dict:
         t0 = time.monotonic()
@@ -101,20 +84,13 @@ class MultiTableIngest:
             "files": [os.path.basename(f) for f in files],
         }
         if out["dlq"] is not None:
-            lineage["dlq_rows"] = self._write_dlq(out["dlq"], epoch)
+            lineage["dlq_rows"] = write_epoch_parquet(
+                out["dlq"], self.dlq_dir, epoch)
         if self.aligner is not None:
             lineage["txn_pending_rows"] = self.aligner.last_pending_rows
         lineage["wall_sec"] = round(time.monotonic() - t0, 3)
-        self._write_checkpoint(epoch, lineage)
+        write_checkpoint(self.checkpoint_dir, epoch, lineage)
         return lineage
-
-    def _write_checkpoint(self, epoch: int, lineage: dict) -> None:
-        os.makedirs(self.checkpoint_dir, exist_ok=True)
-        tmp = os.path.join(self.checkpoint_dir, f".epoch_{epoch:06d}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(lineage, f, indent=1, default=str)
-        os.replace(tmp, os.path.join(self.checkpoint_dir,
-                                     f"epoch_{epoch:06d}.json"))
 
     # ---------- replay loop ----------
     def run(self, spark: SparkSession,
@@ -129,13 +105,5 @@ class MultiTableIngest:
         pending = sorted(e for e in epochs if e > floor)
         if max_epochs is not None:
             pending = pending[:max_epochs]
-        results = []
-        aqe_key = "spark.sql.adaptive.enabled"
-        prev_aqe = spark.conf.get(aqe_key, "true")
-        spark.conf.set(aqe_key, "false")
-        try:
-            for e in pending:
-                results.append(self.process_epoch(spark, e, epochs[e]))
-        finally:
-            spark.conf.set(aqe_key, prev_aqe)
-        return results
+        with aqe_disabled(spark):
+            return [self.process_epoch(spark, e, epochs[e]) for e in pending]

@@ -1,7 +1,9 @@
 """IngestPipeline — the CDC replay driver (SURVEY.md §7 stage 7).
 
 Structured-Streaming-shaped manual micro-batch loop (the sandbox has no Kafka
-JAR; epoch files stand in for topic offsets, SURVEY.md P1). Each epoch:
+JAR; epoch files stand in for topic offsets, SURVEY.md P1). Each epoch
+(``IngestPipeline.ingest_batch``, shared with the Structured Streaming
+driver in structured.py):
 
     read epoch files -> cluster by bucket (ONE exchange)
         -> resolve one final change per key (dedup + LWW, exchange reused)
@@ -29,6 +31,7 @@ import os
 import re
 import time
 from collections import defaultdict
+from contextlib import contextmanager
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,7 +54,12 @@ from cdcrypt.operators.dedup import (
 )
 from cdcrypt.operators.merge import merge_upsert
 from cdcrypt.operators.transform import FieldTransform, TransformConfig
-from cdcrypt.table.lake import LakeTable, LakeTableError, LakeTableNotFound
+from cdcrypt.table.lake import (
+    LakeTable,
+    LakeTableError,
+    LakeTableNotFound,
+    repartition_by_bucket,
+)
 
 _EPOCH_FILE = re.compile(r"epoch=(\d+)\b")
 
@@ -85,6 +93,57 @@ def list_epochs(source_dir: str) -> dict[int, list[str]]:
     return dict(out)
 
 
+@contextmanager
+def aqe_disabled(spark: SparkSession):
+    """Suspend adaptive query execution for an ingest loop. Every exchange
+    in the ingest plan is explicitly sized (repartition to the table's
+    bucket count), so adaptive execution has nothing to improve, while its
+    per-stage query materialization added 2-6x wall latency per micro-batch
+    (measured: AQE-on epochs 5-22s erratic vs AQE-off 3.4-4.8s uniform at
+    the same input). Analytics reads keep AQE (skew joins, coalescing)."""
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def write_epoch_parquet(df: DataFrame, out_dir: str, epoch: int) -> int:
+    """Idempotent per-epoch parquet sink (dead letters, integrity
+    anomalies): hidden tmp + atomic rename into ``out_dir/epoch=NNNNNN``;
+    an epoch replay overwrites its own output. Returns the row count from
+    the written footers (no second job)."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(out_dir, exist_ok=True)
+    tmp = os.path.join(out_dir, f".epoch_{epoch:06d}.tmp")
+    final = os.path.join(out_dir, f"epoch={epoch:06d}")
+    if os.path.exists(tmp):
+        shutil.rmtree(tmp)
+    df.write.mode("overwrite").parquet(tmp)
+    rows = 0
+    for name in os.listdir(tmp):
+        if name.endswith(".parquet"):
+            rows += pq.ParquetFile(os.path.join(tmp, name)).metadata.num_rows
+    if os.path.exists(final):
+        shutil.rmtree(final)          # replayed epoch: overwrite
+    os.replace(tmp, final)
+    return rows
+
+
+def write_checkpoint(checkpoint_dir: str, epoch: int, lineage: dict) -> None:
+    """Atomic per-epoch lineage JSON: ``checkpoint_dir/epoch_NNNNNN.json``."""
+    os.makedirs(checkpoint_dir, exist_ok=True)
+    tmp = os.path.join(checkpoint_dir, f".epoch_{epoch:06d}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(lineage, f, indent=1, default=str)
+    os.replace(tmp, os.path.join(checkpoint_dir, f"epoch_{epoch:06d}.json"))
+
+
 @dataclass
 class IngestPipeline:
     source_dir: str
@@ -112,7 +171,6 @@ class IngestPipeline:
     merge_engine: str = "lww"
     agg_spec: dict | None = None
     compact_threshold: int = 8
-    cluster_strategy: str = "fused"  # 'fused' (1 shuffle) | 'post' (skew-safe)
     # 'udf' = pandas-UDF crypto, per-Arrow-batch DEKs (north-rule canonical);
     # 'jvm' = builtin aes_encrypt, per-epoch DEK recorded in commit lineage
     crypto_backend: str = "udf"
@@ -180,6 +238,14 @@ class IngestPipeline:
     # contract is the pipeline's own: replaying an epoch recomputes the
     # identical release set. lineage carries txn_pending_rows.
     aligner: object | None = None
+
+    def __post_init__(self) -> None:
+        if self.dlq_adapter is not None and self.source_adapter is not None:
+            raise ValueError(
+                "source_adapter and dlq_adapter are mutually exclusive "
+                "(the tolerant adapter IS the source adapter)")
+        if self.dlq_adapter is not None and self.dlq_dir is None:
+            raise ValueError("dlq_adapter requires dlq_dir")
 
     @property
     def _bucket_by(self) -> str:
@@ -345,76 +411,48 @@ class IngestPipeline:
 
         return str(pq.ParquetFile(files[0]).schema_arrow)
 
-    # ---------- one epoch ----------
-    def process_epoch(self, spark: SparkSession, table: LakeTable,
-                      epoch: int, files: list[str]) -> dict:
-        """One micro-batch. Physical shape (cluster_strategy='fused'):
+    # ---------- one batch ----------
+    def ingest_batch(self, spark: SparkSession, table: LakeTable,
+                     df: DataFrame, epoch: int) -> dict:
+        """One micro-batch through the operator chain, shared by the epoch
+        loop (:meth:`process_epoch`) and the Structured Streaming sink
+        (``StructuredIngest.apply_batch``). ``df`` is the batch as read
+        (raw lines when ``dlq_adapter`` is set). Physical shape:
 
             scan -> Exchange(B, conv_id) -> resolve (NO exchange: the
             groupBy/window reuses the bucket clustering via subset
             satisfaction) -> encrypt UDF (partitioning preserved) ->
             plain per-bucket file write (NO exchange, NO partitionBy sort)
 
-        ONE shuffle end-to-end per epoch. Encryption runs AFTER resolution
-        so superseded/duplicate events never pay crypto.
-
-        'post' resolves on (conv_id, turn_idx) spread BEFORE bucket
-        clustering: +1 shuffle, but resolution compute is skew-free even if
-        one conversation dominates the stream — the bucket-aligned write
-        stays skewed either way (a hot conversation lives in one bucket by
-        layout). 'fused' is the throughput default; 'post' the extreme-skew
-        escape hatch.
-        """
-        from cdcrypt.table.lake import repartition_by_bucket
-
-        t0 = time.monotonic()
+        ONE shuffle end-to-end per batch. Encryption runs AFTER resolution
+        so superseded/duplicate events never pay crypto. Side outputs (DLQ,
+        integrity anomalies, aligner state) land BEFORE the table commit:
+        a crash between them replays the batch, which overwrites them
+        idempotently."""
         if self.audit is not None:
-            # crash-recovery: a staged snapshot pending at epoch start is a
+            # crash-recovery: a staged snapshot pending at batch start is a
             # leftover from a run that died between staging and its audit
             # verdict (this pipeline is the table's single writer). Abandon
-            # it — the epoch replays deterministically and re-stages.
+            # it — the batch replays deterministically and re-stages.
             for sv in table.staged_versions():
                 table.abandon_staged(sv)
-        if self.crypto_backend == "jvm":
-            self._check_iv_budget(files)
-        if self.dlq_adapter is not None and self.source_adapter is not None:
-            raise LakeTableError(
-                "source_adapter and dlq_adapter are mutually exclusive "
-                "(the tolerant adapter IS the source adapter)")
-        if self.dlq_adapter is not None and self.dlq_dir is None:
-            raise LakeTableError("dlq_adapter requires dlq_dir")
         raw_cached = None
-        dlq_rows = 0
         if self.dlq_adapter is not None:
-            raw = (spark.read.text(*files) if files[0].endswith(".jsonl")
-                   else spark.read.parquet(*files))
             # both halves filter ONE classified parse; cache the raw lines
-            # so the dead-letter job and the merge job scan the epoch once
-            raw_cached = raw.persist()
+            # so the dead-letter job and the merge job scan the batch once
+            raw_cached = df.persist()
             df, dead = self.dlq_adapter(raw_cached)
-            if "epoch" not in df.columns:
-                df = df.withColumn("epoch", F.lit(epoch).cast("long"))
-            # dead BEFORE the table commit: a crash between them leaves the
-            # epoch uncommitted, and the replay overwrites the dlq dir —
-            # commit-first would strand poison records forever
-            dlq_rows = self._write_dlq(dead, epoch)
-        elif self.source_adapter is not None:
-            if files[0].endswith(".jsonl"):
-                raw = spark.read.text(*files)
-                df = self.source_adapter(raw)
-            else:
-                df = self.source_adapter(spark.read.parquet(*files))
-            if "epoch" not in df.columns:
-                df = df.withColumn("epoch", F.lit(epoch).cast("long"))
-        else:
-            reader = spark.read.schema(self._epoch_schema(spark, files))
-            if files[0].endswith(".jsonl"):
-                df = reader.json(*files)
-            else:
-                df = reader.parquet(*files)
+            dlq_rows = write_epoch_parquet(
+                dead.withColumn("epoch", F.lit(epoch).cast("long")),
+                self.dlq_dir, epoch)
+        if "epoch" not in df.columns:
+            # adapter sources (Debezium lines) carry no epoch column; the
+            # resolvers tie-break on (op_seq, epoch), so stamp the batch's
+            # epoch — constant within a batch, monotone across
+            df = df.withColumn("epoch", F.lit(epoch).cast("long"))
         integrity: dict | None = None
         if self.integrity_audit:
-            # pre-alignment: the audit sees the epoch AS DELIVERED (held
+            # pre-alignment: the audit sees the batch AS DELIVERED (held
             # transaction fragments included) — the delivery-quality view
             from cdcrypt.operators.audit import audit_changes
 
@@ -424,25 +462,19 @@ class IngestPipeline:
                        anomalies.groupBy("kind").count().collect()}
             integrity = {"anomalies": sum(by_kind.values()), **by_kind}
             if self.integrity_audit_dir is not None:
-                # before the table commit, like the DLQ: a crash between
-                # them replays the epoch and overwrites idempotently
-                self._write_epoch_parquet(
-                    anomalies, self.integrity_audit_dir, epoch)
+                write_epoch_parquet(anomalies, self.integrity_audit_dir,
+                                    epoch)
             anomalies.unpersist(blocking=False)
         if self.aligner is not None:
             df = self.aligner.align(spark, df, epoch)
-        if self.cluster_strategy == "fused":
-            resolved = self._resolve(
-                repartition_by_bucket(df, self.bucket_count, self._bucket_by))
-        else:
-            resolved = repartition_by_bucket(
-                self._resolve(df), self.bucket_count, self._bucket_by)
+        resolved = self._resolve(
+            repartition_by_bucket(df, self.bucket_count, self._bucket_by))
         encryptor = self._encryptor()
-        encrypted = encryptor.apply(resolved)
         lineage = merge_upsert(
-            spark, table, encrypted, epoch, broadcast=self.broadcast_merge,
-            mode=self.table_mode, compact_threshold=self.compact_threshold,
-            assume_bucketed=True, stage_only=self.audit is not None,
+            spark, table, encryptor.apply(resolved), epoch,
+            broadcast=self.broadcast_merge, mode=self.table_mode,
+            compact_threshold=self.compact_threshold, assume_bucketed=True,
+            stage_only=self.audit is not None,
         )
         if raw_cached is not None:
             raw_cached.unpersist(blocking=False)
@@ -464,10 +496,6 @@ class IngestPipeline:
                              "batch_rows": lineage.get("batch_rows", 0),
                              "rows_written": 0})
                 lineage["audit"] = "skipped"
-        lineage.update({
-            "files": [os.path.basename(f) for f in files],
-            "wall_sec": round(time.monotonic() - t0, 3),
-        })
         if self.dlq_adapter is not None:
             lineage["dlq_rows"] = dlq_rows
         if integrity is not None:
@@ -482,47 +510,48 @@ class IngestPipeline:
                 _b64.b64encode(w).decode("ascii")
                 for w in encryptor.last_wrapped_deks
             ]
-        self._write_checkpoint(epoch, lineage)
         return lineage
 
-    def _write_dlq(self, dead: DataFrame, epoch: int) -> int:
-        """Per-epoch dead-letter append: parquet under
-        ``dlq_dir/epoch=NNNNNN``, stamped with the epoch, written to a
-        hidden temp dir and atomically renamed — an epoch replay (crash
-        anywhere before the table commit) overwrites it idempotently, so
-        poison records are recorded exactly once per committed epoch. Row
-        count comes from the written footers (driver-side metadata) — no
-        second job."""
-        return self._write_epoch_parquet(
-            dead.withColumn("epoch", F.lit(epoch).cast("long")),
-            self.dlq_dir, epoch)
+    # ---------- one epoch ----------
+    def process_epoch(self, spark: SparkSession, table: LakeTable,
+                      epoch: int, files: list[str]) -> dict:
+        """One source epoch (or a coalesced group of them) through
+        :meth:`ingest_batch`, then its checkpoint JSON."""
+        t0 = time.monotonic()
+        if self.crypto_backend == "jvm":
+            self._check_iv_budget(files)
+        jsonl = files[0].endswith(".jsonl")
+        if self.source_adapter is None and self.dlq_adapter is None:
+            reader = spark.read.schema(self._epoch_schema(spark, files))
+            df = reader.json(*files) if jsonl else reader.parquet(*files)
+        else:
+            # adapter sources: raw lines (.jsonl) or rows (parquet), parsed
+            # here by source_adapter or split by dlq_adapter in ingest_batch
+            df = (spark.read.text(*files) if jsonl
+                  else spark.read.parquet(*files))
+            if self.source_adapter is not None:
+                df = self.source_adapter(df)
+        lineage = self.ingest_batch(spark, table, df, epoch)
+        lineage.update({
+            "files": [os.path.basename(f) for f in files],
+            "wall_sec": round(time.monotonic() - t0, 3),
+        })
+        write_checkpoint(self.checkpoint_dir, epoch, lineage)
+        return lineage
 
-    @staticmethod
-    def _write_epoch_parquet(df: DataFrame, out_dir: str,
-                             epoch: int) -> int:
-        """Idempotent per-epoch parquet sink: hidden tmp + atomic rename
-        into ``out_dir/epoch=NNNNNN``; an epoch replay overwrites its own
-        output. Shared by the DLQ and integrity-audit sinks. Returns the
-        row count from the written footers (no second job)."""
-        import shutil
-
-        import pyarrow.parquet as pq
-
-        os.makedirs(out_dir, exist_ok=True)
-        tmp = os.path.join(out_dir, f".epoch_{epoch:06d}.tmp")
-        final = os.path.join(out_dir, f"epoch={epoch:06d}")
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        df.write.mode("overwrite").parquet(tmp)
-        rows = 0
-        for name in os.listdir(tmp):
-            if name.endswith(".parquet"):
-                rows += pq.ParquetFile(
-                    os.path.join(tmp, name)).metadata.num_rows
-        if os.path.exists(final):
-            shutil.rmtree(final)          # replayed epoch: overwrite
-        os.replace(tmp, final)
-        return rows
+    def _process_retrying(self, spark: SparkSession, table: LakeTable,
+                          epoch: int, files: list[str]) -> dict:
+        """:meth:`process_epoch`, replayed up to ``max_retries`` times on a
+        transient (retriable) failure — the sink is idempotent; any other
+        error aborts."""
+        attempt = 0
+        while True:
+            try:
+                return self.process_epoch(spark, table, epoch, files)
+            except Exception as exc:  # noqa: BLE001 - classified below
+                if not _is_retriable(exc) or attempt >= self.max_retries:
+                    raise
+                attempt += 1  # replay the epoch (idempotent sink)
 
     def requeue_dlq(self, epoch: int | None = None) -> dict:
         """DLQ replay, the Connect recovery pattern: after deploying a fix
@@ -570,49 +599,18 @@ class IngestPipeline:
             shutil.rmtree(d)
         return {"requeued": len(lines), "epoch": epoch}
 
-    def _write_checkpoint(self, epoch: int, lineage: dict) -> None:
-        os.makedirs(self.checkpoint_dir, exist_ok=True)
-        tmp = os.path.join(self.checkpoint_dir, f".epoch_{epoch:06d}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(lineage, f, indent=1)
-        os.replace(tmp, os.path.join(self.checkpoint_dir, f"epoch_{epoch:06d}.json"))
-
     # ---------- replay loop ----------
     def run(self, spark: SparkSession, max_epochs: int | None = None) -> list[dict]:
-        """Process all pending epochs (resume = committed_epoch + 1).
-
-        AQE is suspended for the duration: every exchange in the ingest plan
-        is explicitly sized (repartition to the table's bucket count), so
-        adaptive execution has nothing to improve, while its per-stage query
-        materialization added 2-6x wall latency per micro-batch (measured:
-        AQE-on epochs 5-22s erratic vs AQE-off 3.4-4.8s uniform at the same
-        input). Analytics reads keep AQE (skew joins, coalescing)."""
+        """Process all pending epochs (resume = committed_epoch + 1), with
+        AQE suspended (:func:`aqe_disabled`)."""
         table = self.table()
         epochs = list_epochs(self.source_dir)
         pending = sorted(e for e in epochs if e > table.committed_epoch)
         if max_epochs is not None:
             pending = pending[:max_epochs]
-        results = []
-        aqe_key = "spark.sql.adaptive.enabled"
-        prev_aqe = spark.conf.get(aqe_key, "true")
-        spark.conf.set(aqe_key, "false")
-        try:
-            for e in pending:
-                attempt = 0
-                while True:
-                    try:
-                        results.append(
-                            self.process_epoch(spark, table, e, epochs[e]))
-                        break
-                    except Exception as exc:  # noqa: BLE001 - classified below
-                        if _is_retriable(exc) and attempt < self.max_retries:
-                            attempt += 1
-                            continue  # replay the epoch (idempotent sink)
-                        raise
-        finally:
-            spark.conf.set(aqe_key, prev_aqe)
-        return results
-
+        with aqe_disabled(spark):
+            return [self._process_retrying(spark, table, e, epochs[e])
+                    for e in pending]
     def run_adaptive(
         self,
         spark: SparkSession,
@@ -666,10 +664,7 @@ class IngestPipeline:
         ctl.load(self.checkpoint_dir)
         era = {e: self._epoch_era(epochs[e]) for e in pending}
         results: list[dict] = []
-        aqe_key = "spark.sql.adaptive.enabled"
-        prev_aqe = spark.conf.get(aqe_key, "true")
-        spark.conf.set(aqe_key, "false")
-        try:
+        with aqe_disabled(spark):
             i, batches = 0, 0
             while i < len(pending) and (
                     max_batches is None or batches < max_batches):
@@ -679,17 +674,7 @@ class IngestPipeline:
                 group = group[:cut]
                 files = [f for e in group for f in epochs[e]]
                 label = group[-1]
-                attempt = 0
-                while True:
-                    try:
-                        lineage = self.process_epoch(
-                            spark, table, label, files)
-                        break
-                    except Exception as exc:  # noqa: BLE001 - classified
-                        if _is_retriable(exc) and attempt < self.max_retries:
-                            attempt += 1
-                            continue  # replay the group (idempotent sink)
-                        raise
+                lineage = self._process_retrying(spark, table, label, files)
                 if len(group) > 1:
                     # re-stamp the lineage with the group extent (the
                     # checkpoint writer is atomic and idempotent, so the
@@ -697,14 +682,12 @@ class IngestPipeline:
                     # controller grouped the source
                     lineage["epoch_range"] = [group[0], group[-1]]
                     lineage["batch_epochs"] = len(group)
-                    self._write_checkpoint(label, lineage)
+                    write_checkpoint(self.checkpoint_dir, label, lineage)
                 results.append(lineage)
                 ctl.observe(len(group), float(lineage.get("wall_sec", 0.0)))
                 ctl.save(self.checkpoint_dir)
                 i += len(group)
                 batches += 1
-        finally:
-            spark.conf.set(aqe_key, prev_aqe)
         return results
 
 
@@ -774,8 +757,6 @@ def _main() -> None:
                     choices=["agg", "salted", "window"])
     ap.add_argument("--table-mode", default="mor", choices=["mor", "cow"])
     ap.add_argument("--compact-threshold", type=int, default=8)
-    ap.add_argument("--cluster-strategy", default="fused",
-                    choices=["fused", "post"])
     ap.add_argument("--crypto-backend", default="udf", choices=["udf", "jvm"])
     ap.add_argument("--max-epochs", type=int, default=None)
     ap.add_argument("--master", default=None)
@@ -786,7 +767,6 @@ def _main() -> None:
         args.source, args.table, args.ckpt, key_id=args.key_id,
         bucket_count=args.buckets, resolver=args.resolver,
         table_mode=args.table_mode, compact_threshold=args.compact_threshold,
-        cluster_strategy=args.cluster_strategy,
         crypto_backend=args.crypto_backend,
     )
     results = pipe.run(spark, max_epochs=args.max_epochs)

@@ -3,9 +3,11 @@ streaming runtime (SURVEY.md P1/P3 expressed with readStream/foreachBatch).
 
 The manual epoch loop (pipeline.py) exists because epoch files stand in for
 Kafka offsets and give the bench deterministic batch boundaries. This module
-runs the IDENTICAL per-batch logic — bucket-cluster -> resolve (dedup+LWW)
--> encrypt -> MoR merge — as a `foreachBatch` sink of a file-source stream,
-so the engine also deploys as a plain Structured Streaming job:
+runs the SAME per-batch body (``IngestPipeline.ingest_batch``: DLQ split,
+integrity audit, txn alignment, bucket-cluster -> resolve (dedup+LWW) ->
+encrypt -> MoR merge, write-audit-publish) as a `foreachBatch` sink of a
+file-source stream, so the engine also deploys as a plain Structured
+Streaming job:
 
     readStream.schema(S).parquet(dir)          # binlog tail (file source)
       .writeStream.foreachBatch(apply_batch)   # resolve+encrypt+merge
@@ -34,13 +36,12 @@ from __future__ import annotations
 
 import glob
 import os
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from cdcrypt.operators.merge import merge_upsert
-from cdcrypt.streaming.pipeline import IngestPipeline
-from cdcrypt.table.lake import repartition_by_bucket
+from cdcrypt.streaming.pipeline import IngestPipeline, aqe_disabled
 
 
 def run_file_stream(
@@ -94,20 +95,10 @@ def run_file_stream(
         .outputMode("update")
     )
     if available_now:
-        if disable_aqe_when_available_now:
-            # same rationale as IngestPipeline.run: the fused plan is
-            # explicitly partitioned; AQE only adds per-batch re-planning
-            aqe_key = "spark.sql.adaptive.enabled"
-            prev = spark.conf.get(aqe_key, "true")
-            spark.conf.set(aqe_key, "false")
-            try:
-                q = writer.trigger(availableNow=True).start()
-                q.awaitTermination()
-            finally:
-                spark.conf.set(aqe_key, prev)
-            return q
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
+        with (aqe_disabled(spark) if disable_aqe_when_available_now
+              else nullcontext()):
+            q = writer.trigger(availableNow=True).start()
+            q.awaitTermination()
         return q
     if processing_time is not None:
         writer = writer.trigger(processingTime=processing_time)
@@ -131,68 +122,25 @@ def infer_stream_schema(source_dir: str) -> StructType:
 class StructuredIngest(IngestPipeline):
     """IngestPipeline variant driven by Structured Streaming.
 
-    Reuses every component (resolver, encryptor, MoR merge, lake commit);
-    only the driver loop differs. ``checkpoint_dir`` holds the SS offset
-    log instead of per-epoch JSON."""
+    Runs the pipeline's per-batch body unchanged; only the driver loop
+    differs. ``checkpoint_dir`` holds the SS offset log instead of
+    per-epoch JSON."""
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         table = self.table()
         if batch_id <= table.committed_epoch:
             return  # SS redelivery after restart -> idempotent skip
-        cached = None
-        if self.dlq_adapter is not None:
-            if self.dlq_dir is None:
-                raise ValueError("dlq_adapter requires dlq_dir")
-            # tolerant split INSIDE foreachBatch: both halves filter one
-            # cached micro-batch; dead letters land BEFORE the table
-            # commit so a crash between them is healed by SS redelivery
-            # (the epoch=batch_id dir is overwritten idempotently)
-            cached = batch_df.persist()
-            batch_df, dead = self.dlq_adapter(cached)
-            self._write_dlq(dead, batch_id)
-        if "epoch" not in batch_df.columns:
-            # adapter sources (Debezium lines) carry no epoch column; the
-            # resolvers tie-break on (op_seq, epoch), so stamp the SS
-            # batch id — constant within a micro-batch, monotone across
-            from pyspark.sql import functions as F
-            batch_df = batch_df.withColumn(
-                "epoch", F.lit(batch_id).cast("long"))
-        if self.integrity_audit:
+        if self.integrity_audit and self.integrity_audit_dir is None:
             # SS has no per-epoch lineage JSON to carry counts, so the
-            # audit tap REQUIRES the parquet sink here; the epoch=batch_id
-            # dir is overwritten idempotently under SS redelivery, same
-            # crash contract as the DLQ above
-            if self.integrity_audit_dir is None:
-                raise ValueError(
-                    "integrity_audit under Structured Streaming requires "
-                    "integrity_audit_dir (no lineage JSON to carry counts)")
-            from cdcrypt.operators.audit import audit_changes
-            self._write_epoch_parquet(
-                audit_changes(batch_df, list(self.key_cols),
-                              include_transitions=False),
-                self.integrity_audit_dir, batch_id)
-        if self.aligner is not None:
-            # txn hold-and-release under SS: batch ids are contiguous from
-            # the checkpointed offset log, so the aligner's epoch-chain
-            # contract (align(e) reads pending(e-1)) holds; its state
-            # writes precede the merge commit, and an SS redelivery either
-            # skips above (already committed) or re-aligns idempotently
-            batch_df = self.aligner.align(spark, batch_df, batch_id)
-        if self.cluster_strategy == "fused":
-            resolved = self._resolve(repartition_by_bucket(
-                batch_df, self.bucket_count, self._bucket_by))
-        else:
-            resolved = repartition_by_bucket(
-                self._resolve(batch_df), self.bucket_count, self._bucket_by)
-        encrypted = self._encryptor().apply(resolved)
-        merge_upsert(
-            spark, table, encrypted, epoch=batch_id,
-            broadcast=self.broadcast_merge, mode=self.table_mode,
-            compact_threshold=self.compact_threshold, assume_bucketed=True,
-        )
-        if cached is not None:
-            cached.unpersist(blocking=False)
+            # audit tap REQUIRES the parquet sink here
+            raise ValueError(
+                "integrity_audit under Structured Streaming requires "
+                "integrity_audit_dir (no lineage JSON to carry counts)")
+        # epoch = SS batch id: contiguous from the checkpointed offset
+        # log, so the aligner's epoch chain (align(e) reads pending(e-1))
+        # holds, and side outputs under epoch=batch_id are overwritten
+        # idempotently under SS redelivery
+        self.ingest_batch(batch_df.sparkSession, table, batch_df, batch_id)
 
     def run_stream(
         self,

@@ -321,20 +321,21 @@ def test_debezium_pipeline_dlq_end_to_end(spark, tmp_path):
     again = spark.read.parquet(
         os.path.join(dlq_dir, f"epoch={last:06d}")).collect()
     assert len(again) == 2
-    # config validation
-    with pytest.raises(Exception, match="mutually exclusive"):
-        IngestPipeline(
-            dbz_dir, str(tmp_path / "t_x"), str(tmp_path / "c_x"),
-            key_id=key, dlq_dir=dlq_dir,
-            dlq_adapter=lambda r: parse_debezium_dlq(r, "value", row_schema),
-            source_adapter=lambda r: r,
-        ).run(spark)
-    with pytest.raises(Exception, match="requires dlq_dir"):
-        IngestPipeline(
-            dbz_dir, str(tmp_path / "t_y"), str(tmp_path / "c_y"),
-            key_id=key,
-            dlq_adapter=lambda r: parse_debezium_dlq(r, "value", row_schema),
-        ).run(spark)
+    # config validation: at construction, the same for both drivers
+    from cdcrypt.streaming.structured import StructuredIngest
+
+    for cls in (IngestPipeline, StructuredIngest):
+        with pytest.raises(ValueError, match="mutually exclusive"):
+            cls(dbz_dir, str(tmp_path / "t_x"), str(tmp_path / "c_x"),
+                key_id=key, dlq_dir=dlq_dir,
+                dlq_adapter=lambda r: parse_debezium_dlq(
+                    r, "value", row_schema),
+                source_adapter=lambda r: r)
+        with pytest.raises(ValueError, match="requires dlq_dir"):
+            cls(dbz_dir, str(tmp_path / "t_y"), str(tmp_path / "c_y"),
+                key_id=key,
+                dlq_adapter=lambda r: parse_debezium_dlq(
+                    r, "value", row_schema))
 
 
 def test_debezium_structured_stream_dlq(spark, tmp_path):

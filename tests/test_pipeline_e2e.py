@@ -172,6 +172,27 @@ def test_full_replay_binary_encoding_matches_oracle(spark, stream_dir,
         stream_dir)
 
 
+def test_default_epoch_plan_has_one_exchange(spark, stream_dir, tmp_path,
+                                             monkeypatch):
+    """A default epoch shuffles once: the bucket clustering's Exchange
+    feeds resolve (subset satisfaction), encrypt and the per-bucket write
+    with no second exchange."""
+    import cdcrypt.streaming.pipeline as pipeline_mod
+
+    real_merge = pipeline_mod.merge_upsert
+    plans = []
+
+    def recording_merge(spark_, table, resolved, *a, **kw):
+        plans.append(resolved._jdf.queryExecution().executedPlan().toString())
+        return real_merge(spark_, table, resolved, *a, **kw)
+
+    monkeypatch.setattr(pipeline_mod, "merge_upsert", recording_merge)
+    IngestPipeline(stream_dir, str(tmp_path / "t"),
+                   str(tmp_path / "c")).run(spark, max_epochs=1)
+    assert len(plans) == 1
+    assert plans[0].count("Exchange") == 1, plans[0]
+
+
 def test_crash_resume(spark, stream_dir, tmp_path):
     troot, ckpt = str(tmp_path / "t2"), str(tmp_path / "c2")
     a = IngestPipeline(stream_dir, troot, ckpt, key_id=KEY, bucket_count=8)

@@ -4,7 +4,6 @@ Dimensions (one run each, local[16], sf0.1 stream, fresh table):
   resolver        agg | salted | window     (operators/dedup.py)
   crypto backend  udf | jvm                 (operators/transform.py)
   table mode      mor | cow                 (operators/merge.py)
-  cluster strat   fused | post              (streaming/pipeline.py)
 
 Writes BENCH/ab_grid.json. Run in a quiet window; single-shot numbers on
 this host carry ~2x noise (see BENCH/BASELINE.md), so the grid is read for
@@ -69,7 +68,6 @@ GRID = [
     {"label": "resolver=window", "cfg": {"resolver": "window"}},
     {"label": "backend=jvm", "cfg": {"crypto_backend": "jvm"}},
     {"label": "mode=cow", "cfg": {"table_mode": "cow"}},
-    {"label": "strategy=post", "cfg": {"cluster_strategy": "post"}},
     {"label": "jvm+mor best-combo", "cfg": {"crypto_backend": "jvm",
                                             "resolver": "agg"}},
 ]
