@@ -14,12 +14,17 @@ events to ONE final event per ``(conv_id, turn_idx)``:
 3. ``resolve_latest_salted`` — explicit two-phase salting: phase 1 aggregates
    per ``(key, salt)`` spreading a hot key over ``salt_buckets`` reducers,
    phase 2 aggregates the survivors per key. The north rule demands explicit
-   salting exist; bench.py A/Bs it against 1 and 2.
+   salting exist; ``IngestPipeline(resolver='salted')`` selects it.
 
 All three produce identical final state (asserted in tests and by the DuckDB
 oracle). Deterministic tie-break: among exact duplicate deliveries of one
 ``op_seq`` the payloads are identical by construction (exact redelivery), and
 resolution orders by ``(op_seq, epoch)`` so replayed epochs change nothing.
+
+This module is also the ONE place that maps a table's merge engine to its
+resolvers: :func:`resolve_batch` (apply side — what a micro-batch becomes
+before it is merged) and :func:`resolve_live` (read side — base + delta
+rows to live rows, used by ``LakeTable.read`` and MoR compaction alike).
 """
 
 from __future__ import annotations
@@ -306,16 +311,6 @@ def resolve_aggregate_update(df: DataFrame, agg_spec=None,
     return live.unionByName(dead)
 
 
-def resolver_for(merge_engine: str, agg_spec=None):
-    """READ/compaction-side resolver for a table's merge engine."""
-    if merge_engine == "partial":
-        return resolve_partial_agg
-    if merge_engine == "aggregate":
-        return lambda df, key_cols=None: resolve_aggregate(
-            df, agg_spec=agg_spec, key_cols=key_cols)
-    return resolve_latest_agg
-
-
 def resolve_partial_update(df: DataFrame, key_cols=None) -> DataFrame:
     """BATCH-side partial-update resolution for the MoR append path: the
     resolved live row per key PLUS the key's newest delete tombstone —
@@ -336,3 +331,40 @@ def resolve_partial_update(df: DataFrame, key_cols=None) -> DataFrame:
         F.col("_d.op_seq").alias("op_seq"),
         F.col("_d.epoch").alias("epoch"))
     return live.unionByName(dead)
+
+
+# lww batch strategies (``IngestPipeline.resolver``); all three give the
+# same rows, they differ only in plan shape
+STRATEGIES = ("agg", "window", "salted")
+
+
+def resolve_batch(df: DataFrame, merge_engine: str, agg_spec, key_cols,
+                  strategy: str = "agg", salt_buckets: int = 16) -> DataFrame:
+    """APPLY-side resolution of one micro-batch for a table's merge
+    engine: 'partial' and 'aggregate' keep the key's newest delete
+    tombstone next to its live row (the read side needs the cutoff);
+    'lww' reduces to one row per key with ``strategy``."""
+    if merge_engine == "partial":
+        return resolve_partial_update(df, key_cols=key_cols)
+    if merge_engine == "aggregate":
+        return resolve_aggregate_update(df, agg_spec, key_cols=key_cols)
+    if strategy == "salted":
+        return resolve_latest_salted(df, salt_buckets, key_cols=key_cols)
+    if strategy == "window":
+        return resolve_latest_window(df, key_cols=key_cols)
+    return resolve_latest_agg(df, key_cols=key_cols)
+
+
+def resolve_live(df: DataFrame, merge_engine: str, agg_spec,
+                 key_cols) -> DataFrame:
+    """READ-side resolution of base + delta change rows to the live rows
+    (``op`` and ``epoch`` still attached): the engine's read resolver,
+    then deletes dropped. A NULL ``op`` is a live row — change rows from
+    sources without an op column must not vanish."""
+    if merge_engine == "partial":
+        out = resolve_partial_agg(df, key_cols=key_cols)
+    elif merge_engine == "aggregate":
+        out = resolve_aggregate(df, agg_spec, key_cols=key_cols)
+    else:
+        out = resolve_latest_agg(df, key_cols=key_cols)
+    return out.where(F.coalesce(F.col("op") != "D", F.lit(True)))

@@ -33,9 +33,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdcrypt.operators.merge import (
-    LAKE_CODEC, _stats_cols, _write_bucketed,
-)
+from cdcrypt.operators.merge import _stats_cols, _write_bucketed
 from cdcrypt.table.lake import LakeTable, LakeTableError, repartition_by_bucket
 
 # dtypes a z-order dimension may have: anything with a meaningful linear
@@ -107,7 +105,6 @@ def rewrite_clustered(
     *,
     max_records_per_file: int | None = None,
     stage_only: bool = False,
-    codec: str = LAKE_CODEC,
     bloom_cols: tuple[str, ...] | None = None,
     layout: str = "linear",
     zorder_bits: int | None = None,
@@ -193,7 +190,7 @@ def rewrite_clustered(
     timings: dict = {}
     new_files, rows = _write_bucketed(
         clustered, staging, table.root, table.bucket_count, "base",
-        assume_bucketed=True, codec=codec, timings=timings,
+        assume_bucketed=True, timings=timings,
         bucket_by=table.bucket_by, stats_cols=stats,
         max_records_per_file=max_records_per_file,
         bloom_cols=(tuple(table.bloom_cols) if bloom_cols is None

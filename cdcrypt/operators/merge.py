@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from cdcrypt.operators.dedup import resolve_live
 from cdcrypt.table.lake import (
     LakeTable, LakeTableError, bucket_col, repartition_by_bucket,
 )
@@ -137,14 +138,11 @@ def _write_bucketed(
     bucket_count: int,
     kind: str,
     assume_bucketed: bool = False,
-    codec: str = LAKE_CODEC,
     timings: dict | None = None,
-    no_dict_cols: tuple[str, ...] = NO_DICT_COLS,
     bucket_by: str = "conv_id",
     stats_cols: tuple[str, ...] = (),
     max_records_per_file: int | None = None,
     bloom_cols: tuple[str, ...] = (),
-    bloom_bits_per_key: int = 10,
 ) -> tuple[list[dict], int]:
     """Write ``df`` as one plain parquet file per bucket; return manifest
     entries. partition_id == bucket (see table/lake.py bucket_col), so the
@@ -156,10 +154,10 @@ def _write_bucketed(
     t0 = time.monotonic()
     out = df if assume_bucketed else repartition_by_bucket(
         df, bucket_count, bucket_by)
-    w = out.write.mode("overwrite").option("compression", codec)
+    w = out.write.mode("overwrite").option("compression", LAKE_CODEC)
     if max_records_per_file:
         w = w.option("maxRecordsPerFile", str(int(max_records_per_file)))
-    for c in no_dict_cols:
+    for c in NO_DICT_COLS:
         if c in df.columns:
             w = w.option(f"parquet.enable.dictionary#{c}", "false")
     w.parquet(staging)
@@ -189,8 +187,7 @@ def _write_bucketed(
             cols = pf.read(columns=list(want_bloom))
             blooms = {}
             for c in want_bloom:
-                bl = build_bloom(cols.column(c).to_pylist(),
-                                 bits_per_key=bloom_bits_per_key)
+                bl = build_bloom(cols.column(c).to_pylist())
                 if bl is not None:
                     blooms[c] = bl
             if blooms:
@@ -454,40 +451,21 @@ def _merge_mor(
     if compact:
         in_compact = table._file_bucket_filter(table.snapshot, compact)
         in_scope = [f for f in keep + new_delta if in_compact(f)]
-        base_fs = [f for f in in_scope if f.get("kind", "base") == "base"]
-        delta_fs = [f for f in in_scope
-                    if f.get("kind") == "delta" and not f.get("compacted")]
         # id-projected scans: files written under since-renamed/widened
-        # schemas surface under the CURRENT (+batch extras) names/types
-        parts = []
-        if base_fs:
-            parts.append(
-                table.scan_projected(spark, base_fs, target_schema=target)
-                .withColumn("op", F.lit("I"))
-                .withColumn("epoch", F.lit(-1).cast("long"))
-            )
-        if delta_fs:
-            parts.append(table.scan_projected(
-                spark, delta_fs, target_schema=target, changelog=True))
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        from cdcrypt.operators.dedup import resolver_for
-        # repartition first: the resolve groupBy reuses the bucket clustering
-        # (one exchange) and the write needs none. Partial-update/aggregate
-        # tables compact with their per-column resolver; folding coarsens
-        # per-column recency to the row sequence and drops delete cutoffs
-        # (the standard log-structured partial-update contract — see
-        # resolve_partial_agg's docstring; sum/max/min folds are exact
-        # under any batching).
-        resolver = resolver_for(table.merge_engine, table.agg_spec)
-        live = (
-            resolver(
-                repartition_by_bucket(u, table.bucket_count, table.bucket_by),
-                key_cols=table.key_cols)
-            .where(F.col("op") != "D")
-            .select(*tcols)
-        )
+        # schemas surface under the CURRENT (+batch extras) names/types.
+        # Repartition first: the resolve groupBy reuses the bucket
+        # clustering (one exchange) and the write needs none. Partial-
+        # update/aggregate tables compact with their per-column resolver;
+        # folding coarsens per-column recency to the row sequence and
+        # drops delete cutoffs (the standard log-structured partial-update
+        # contract — see resolve_partial_agg's docstring; sum/max/min
+        # folds are exact under any batching).
+        live = resolve_live(
+            repartition_by_bucket(
+                table.change_rows(spark, in_scope, target_schema=target),
+                table.bucket_count, table.bucket_by),
+            table.merge_engine, table.agg_spec, table.key_cols,
+        ).select(*tcols)
         staging_compact = os.path.join(staging_root, "compact")
         compact_files, compacted_rows = _write_bucketed(
             live, staging_compact, table.root, table.bucket_count, "base",

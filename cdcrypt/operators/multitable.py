@@ -35,11 +35,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdcrypt.operators.dedup import (
-    resolve_aggregate_update,
-    resolve_latest_agg,
-    resolve_partial_update,
-)
+from cdcrypt.operators.dedup import resolve_batch
 from cdcrypt.operators.merge import merge_upsert
 from cdcrypt.table.lake import LakeTable
 
@@ -51,8 +47,9 @@ class TableRoute:
     ``transform``: optional per-table record rewrite applied BEFORE
     resolution (e.g. a FieldTransform encrypting that table's sensitive
     columns — per-table crypto configs, the multi-connector reference
-    deployment). ``resolver``: events -> one row per key; defaults to the
-    table's merge-engine apply-side resolver. ``mode``: merge mode per
+    deployment). ``resolver``: events -> one row per key, called with
+    ``key_cols=``; defaults to the table's merge-engine apply-side
+    resolver (dedup.resolve_batch). ``mode``: merge mode per
     table (default: 'cow' for lww tables, 'mor' for partial/aggregate
     engines, whose state lives in the delta log). ``apply``: 'merge'
     (latest-state upsert) or 'scd2' (type-2 history — the table must be
@@ -89,23 +86,6 @@ def _slice_for(batch: DataFrame, route: TableRoute) -> DataFrame:
     keep = [c for c in batch.columns
             if c in want or c in ("op", "op_seq", "epoch")]
     return batch.select(*keep)
-
-
-def _resolve(route: TableRoute, sub: DataFrame) -> DataFrame:
-    """Apply-side (batch) resolution, same selection the single-table
-    pipeline makes (streaming/pipeline.py:_resolve): lww -> map-side
-    max_by, partial/aggregate -> their tombstone-preserving batch forms.
-    A custom ``route.resolver`` must accept ``key_cols=``."""
-    kc = list(route.table.key_cols)
-    if route.resolver is not None:
-        return route.resolver(sub, key_cols=kc)
-    engine = route.table.merge_engine
-    if engine == "partial":
-        return resolve_partial_update(sub, key_cols=kc)
-    if engine == "aggregate":
-        return resolve_aggregate_update(sub, route.table.agg_spec,
-                                        key_cols=kc)
-    return resolve_latest_agg(sub, key_cols=kc)
 
 
 def apply_multi(
@@ -149,7 +129,12 @@ def apply_multi(
                 lineages[name] = scd2_apply(
                     spark, route.table, sub, epoch, **merge_kw)
             else:
-                resolved = _resolve(route, sub)
+                kc = list(route.table.key_cols)
+                if route.resolver is not None:
+                    resolved = route.resolver(sub, key_cols=kc)
+                else:
+                    resolved = resolve_batch(sub, route.table.merge_engine,
+                                             route.table.agg_spec, kc)
                 lineages[name] = merge_upsert(
                     spark, route.table, resolved, epoch,
                     mode=route.merge_mode, **merge_kw)

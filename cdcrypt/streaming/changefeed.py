@@ -60,17 +60,19 @@ def lake_merge_sink(target: LakeTable, *, mode: str = "mor",
 
     The window's change rows may hold several versions of one key (the
     window spans commits), so they are resolved first; the default
-    resolver is the map-side-combining ``resolve_latest_agg`` over the
-    target's key columns, which needs ``op_seq``/``epoch`` columns — the
-    engine's standard change-row shape (``read_incremental`` serves
-    (payload..., op, epoch) and the transcript schema carries op_seq).
-    Deletes (op='D') flow through merge's normal delete path.
+    resolver is the target's merge-engine batch resolver
+    (``resolve_batch`` — a partial/aggregate target keeps each key's
+    newest delete next to its live row), which needs ``op_seq``/``epoch``
+    columns — the engine's standard change-row shape
+    (``read_incremental`` serves (payload..., op, epoch) and the
+    transcript schema carries op_seq). Deletes (op='D') flow through
+    merge's normal delete path.
     """
-    from cdcrypt.operators.dedup import resolve_latest_agg
+    from cdcrypt.operators.dedup import resolve_batch
     from cdcrypt.operators.merge import merge_upsert
 
-    resolver = resolver or (
-        lambda df: resolve_latest_agg(df, key_cols=target.key_cols))
+    resolver = resolver or (lambda df: resolve_batch(
+        df, target.merge_engine, target.agg_spec, target.key_cols))
 
     def sink(spark: SparkSession, changes: DataFrame,
              from_version: int, to_version: int) -> dict:

@@ -46,12 +46,7 @@ from pyspark.sql.types import (
 )
 
 from cdcrypt.kms import MockKMS
-from cdcrypt.operators.dedup import (
-    resolve_latest_agg,
-    resolve_latest_salted,
-    resolve_latest_window,
-    resolve_partial_update,
-)
+from cdcrypt.operators.dedup import STRATEGIES, resolve_batch
 from cdcrypt.operators.merge import merge_upsert
 from cdcrypt.operators.transform import FieldTransform, TransformConfig
 from cdcrypt.table.lake import (
@@ -72,15 +67,6 @@ BASE_TABLE_SCHEMA = StructType([
     StructField("ts", TimestampType(), True),
     StructField("op_seq", LongType(), True),
 ])
-
-_RESOLVERS = {
-    "salted": resolve_latest_salted,
-    "agg": resolve_latest_agg,
-    "window": resolve_latest_window,
-    # per-column LWW for merge_engine='partial' tables: keeps the live row
-    # AND the key's newest delete tombstone in the delta (dedup.py)
-    "partial": resolve_partial_update,
-}
 
 
 def list_epochs(source_dir: str) -> dict[int, list[str]]:
@@ -240,6 +226,11 @@ class IngestPipeline:
     aligner: object | None = None
 
     def __post_init__(self) -> None:
+        if self.resolver not in STRATEGIES:
+            raise ValueError(
+                f"resolver must be one of {STRATEGIES}, got "
+                f"{self.resolver!r} (merge_engine picks the resolver of "
+                "partial/aggregate tables)")
         if self.dlq_adapter is not None and self.source_adapter is not None:
             raise ValueError(
                 "source_adapter and dlq_adapter are mutually exclusive "
@@ -331,17 +322,6 @@ class IngestPipeline:
             backend=self.crypto_backend,
             encoding=self.encrypt_encoding,
         ))
-
-    def _resolve(self, df: DataFrame) -> DataFrame:
-        kc = list(self.key_cols)
-        if self.merge_engine == "partial":
-            return resolve_partial_update(df, key_cols=kc)
-        if self.merge_engine == "aggregate":
-            from cdcrypt.operators.dedup import resolve_aggregate_update
-            return resolve_aggregate_update(df, self.agg_spec, key_cols=kc)
-        if self.resolver == "salted":
-            return resolve_latest_salted(df, self.salt_buckets, key_cols=kc)
-        return _RESOLVERS[self.resolver](df, key_cols=kc)
 
     def _epoch_schema(self, spark: SparkSession,
                       files: list[str]) -> StructType:
@@ -467,8 +447,10 @@ class IngestPipeline:
             anomalies.unpersist(blocking=False)
         if self.aligner is not None:
             df = self.aligner.align(spark, df, epoch)
-        resolved = self._resolve(
-            repartition_by_bucket(df, self.bucket_count, self._bucket_by))
+        resolved = resolve_batch(
+            repartition_by_bucket(df, self.bucket_count, self._bucket_by),
+            self.merge_engine, self.agg_spec, list(self.key_cols),
+            self.resolver, self.salt_buckets)
         encryptor = self._encryptor()
         lineage = merge_upsert(
             spark, table, encryptor.apply(resolved), epoch,
@@ -616,7 +598,6 @@ class IngestPipeline:
         spark: SparkSession,
         target_batch_sec: float = 8.0,
         max_epochs_per_batch: int = 64,
-        controller=None,
         max_batches: int | None = None,
     ) -> list[dict]:
         """:meth:`run` with adaptive micro-batch sizing (backpressure):
@@ -659,7 +640,7 @@ class IngestPipeline:
         table = self.table()
         epochs = list_epochs(self.source_dir)
         pending = sorted(e for e in epochs if e > table.committed_epoch)
-        ctl = controller or BatchSizeController(
+        ctl = BatchSizeController(
             target_sec=target_batch_sec, max_size=max_epochs_per_batch)
         ctl.load(self.checkpoint_dir)
         era = {e: self._epoch_era(epochs[e]) for e in pending}
@@ -754,7 +735,7 @@ def _main() -> None:
     ap.add_argument("--key-id", default="cdcrypt/transcripts")
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--resolver", default="agg",
-                    choices=["agg", "salted", "window"])
+                    choices=list(STRATEGIES))
     ap.add_argument("--table-mode", default="mor", choices=["mor", "cow"])
     ap.add_argument("--compact-threshold", type=int, default=8)
     ap.add_argument("--crypto-backend", default="udf", choices=["udf", "jvm"])

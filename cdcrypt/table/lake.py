@@ -870,6 +870,37 @@ class LakeTable:
             df = df.unionByName(p)
         return df
 
+    def change_rows(
+        self,
+        spark: SparkSession,
+        files: list[dict],
+        snap: dict | None = None,
+        target_schema: StructType | None = None,
+    ) -> DataFrame:
+        """The merge-on-read input over ``files``: base rows as change rows
+        (op='I', epoch=-1, so any delta version outranks them) unioned with
+        the rows of the un-compacted delta files, (op, epoch) attached.
+        Log-only deltas (``compacted=True``) are skipped — a base file
+        already holds their rows. ``read`` and MoR compaction resolve
+        exactly this frame (operators/dedup.resolve_live).
+
+        No base files, no base branch: an empty ``createDataFrame`` is an
+        RDD scan Catalyst cannot prune, which would add empty tasks to
+        every read of a table that has never compacted."""
+        base_fs = [f for f in files if f.get("kind", "base") == "base"]
+        delta_fs = [f for f in files if f.get("kind", "base") == "delta"
+                    and not f.get("compacted")]
+        delta = self.scan_projected(spark, delta_fs, snap, target_schema,
+                                    changelog=True)
+        if not base_fs:
+            return delta
+        base = (
+            self.scan_projected(spark, base_fs, snap, target_schema)
+            .withColumn("op", F.lit("I"))
+            .withColumn("epoch", F.lit(-1).cast("long"))
+        )
+        return base.unionByName(delta)
+
     def read(
         self,
         spark: SparkSession,
@@ -950,23 +981,13 @@ class LakeTable:
         if not delta_fs:
             df = self.scan_projected(spark, base_fs, snap)
         else:
-            from cdcrypt.operators.dedup import resolver_for
+            from cdcrypt.operators.dedup import resolve_live
 
-            base = (
-                self.scan_projected(spark, base_fs, snap)
-                .withColumn("op", F.lit("I"))
-                .withColumn("epoch", F.lit(-1).cast("long"))
-            )
-            delta = self.scan_projected(spark, delta_fs, snap,
-                                        changelog=True)
-            resolver = resolver_for(snap.get("merge_engine", "lww"),
-                                    snap.get("agg_spec"))
-            resolved = resolver(base.unionByName(delta),
-                                key_cols=snap.get("key_cols",
-                                                  list(DEFAULT_KEY_COLS)))
-            df = resolved.where(
-                F.coalesce(F.col("op") != "D", F.lit(True))
-            ).drop("op", "epoch").select(*[f.name for f in snap_schema.fields])
+            df = resolve_live(
+                self.change_rows(spark, fs, snap),
+                snap.get("merge_engine", "lww"), snap.get("agg_spec"),
+                snap.get("key_cols", list(DEFAULT_KEY_COLS)),
+            ).select(*[f.name for f in snap_schema.fields])
         if buckets is not None and not prune_only:
             _, default_spec = self._partition_specs(snap)
             if any(f.get("spec_id", default_spec) != default_spec

@@ -313,3 +313,41 @@ def test_consumer_floor_min_monotone_remove(spark, tmp_path):
     assert a.expire_snapshots(keep_last=1)["kept_versions"] == [3]
     with pytest.raises(LakeTableError, match="consumer_id"):
         a.register_consumer("../evil", 1)
+
+
+def test_sink_into_partial_table_keeps_delete_cutoff(spark, tmp_path):
+    """A window holding a delete and a later one-column update, merged
+    into a partial-engine table: the delete must null the columns set
+    before it, exactly as resolving the window with the engine's own
+    batch resolver does."""
+    from cdcrypt.operators.dedup import resolve_partial_update
+
+    schema = StructType([StructField("k", StringType(), False),
+                         StructField("a", StringType(), True),
+                         StructField("b", StringType(), True),
+                         StructField("op_seq", LongType(), True)])
+
+    def events(rows, epoch):
+        return spark.createDataFrame(
+            [(*r, epoch) for r in rows],
+            "op string, k string, a string, b string, op_seq long, "
+            "epoch long")
+
+    window = [("D", "k1", None, None, 2), ("U", "k1", "a2", None, 3)]
+    got = {}
+    for name in ("sink", "direct"):
+        t = LakeTable.create(str(tmp_path / name), schema, bucket_count=2,
+                             key_cols=["k"], bucket_by="k",
+                             merge_engine="partial")
+        merge_upsert(spark, t, resolve_partial_update(
+            events([("I", "k1", "a1", "b1", 1)], 0), key_cols=["k"]),
+            epoch=0, mode="mor")
+        if name == "sink":
+            lake_merge_sink(t)(spark, events(window, 1), 1, 2)
+        else:
+            merge_upsert(spark, t.refresh(), resolve_partial_update(
+                events(window, 1), key_cols=["k"]), epoch=2, mode="mor")
+        got[name] = sorted(tuple(r) for r in t.refresh().read(spark)
+                           .select("k", "a", "b", "op_seq").collect())
+    assert got["direct"] == [("k1", "a2", None, 3)]
+    assert got["sink"] == got["direct"]

@@ -336,6 +336,12 @@ def test_debezium_pipeline_dlq_end_to_end(spark, tmp_path):
                 key_id=key,
                 dlq_adapter=lambda r: parse_debezium_dlq(
                     r, "value", row_schema))
+        # resolver names an lww strategy; a merge engine ('partial') or
+        # a typo is refused before any epoch runs
+        for bad in ("partial", "nope"):
+            with pytest.raises(ValueError, match="resolver must be one of"):
+                cls(dbz_dir, str(tmp_path / "t_z"), str(tmp_path / "c_z"),
+                    key_id=key, resolver=bad)
 
 
 def test_debezium_structured_stream_dlq(spark, tmp_path):

@@ -231,3 +231,33 @@ def test_merge_retrying_recovers_from_commit_race(spark, tmp_path):
     # same-epoch race resolves to the replay guard, not an error
     lin2 = merge_upsert_retrying(spark, LakeTable(root), b1, epoch=2)
     assert lin2["skipped"]
+
+
+def test_mor_compaction_keeps_what_read_returns(spark, tmp_path):
+    """A change row with a NULL ``op`` is live to ``read()``; folding its
+    bucket into a base file must keep it (compaction and read share one
+    delete rule)."""
+    t = LakeTable.create(
+        str(tmp_path / "t"),
+        StructType([StructField("k", StringType(), False),
+                     StructField("v", StringType(), True),
+                     StructField("op_seq", LongType(), True)]),
+        bucket_count=1, key_cols=["k"], bucket_by="k")
+
+    def batch(rows, epoch):
+        return resolve_latest_agg(spark.createDataFrame(
+            [(*r, epoch) for r in rows],
+            "op string, k string, v string, op_seq long, epoch long"),
+            key_cols=["k"])
+
+    def keys():
+        return sorted(r["k"] for r in t.read(spark).collect())
+
+    merge_upsert(spark, t, batch([("I", "k1", "a", 1), (None, "k2", "b", 2)],
+                                 0), epoch=0, mode="mor", compact_threshold=2)
+    before = keys()
+    lin = merge_upsert(spark, t.refresh(), batch([("U", "k1", "a2", 3)], 1),
+                       epoch=1, mode="mor", compact_threshold=2)
+    assert lin["buckets_compacted"] == [0]
+    assert before == ["k1", "k2"]
+    assert keys() == before

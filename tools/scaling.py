@@ -12,7 +12,7 @@ hypervisor, not the engine. 4 vs 16 keeps both sizes inside the deliverable
 envelope.
 
 Measurement protocol for a noisy shared host (supply swings ~4x on ~10s
-timescales, verified with tools/bucket_probe.py):
+timescales, measured with a per-second multi-process sha256 probe):
 - interleave sizes within each round, alternating order across rounds
   (A B / B A / ...), so drift trends cancel;
 - one UNTIMED warmup replay of epoch 0 per process before the timed run
