@@ -24,7 +24,8 @@ resolution orders by ``(op_seq, epoch)`` so replayed epochs change nothing.
 This module is also the ONE place that maps a table's merge engine to its
 resolvers: :func:`resolve_batch` (apply side — what a micro-batch becomes
 before it is merged) and :func:`resolve_live` (read side — base + delta
-rows to live rows, used by ``LakeTable.read`` and MoR compaction alike).
+rows to live rows, used by ``LakeTable.read`` and by every base-file
+rewrite: copy-on-write merges, MoR compaction and clustered rewrites).
 """
 
 from __future__ import annotations

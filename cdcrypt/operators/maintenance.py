@@ -19,8 +19,10 @@ table that ingests forever degrades without it:
   is one shuffle (bucket repartition) + a local sort per bucket, runs
   bucket-parallel, and never touches the driver with data.
 
-Scale contract: the rewrite reads the RESOLVED table once, shuffles once
-on the bucket column (the same exchange every merge pays), sorts within
+Scale contract: the rewrite goes through the same bucket-rewrite path as
+copy-on-write merges and MoR compaction (operators/merge.py
+``rewrite_buckets``): it reads the table's change rows once, shuffles once
+on the bucket column, resolves live rows on that exchange, sorts within
 partitions (spillable), and writes sequentially. Snapshot isolation makes
 it non-blocking for readers; `stage_only=True` makes it auditable
 (write-audit-publish) before the pointer swaps.
@@ -28,13 +30,11 @@ it non-blocking for readers; `stage_only=True` makes it auditable
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdcrypt.operators.merge import _stats_cols, _write_bucketed
-from cdcrypt.table.lake import LakeTable, LakeTableError, repartition_by_bucket
+from cdcrypt.operators.merge import _staging_dir, rewrite_buckets
+from cdcrypt.table.lake import LakeTable, LakeTableError
 
 # dtypes a z-order dimension may have: anything with a meaningful linear
 # order under cast-to-double. Strings/binary hash away their locality and
@@ -162,12 +162,12 @@ def rewrite_clustered(
             f"layout must be 'linear' or 'zorder', got {layout!r}")
     t0 = time.monotonic()
     snap = table.snapshot
-    live = table.read(spark).select(*tcols)
     if layout == "zorder":
         if len(sort_by) < 2:
             raise LakeTableError(
                 "zorder needs >= 2 sort_by columns (use linear for one)")
-        dtypes = dict(live.dtypes)
+        dtypes = {f.name: f.dataType.simpleString()
+                  for f in table.schema.fields}
         bad = [c for c in sort_by
                if not dtypes[c].startswith(_ZORDERABLE)]
         if bad:
@@ -176,25 +176,16 @@ def rewrite_clustered(
                 f"({[dtypes[c] for c in bad]}); cluster linearly or "
                 "z-order on numeric/date/timestamp dimensions")
         bits = zorder_bits or min(16, 63 // len(sort_by))
-        sort_key = [zorder_key(sort_by, _zorder_ranges(live, sort_by),
-                               bits)]
+        sort_key = [zorder_key(
+            sort_by, _zorder_ranges(table.read(spark), sort_by), bits)]
     else:
         sort_key = list(sort_by)
-    clustered = repartition_by_bucket(
-        live, table.bucket_count, table.bucket_by
-    ).sortWithinPartitions(*sort_key)
 
-    next_version = table.version + 1
-    staging = os.path.join(table.root, "data", f"v{next_version}", "rewrite")
-    stats = tuple(dict.fromkeys([*_stats_cols(table, live), *sort_by]))
     timings: dict = {}
-    new_files, rows = _write_bucketed(
-        clustered, staging, table.root, table.bucket_count, "base",
-        assume_bucketed=True, timings=timings,
-        bucket_by=table.bucket_by, stats_cols=stats,
-        max_records_per_file=max_records_per_file,
-        bloom_cols=(tuple(table.bloom_cols) if bloom_cols is None
-                    else tuple(bloom_cols)))
+    new_files, rows = rewrite_buckets(
+        spark, table, snap["files"], table.schema, _staging_dir(table),
+        sort_key=sort_key, stats_cols=tuple(sort_by), bloom_cols=bloom_cols,
+        max_records_per_file=max_records_per_file, timings=timings)
 
     # keep uncompacted deltas as log-only feed history; drop replaced bases
     keep = [dict(f, compacted=True)

@@ -3,17 +3,22 @@
 Two apply strategies over micro-batches already resolved to one final change
 per key (operators/dedup.py):
 
-``mode='mor'`` (default, the 10^10-event path): merge-on-read — append the
-resolved batch as per-bucket delta files (write cost O(batch)); reads resolve
-last-writer-wins over base+delta (table/lake.py); buckets whose delta depth
-reaches ``compact_threshold`` are compacted back to base inside the same
-commit. For ingest-heavy CDC, where every epoch dirties most buckets, MoR
-replaces the per-epoch full-table rewrite with an append + amortized
-compaction.
+``mode='mor'`` (the ingest pipeline's default, the 10^10-event path):
+merge-on-read — append the resolved batch as per-bucket delta files (write
+cost O(batch)); reads resolve last-writer-wins over base+delta
+(table/lake.py); buckets whose delta depth reaches ``compact_threshold`` are
+compacted back to base inside the same commit. For ingest-heavy CDC, where
+every epoch dirties most buckets, MoR replaces the per-epoch full-table
+rewrite with an append + amortized compaction.
 
-``mode='cow'``: copy-on-write — ``full_outer`` join current dirty-bucket rows
-vs the batch on ``(conv_id, turn_idx)`` with a per-row ``op_seq`` stale-guard,
-rewrite only dirty buckets. Reads stay plain scans.
+``mode='cow'``: copy-on-write — a compaction of the batch's dirty buckets
+with the batch as one more delta. Reads stay plain scans.
+
+Copy-on-write merges, MoR compaction and clustered rewrites
+(operators/maintenance.py) write base files through one helper,
+:func:`rewrite_buckets`: the scope's change rows (``LakeTable.change_rows``)
+plus any batch rows, one repartition by bucket, then
+``dedup.resolve_live`` — the survivor and delete rule ``read()`` applies.
 
 Physical-layout decisions (bench-driven, BENCH/BASELINE.md):
 - bucket(conv_id) == Spark HashPartitioning (table/lake.py bucket_col), so
@@ -211,74 +216,66 @@ def _stats_cols(table: LakeTable, df: DataFrame) -> tuple[str, ...]:
     return tuple(c for c in dict.fromkeys(want) if c in have)
 
 
-def _cow_merged(current: DataFrame, batch: DataFrame, key_cols: list[str],
-                tcols: list[str], use_broadcast: bool) -> DataFrame:
-    """The CoW MERGE dataflow: apply I/U/D from ``batch`` over ``current``
-    with the per-row ``op_seq`` stale-guard (a batch row at or below the
-    live row's op_seq is a late duplicate and is ignored).
-
-    ``use_broadcast=False``: one ``full_outer`` sort-merge join — both sides
-    shuffle+sort on the key. Correct at any batch size.
-
-    ``use_broadcast=True`` (small batch): Spark cannot broadcast a
-    ``full_outer`` join (the hint is silently ignored and falls back to
-    SMJ — verified on 4.1), so the same semantics are decomposed into
-    broadcast-able pieces, none of which shuffles ``current``:
-
-    - updates/deletes: ``current LEFT JOIN broadcast(batch)`` — one
-      BroadcastHashJoin pass over the full-width scan;
-    - inserts: batch keys that matched nothing. The matched-key set comes
-      from a key-column-only ``LEFT SEMI`` pass over ``current`` (column
-      pruning makes this scan a fraction of the data pass), output is at
-      most |batch| rows, and the final anti-join broadcasts it back
-      against the batch.
-
-    At 100 TB the SMJ form shuffles the dirty buckets TWICE (join hash +
-    write bucketing); the broadcast form shuffles only the merged output
-    for the bucketed write."""
-    data_cols = [c for c in tcols if c not in key_cols]
-    t_seq, b_seq = F.col("t.op_seq"), F.col("b.op_seq")
-    take_batch = F.col("b.op").isNotNull() & (t_seq.isNull() | (b_seq > t_seq))
-    is_delete = take_batch & (F.col("b.op") == "D")
-    merge_cols = [
-        F.when(take_batch, F.col(f"b.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-        for c in data_cols
-    ]
-    if not use_broadcast:
-        j = current.alias("t").join(batch.alias("b"), key_cols, "full_outer")
-        return j.where(~is_delete).select(*key_cols, *merge_cols)
-    upd = (
-        current.alias("t")
-        .join(F.broadcast(batch).alias("b"), key_cols, "left")
-        .where(~F.coalesce(is_delete, F.lit(False)))
-        .select(*key_cols, *merge_cols)
+def _change_frame(resolved: DataFrame, target: StructType,
+                  epoch: int) -> DataFrame:
+    """``resolved`` as change rows over ``target``: payload cast (or
+    null-filled) to the target schema, ``op`` as string, and ``epoch``
+    stamped with the commit epoch where the batch carries none."""
+    return resolved.select(
+        *_cast_to(resolved.columns, target),
+        F.col("op").cast("string").alias("op"),
+        (F.col("epoch").cast("long") if "epoch" in resolved.columns
+         else F.lit(epoch).cast("long")).alias("epoch"),
     )
-    matched = (current.select(*key_cols)
-               .join(F.broadcast(batch.select(*key_cols)), key_cols,
-                     "left_semi"))
-    ins = (
-        batch.alias("b")
-        .join(F.broadcast(matched), key_cols, "left_anti")
-        .where(F.col("b.op") != "D")
-        .select(*key_cols, *[F.col(f"b.{c}").alias(c) for c in data_cols])
-    )
-    return upd.unionByName(ins)
 
 
-def _cached_bytes(df: DataFrame) -> int | None:
-    """Size of an already-persisted-and-materialized DataFrame from the
-    cached relation's statistics (accurate, no extra job)."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 - stats are an optimization only
-        return None
+def rewrite_buckets(
+    spark: SparkSession,
+    table: LakeTable,
+    files: list[dict],
+    target: StructType,
+    staging: str,
+    *,
+    changes: DataFrame | None = None,
+    sort_key: list | tuple = (),
+    stats_cols: tuple[str, ...] = (),
+    bloom_cols: tuple[str, ...] | None = None,
+    max_records_per_file: int | None = None,
+    timings: dict | None = None,
+) -> tuple[list[dict], int]:
+    """Rewrite the live rows of ``files`` plus ``changes`` (change rows
+    from :func:`_change_frame`) as base files under ``staging``; return
+    the manifest entries and row count.
 
-
-# a resolved micro-batch under this many cached bytes joins via the
-# broadcast decomposition; above it, SMJ. Sized like a generous
-# autoBroadcastJoinThreshold: the batch ships once per executor.
-BROADCAST_BATCH_BYTES = 64 << 20
+    One repartition by bucket, then ``dedup.resolve_live`` — the merge
+    engine's read resolver and delete rule, exactly what ``read()``
+    applies — reusing that exchange, then an optional within-bucket
+    ``sort_key``. Stored rows enter at ``epoch=-1``
+    (``LakeTable.change_rows``), so a change row at an equal ``op_seq``
+    loses to the stored row. ``stats_cols`` extend the manifest bounds;
+    ``bloom_cols`` default to the table's."""
+    rows = changes
+    if files or changes is None:
+        stored = table.change_rows(spark, files, target_schema=target)
+        rows = stored if changes is None else stored.unionByName(changes)
+    live = resolve_live(
+        repartition_by_bucket(rows, table.bucket_count, table.bucket_by),
+        table.merge_engine, table.agg_spec, table.key_cols,
+    ).select(*[f.name for f in target.fields])
+    if table.bucket_by not in table.key_cols:
+        # the resolve re-shuffled by key; partition id must be the bucket
+        live = repartition_by_bucket(live, table.bucket_count,
+                                     table.bucket_by)
+    if sort_key:
+        live = live.sortWithinPartitions(*sort_key)
+    return _write_bucketed(
+        live, staging, table.root, table.bucket_count, "base",
+        assume_bucketed=True, timings=timings,
+        stats_cols=tuple(dict.fromkeys([*_stats_cols(table, live),
+                                        *stats_cols])),
+        max_records_per_file=max_records_per_file,
+        bloom_cols=tuple(table.bloom_cols if bloom_cols is None
+                         else bloom_cols))
 
 
 def merge_upsert(
@@ -286,11 +283,12 @@ def merge_upsert(
     table: LakeTable,
     resolved: DataFrame,
     epoch: int,
-    broadcast: bool | None = None,
+    # perfbench/phases.py still passes broadcast=pipe.broadcast_merge; the
+    # ROADMAP item-5 benchmark PR deletes this parameter
+    broadcast: None = None,
     mode: str = "cow",
     compact_threshold: int = 8,
     assume_bucketed: bool = False,
-    broadcast_threshold_bytes: int = BROADCAST_BATCH_BYTES,
     stage_only: bool = False,
 ) -> dict:
     """Apply one resolved micro-batch; returns lineage metrics.
@@ -306,13 +304,16 @@ def merge_upsert(
     ``assume_bucketed``: caller guarantees ``resolved`` is already
     repartition(B, conv_id)-clustered — the MoR delta write then adds no
     shuffle.
-    ``broadcast``: CoW join strategy — ``True`` forces the broadcast
-    decomposition, ``False`` forces the full_outer SMJ, ``None`` (default)
-    AUTO-selects by the persisted batch size vs
-    ``broadcast_threshold_bytes`` (the ingest path runs with AQE off, so
-    nothing else converts the join at runtime; VERDICT r3 item 7). The
-    chosen strategy is recorded in lineage ``join``.
+
+    ``mode='cow'`` rewrites the batch's dirty buckets through
+    :func:`rewrite_buckets` with the batch as one more delta: there is no
+    join strategy, and a CoW merge shuffles once. ``broadcast`` accepts
+    only None and raises ``ValueError`` otherwise.
     """
+    if broadcast is not None:
+        raise ValueError(
+            "merge_upsert(broadcast=) accepts only None: copy-on-write "
+            "rewrites dirty buckets through rewrite_buckets, with no join")
     if epoch <= table.committed_epoch:
         return {"epoch": epoch, "skipped": True,
                 "committed_epoch": table.committed_epoch}
@@ -327,40 +328,17 @@ def merge_upsert(
                           assume_bucketed, stage_only)
 
     target = _aligned_schema(table, resolved)
-    tcols = [f.name for f in target.fields]
-
-    key_cols = table.key_cols
-    batch = resolved.select(
-        *_cast_to(resolved.columns, target), "op",
-        bucket_col(table.bucket_count, table.bucket_by).alias("bucket"),
-    ).persist()
-    dirty = {r["bucket"] for r in batch.select("bucket").distinct().collect()}
-
-    # prune_only: old-partition-spec files in scope are rewritten WHOLE
-    # (their co-located rows of other current buckets move to the new
-    # layout with them), so no row-level bucket predicate here
-    current = table.read(spark, buckets=dirty, prune_only=True)
-    current = current.select(*_cast_to(current.columns, target))
-
-    if broadcast is None:
-        # the dirty-bucket collect above materialized the persisted batch,
-        # so cached stats are exact
-        sz = _cached_bytes(batch)
-        use_broadcast = sz is not None and sz <= broadcast_threshold_bytes
-    else:
-        use_broadcast = bool(broadcast)
-    merged = _cow_merged(current, batch, key_cols, tcols, use_broadcast)
-
-    staging = _staging_dir(table)
-    new_files, new_rows = _write_bucketed(
-        merged, staging, table.root, table.bucket_count, "base",
-        bucket_by=table.bucket_by, stats_cols=_stats_cols(table, merged),
-        bloom_cols=tuple(table.bloom_cols))
-    # keep = NOT the files read above — the same spec-aware selection, so
-    # an old-partition-spec file whose rows were just rewritten (its keys
-    # overlap the dirty buckets under the current spec) is dropped, never
-    # duplicated
-    rewritten = {f["path"] for f in table.files(buckets=dirty)}
+    batch = _change_frame(resolved, target, epoch).persist()
+    dirty = {r[0] for r in batch.select(
+        bucket_col(table.bucket_count, table.bucket_by)).distinct().collect()}
+    # spec-aware file selection: an old-partition-spec file whose keys
+    # overlap the dirty buckets is rewritten WHOLE (its co-located rows of
+    # other current buckets move to the current layout with it) and
+    # dropped from the snapshot, never duplicated
+    scope = table.files(buckets=dirty)
+    new_files, new_rows = rewrite_buckets(
+        spark, table, scope, target, _staging_dir(table), changes=batch)
+    rewritten = {f["path"] for f in scope}
     keep_files = [f for f in table.snapshot["files"]
                   if f["path"] not in rewritten]
 
@@ -369,7 +347,6 @@ def merge_upsert(
     lineage = {
         "epoch": epoch,
         "mode": "cow",
-        "join": "broadcast" if use_broadcast else "smj",
         "batch_rows": batch_rows,
         "dirty_buckets": sorted(int(x) for x in dirty),
         "rows_written": int(new_rows),
@@ -403,14 +380,7 @@ def _merge_mor(
     timings: dict = {}
     t_start = time.monotonic()
     target = _aligned_schema(table, resolved)
-    tcols = [f.name for f in target.fields]
-
-    delta_df = resolved.select(
-        *_cast_to(resolved.columns, target),
-        F.col("op").cast("string").alias("op"),
-        (F.col("epoch").cast("long") if "epoch" in resolved.columns
-         else F.lit(epoch).cast("long")).alias("epoch"),
-    )
+    delta_df = _change_frame(resolved, target, epoch)
 
     staging_root = _staging_dir(table)
     staging_delta = os.path.join(staging_root, "delta")
@@ -453,25 +423,14 @@ def _merge_mor(
         in_scope = [f for f in keep + new_delta if in_compact(f)]
         # id-projected scans: files written under since-renamed/widened
         # schemas surface under the CURRENT (+batch extras) names/types.
-        # Repartition first: the resolve groupBy reuses the bucket
-        # clustering (one exchange) and the write needs none. Partial-
-        # update/aggregate tables compact with their per-column resolver;
-        # folding coarsens per-column recency to the row sequence and
-        # drops delete cutoffs (the standard log-structured partial-update
-        # contract — see resolve_partial_agg's docstring; sum/max/min
-        # folds are exact under any batching).
-        live = resolve_live(
-            repartition_by_bucket(
-                table.change_rows(spark, in_scope, target_schema=target),
-                table.bucket_count, table.bucket_by),
-            table.merge_engine, table.agg_spec, table.key_cols,
-        ).select(*tcols)
-        staging_compact = os.path.join(staging_root, "compact")
-        compact_files, compacted_rows = _write_bucketed(
-            live, staging_compact, table.root, table.bucket_count, "base",
-            assume_bucketed=True, timings=timings,
-            stats_cols=_stats_cols(table, live),
-            bloom_cols=tuple(table.bloom_cols))
+        # Partial-update/aggregate tables compact with their per-column
+        # resolver; folding coarsens per-column recency to the row
+        # sequence and drops delete cutoffs (the standard log-structured
+        # partial-update contract — see resolve_partial_agg's docstring;
+        # sum/max/min folds are exact under any batching).
+        compact_files, compacted_rows = rewrite_buckets(
+            spark, table, in_scope, target,
+            os.path.join(staging_root, "compact"), timings=timings)
         compacted_away = {f["path"] for f in in_scope}
         keep = [f for f in keep if f["path"] not in compacted_away]
         # the epoch's own delta rows are folded into the compacted base,

@@ -1116,11 +1116,12 @@ def _append_emblsh(idx: EmbeddingLSHIndex, tagged: DataFrame,
     before writing — so replaying the batch lands it exactly once."""
     import os
     id_col = idx.meta["id_col"]
-    if "tagged_files" in idx.meta:  # pre-manifest indexes: no GC possible
-        _emblsh_gc_uncommitted(idx.root, "tagged",
-                               set(idx.meta["tagged_files"]))
-        _emblsh_gc_uncommitted(idx.root, "vectors",
-                               set(idx.meta.get("vectors_files", [])))
+    # each component is GC'd and re-manifested only under its OWN manifest
+    # key: a pre-manifest component has no committed set to GC against
+    manifested = [c for c in ("tagged", "vectors")
+                  if f"{c}_files" in idx.meta]
+    for c in manifested:
+        _emblsh_gc_uncommitted(idx.root, c, set(idx.meta[f"{c}_files"]))
     (tagged.repartition("bpart")
      .sortWithinPartitions("bpart", "band", "bucket")
      .write.mode("append").partitionBy("bpart")
@@ -1131,9 +1132,8 @@ def _append_emblsh(idx: EmbeddingLSHIndex, tagged: DataFrame,
     meta = dict(idx.meta)
     meta["appends"] = int(meta.get("appends", 0)) + 1
     meta.update(meta_extra or {})
-    if "tagged_files" in idx.meta:
-        meta["tagged_files"] = _emblsh_list_files(idx.root, "tagged")
-        meta["vectors_files"] = _emblsh_list_files(idx.root, "vectors")
+    for c in manifested:
+        meta[f"{c}_files"] = _emblsh_list_files(idx.root, c)
     _write_emblsh_meta(idx.root, meta)
     return EmbeddingLSHIndex(idx.root)
 

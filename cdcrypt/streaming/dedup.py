@@ -100,7 +100,9 @@ def check_index_covered(index_root: str, kind: str) -> None:
     operators/_idxfiles.py landed) SELF-HEAL this window instead: torn
     files are invisible to readers and garbage-collected by the next
     append, so the redelivered batch lands exactly once — no fail-fast
-    needed, the check passes straight through."""
+    needed, the check passes straight through. Only a manifest for EVERY
+    data subdir passes: a partially manifested meta gets the marker
+    check, since its unmanifested subdir is neither hidden nor GC'd."""
     import json
 
     meta_name = _KINDS[kind][0].META
@@ -108,7 +110,7 @@ def check_index_covered(index_root: str, kind: str) -> None:
     meta_path = os.path.join(index_root, meta_name)
     with open(meta_path) as f:
         meta = json.load(f)
-    if any(f"{sub}_files" in meta for sub in subdirs):
+    if all(f"{sub}_files" in meta for sub in subdirs):
         return  # manifest-bearing: torn appends are invisible + GC'd
     meta_m = os.stat(meta_path).st_mtime_ns
     for sub in subdirs:

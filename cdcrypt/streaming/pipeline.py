@@ -147,7 +147,6 @@ class IngestPipeline:
     salt_buckets: int = 16
     bucket_count: int = 64
     max_retries: int = 2
-    broadcast_merge: bool | None = None
     table_mode: str = "mor"  # 'mor' (append+compact) | 'cow' (rewrite dirty)
     # row resolution semantics of the target table (table/lake.py):
     # 'lww' whole-row last-writer-wins (resolver knob picks the strategy),
@@ -237,6 +236,13 @@ class IngestPipeline:
                 "(the tolerant adapter IS the source adapter)")
         if self.dlq_adapter is not None and self.dlq_dir is None:
             raise ValueError("dlq_adapter requires dlq_dir")
+
+    @property
+    def broadcast_merge(self) -> None:
+        """Always None: copy-on-write has no join strategy. Kept only
+        because perfbench/phases.py still reads it; the ROADMAP item-5
+        benchmark PR deletes it."""
+        return None
 
     @property
     def _bucket_by(self) -> str:
@@ -454,9 +460,8 @@ class IngestPipeline:
         encryptor = self._encryptor()
         lineage = merge_upsert(
             spark, table, encryptor.apply(resolved), epoch,
-            broadcast=self.broadcast_merge, mode=self.table_mode,
-            compact_threshold=self.compact_threshold, assume_bucketed=True,
-            stage_only=self.audit is not None,
+            mode=self.table_mode, compact_threshold=self.compact_threshold,
+            assume_bucketed=True, stage_only=self.audit is not None,
         )
         if raw_cached is not None:
             raw_cached.unpersist(blocking=False)

@@ -881,12 +881,15 @@ class LakeTable:
         (op='I', epoch=-1, so any delta version outranks them) unioned with
         the rows of the un-compacted delta files, (op, epoch) attached.
         Log-only deltas (``compacted=True``) are skipped — a base file
-        already holds their rows. ``read`` and MoR compaction resolve
-        exactly this frame (operators/dedup.resolve_live).
+        already holds their rows. ``read`` and every base-file rewrite
+        (operators/merge.rewrite_buckets: copy-on-write merges, MoR
+        compaction, clustered rewrites) resolve exactly this frame
+        (operators/dedup.resolve_live).
 
-        No base files, no base branch: an empty ``createDataFrame`` is an
-        RDD scan Catalyst cannot prune, which would add empty tasks to
-        every read of a table that has never compacted."""
+        An empty side is left out, not unioned: an empty
+        ``createDataFrame`` is an RDD scan Catalyst cannot prune, which
+        would add empty Python tasks to every read of a table that has
+        never compacted, and to every copy-on-write merge."""
         base_fs = [f for f in files if f.get("kind", "base") == "base"]
         delta_fs = [f for f in files if f.get("kind", "base") == "delta"
                     and not f.get("compacted")]
@@ -899,7 +902,7 @@ class LakeTable:
             .withColumn("op", F.lit("I"))
             .withColumn("epoch", F.lit(-1).cast("long"))
         )
-        return base.unionByName(delta)
+        return base.unionByName(delta) if delta_fs else base
 
     def read(
         self,
@@ -907,7 +910,6 @@ class LakeTable:
         buckets: set[int] | None = None,
         version: int | None = None,
         with_bucket: bool = False,
-        prune_only: bool = False,
         key_range: dict | None = None,
         tag: str | None = None,
         as_of_ms: int | None = None,
@@ -932,10 +934,8 @@ class LakeTable:
         and spec-aware (gcd residue rule); when the selection includes
         files written under an OLDER partition spec, those files can
         carry co-located rows of other current buckets, so a row-level
-        bucket predicate is applied on top — unless ``prune_only=True``
-        (merge wants whole files: it rewrites every row of the files it
-        selects). Single-spec tables never need the predicate and keep
-        the pure-metadata pruning plan.
+        bucket predicate is applied on top. Single-spec tables never need
+        the predicate and keep the pure-metadata pruning plan.
 
         One parquet read for ALL files of a kind regardless of schema id:
         the current schema is pushed as the read schema, so old files yield
@@ -988,7 +988,7 @@ class LakeTable:
                 snap.get("merge_engine", "lww"), snap.get("agg_spec"),
                 snap.get("key_cols", list(DEFAULT_KEY_COLS)),
             ).select(*[f.name for f in snap_schema.fields])
-        if buckets is not None and not prune_only:
+        if buckets is not None:
             _, default_spec = self._partition_specs(snap)
             if any(f.get("spec_id", default_spec) != default_spec
                    for f in fs):

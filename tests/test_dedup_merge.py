@@ -17,6 +17,7 @@ from cdcrypt.operators.merge import merge_upsert
 from cdcrypt.streaming.pipeline import BASE_TABLE_SCHEMA
 from cdcrypt.table.lake import LakeTable
 
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType, LongType, StringType, StructField, StructType, TimestampType,
 )
@@ -132,72 +133,80 @@ def test_window_resolution_single_shuffle(spark):
     assert "WindowGroupLimit" in plan and "Partial" in plan
 
 
-def test_cow_broadcast_decomposition_equals_smj(spark, tmp_path):
-    """VERDICT r3 item 7: Spark cannot broadcast a full_outer join (the
-    hint is silently ignored), so the small-batch CoW path decomposes into
-    a broadcast left-join (updates/deletes) + broadcast anti-join
-    (inserts). Both strategies must produce the identical final table,
-    including the stale-guard and delete semantics."""
-    from cdcrypt.operators.merge import _cow_merged
-
-    df = events_df(spark)
-    finals = []
-    for force in (True, False):
-        root = str(tmp_path / f"bt_{force}")
-        table = LakeTable.create(root, BASE_TABLE_SCHEMA, bucket_count=4)
-        r1 = merge_upsert(spark, table, resolve_latest_window(df), epoch=0,
-                          broadcast=force)
-        assert r1["join"] == ("broadcast" if force else "smj")
-        # second epoch exercises updates, stale rows, deletes, inserts
-        # against non-empty current state
-        batch2 = spark.createDataFrame(
-            [("U", "A", 0, 99, 1, "user", "a-v3", None, TS),   # update
-             ("U", "B", 1, 1, 1, "assistant", "b-stale", None, TS),  # stale
-             ("D", "D", 3, 50, 1, None, None, None, TS),       # delete
-             ("I", "E", 9, 60, 1, "user", "e-new", None, TS)], # insert
-            COLS)
-        merge_upsert(spark, table, resolve_latest_window(batch2), epoch=1,
-                     broadcast=force)
-        finals.append(sorted(
-            tuple(r) for r in table.read(spark)
-            .select("conv_id", "turn_idx", "op_seq", "role", "text", "tool")
-            .collect()))
-    assert finals[0] == finals[1]
-    final = {r[0]: r[4] for r in finals[0]}
-    assert final == {"A": "a-v3", "B": "b-final", "E": "e-new"}
-
-    # plan shapes: the decomposition really broadcasts; SMJ really merges
-    key_cols = ["conv_id", "turn_idx"]
-    tcols = [f.name for f in BASE_TABLE_SCHEMA.fields]
-    cur = spark.createDataFrame(
-        [("A", 0, 5, "user", "a-v2", None, TS)],
-        "conv_id string, turn_idx int, op_seq long, role string, "
-        "text string, tool string, ts timestamp")
-    bat = spark.createDataFrame(
-        [("U", "A", 0, 9, 1, "user", "a-v3", None, TS)], COLS)
-    p_b = _cow_merged(cur, bat, key_cols, tcols, True) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in p_b and "FullOuter" not in p_b
-    p_s = _cow_merged(cur, bat, key_cols, tcols, False) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "FullOuter" in p_s and "BroadcastHashJoin" not in p_s
+# (op, k, v, op_seq[, m]) change events per epoch; epoch 3 adds column m
+EQUIV_EPOCHS = [
+    [("I", "a", "a1", 1), ("I", "b", "b1", 2), ("I", "c", "c1", 3),
+     ("I", "d", "d1", 4),
+     (None, "n", "n1", 5)],                  # NULL-op insert
+    [("U", "a", "a2", 10),                   # update
+     ("I", "b", "b1", 2),                    # duplicate delivery
+     ("D", "c", None, 11),                   # delete
+     ("D", "d", None, 12)],                  # delete ...
+    [("U", "a", "a-stale", 6),               # stale update
+     ("I", "d", "d2", 20),                   # ... then re-insert
+     ("I", "e", "e1", 21)],                  # insert into a non-empty table
+    [("U", "b", "b2", 30, "mb"), ("I", "f", "f1", 31, "mf"),
+     (None, "g", "g1", 32, "mg")],           # add-column epoch
+]
 
 
-def test_cow_auto_broadcast_by_batch_size(spark, tmp_path):
-    """broadcast=None auto-selects: a tiny persisted batch goes broadcast;
-    threshold 0 forces the SMJ fallback."""
-    df = events_df(spark)
-    root = str(tmp_path / "auto")
-    table = LakeTable.create(root, BASE_TABLE_SCHEMA, bucket_count=4)
-    r = merge_upsert(spark, table, resolve_latest_window(df), epoch=0)
-    assert r["join"] == "broadcast"  # tiny batch, default threshold
-    one = spark.createDataFrame(
-        [("U", "A", 0, 100, 1, "user", "a-new", None, TS)], COLS)
-    r2 = merge_upsert(spark, table, resolve_latest_window(one), epoch=1,
-                      broadcast_threshold_bytes=0)
-    assert r2["join"] == "smj"
-    [row] = table.read(spark).where("conv_id='A'").collect()
-    assert row["text"] == "a-new"
+def _lww_oracle(epochs):
+    """Last writer by op_seq per key (first delivery on ties); a key is
+    live unless its winner is a delete (a NULL op is live)."""
+    win = {}
+    for rows in epochs:
+        for op, k, v, seq, *m in rows:
+            if k not in win or seq > win[k][0]:
+                win[k] = (seq, op, v, m[0] if m else None)
+    return sorted((k, v, seq, m) for k, (seq, op, v, m) in win.items()
+                  if op != "D")
+
+
+def test_table_modes_match_lww_oracle(spark, tmp_path):
+    """MoR (compacting every other epoch), copy-on-write and a default
+    TableRoute (copy-on-write for lww tables) apply the same resolved
+    batches to the same final table, equal to the LWW-by-op_seq oracle
+    row by row: duplicate delivery, stale update, delete, delete then
+    re-insert, NULL-op inserts and an add-column epoch."""
+    from cdcrypt.operators.multitable import TableRoute, apply_multi
+
+    schema = StructType([StructField("k", StringType(), False),
+                         StructField("v", StringType(), True),
+                         StructField("op_seq", LongType(), True)])
+
+    def table(name):
+        return LakeTable.create(str(tmp_path / name), schema, bucket_count=2,
+                                key_cols=["k"], bucket_by="k")
+
+    def events(rows, epoch, table_col=False):
+        cols = "op string, k string, v string, op_seq long"
+        if len(rows[0]) == 5:
+            cols += ", m string"
+        df = spark.createDataFrame(rows, cols).withColumn(
+            "epoch", F.lit(epoch).cast("long"))
+        return df.withColumn("table", F.lit("t")) if table_col else df
+
+    mor, cow, routed = table("mor"), table("cow"), table("routed")
+    compacted = []
+    for epoch, rows in enumerate(EQUIV_EPOCHS):
+        resolved = resolve_latest_agg(events(rows, epoch), key_cols=["k"])
+        compacted += merge_upsert(spark, mor, resolved, epoch, mode="mor",
+                                  compact_threshold=2)["buckets_compacted"]
+        merge_upsert(spark, cow, resolved, epoch, mode="cow")
+        if len(rows[0]) == 5:
+            # a route projects the batch onto its table's columns, so a
+            # routed table gains a column by schema evolution first
+            routed.evolve_schema(adds=[("m", StringType())])
+        apply_multi(spark, events(rows, epoch, table_col=True),
+                    {"t": TableRoute(routed)}, epoch)
+    assert compacted  # compaction ran through the shared rewrite
+
+    want = _lww_oracle(EQUIV_EPOCHS)
+    assert ("n", "n1", 5, None) in want and ("g", "g1", 32, "mg") in want
+    for t in (mor, cow, routed):
+        got = sorted(tuple(r) for r in t.refresh().read(spark)
+                     .select("k", "v", "op_seq", "m").collect())
+        assert got == want, t.root
 
 
 def test_merge_retrying_recovers_from_commit_race(spark, tmp_path):
@@ -261,3 +270,31 @@ def test_mor_compaction_keeps_what_read_returns(spark, tmp_path):
     assert lin["buckets_compacted"] == [0]
     assert before == ["k1", "k2"]
     assert keys() == before
+
+
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_rewrite_files_hold_their_bucket_off_key(spark, tmp_path, mode):
+    """A table bucketed by a non-key column: every base file a compaction
+    or a copy-on-write merge writes holds only rows of its manifest
+    bucket, so a bucket-pruned read returns exactly that bucket's rows."""
+    from cdcrypt.table.lake import bucket_col
+
+    t = LakeTable.create(
+        str(tmp_path / mode),
+        StructType([StructField("e", StringType(), False),
+                     StructField("u", StringType(), True),
+                     StructField("op_seq", LongType(), True)]),
+        bucket_count=4, key_cols=["e"], bucket_by="u")
+    for epoch in range(2):
+        merge_upsert(spark, t, spark.createDataFrame(
+            [("U", f"e{i}", f"u{i % 7}", 100 * epoch + i, epoch)
+             for i in range(40)],
+            "op string, e string, u string, op_seq long, epoch long"),
+            epoch, mode=mode, compact_threshold=2)
+    bases = [f for f in t.files() if f.get("kind", "base") == "base"]
+    assert bases
+    for f in bases:
+        rows = spark.read.parquet(f"{t.root}/{f['path']}")
+        assert rows.where(bucket_col(4, "u") != f["bucket"]).count() == 0
+    truth = t.read(spark).where(bucket_col(4, "u") == 0).count()
+    assert t.read(spark, buckets={0}).count() == truth

@@ -178,6 +178,28 @@ class TestTornAppendManifests:
         assert sorted(idx2.meta["vectors_files"]) == \
             sim._emblsh_list_files(root, "vectors")
 
+    def test_emblsh_append_keeps_unmanifested_vectors(
+            self, spark, vecs, tmp_path):
+        """GC runs per component under its own manifest key: a meta that
+        lists tagged files but not vectors files keeps every committed
+        vectors file across an append."""
+        import cdcrypt.operators.similarity as sim
+
+        root = str(tmp_path / "emb")
+        build_embedding_lsh_index(vecs, root, n_bands=4, bits_per_band=6,
+                                  n_partitions=4)
+        meta = dict(sim.EmbeddingLSHIndex(root).meta)
+        del meta["vectors_files"]
+        sim._write_emblsh_meta(root, meta)
+        committed = sim._emblsh_list_files(root, "vectors")
+        base_vecs = sim.EmbeddingLSHIndex(root).read_vectors(spark).count()
+
+        batch = spark.createDataFrame(
+            _vec_rows(30, seed=9), "vec_id string, embedding array<double>")
+        idx = append_to_embedding_lsh_index(root, batch)
+        assert set(committed) <= set(sim._emblsh_list_files(root, "vectors"))
+        assert idx.read_vectors(spark).count() == base_vecs + 30
+
     def test_minhash_torn_append_invisible_then_exactly_once(
             self, spark, tmp_path, monkeypatch):
         import cdcrypt.operators.docdedup as dd

@@ -112,3 +112,17 @@ def test_rewrite_guards_and_lineage(spark, tmp_path):
     assert hist[-1]["mode"] == "rewrite"
     # ingest can continue after a rewrite: epoch floor intact
     assert json.loads(json.dumps(t.snapshot["lineage"]))["mode"] == "rewrite"
+
+
+def test_rewrite_commit_race_keeps_winner_files(spark, tmp_path):
+    """Two handles at the same version rewrite concurrently: the loser's
+    data write goes to its own staging dir, so it cannot delete the files
+    of the winner's committed snapshot before its commit conflicts."""
+    t, _ = _ingest(spark, tmp_path, n_convs=20, avg_turns=4, n_epochs=2,
+                   seed=5)
+    h1, h2 = LakeTable(t.root), LakeTable(t.root)
+    rows = h1.read(spark).count()
+    rewrite_clustered(spark, h1, ["ts"])
+    with pytest.raises(LakeTableError, match="commit conflict"):
+        rewrite_clustered(spark, h2, ["ts"])
+    assert LakeTable(t.root).read(spark).count() == rows

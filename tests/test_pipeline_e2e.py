@@ -193,6 +193,45 @@ def test_default_epoch_plan_has_one_exchange(spark, stream_dir, tmp_path,
     assert plans[0].count("Exchange") == 1, plans[0]
 
 
+def test_bucket_rewrite_plans_have_one_exchange(spark, tmp_path,
+                                               monkeypatch):
+    """A copy-on-write merge and a MoR compaction each shuffle once: the
+    frame they hand to the bucketed base-file write has one Exchange
+    (the bucket repartition, which the live-row resolve reuses)."""
+    import cdcrypt.operators.merge as merge_mod
+    from cdcrypt.operators.merge import merge_upsert
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    real_write = merge_mod._write_bucketed
+    plans = []
+
+    def recording_write(df, staging, root, bucket_count, kind, *a, **kw):
+        if kind == "base":
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real_write(df, staging, root, bucket_count, kind, *a, **kw)
+
+    monkeypatch.setattr(merge_mod, "_write_bucketed", recording_write)
+    schema = StructType([StructField("k", StringType(), False),
+                         StructField("v", StringType(), True),
+                         StructField("op_seq", LongType(), True)])
+
+    def batch(epoch):  # already resolved: one row per key
+        return spark.createDataFrame(
+            [("U", f"k{i}", f"v{epoch}", 10 * epoch + i, epoch)
+             for i in range(4)],
+            "op string, k string, v string, op_seq long, epoch long")
+
+    for mode in ("cow", "mor"):
+        t = LakeTable.create(str(tmp_path / mode), schema, bucket_count=2,
+                             key_cols=["k"], bucket_by="k")
+        for epoch in range(2):
+            merge_upsert(spark, t, batch(epoch), epoch, mode=mode,
+                         compact_threshold=2)
+        assert len(plans) == {"cow": 2, "mor": 3}[mode]
+    for plan in plans:
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
 def test_crash_resume(spark, stream_dir, tmp_path):
     troot, ckpt = str(tmp_path / "t2"), str(tmp_path / "c2")
     a = IngestPipeline(stream_dir, troot, ckpt, key_id=KEY, bucket_count=8)
