@@ -28,8 +28,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # handful of small tables; one cached read per (dataset, table)
     # removes the repeated parquet-open/footer cost from the sweep
     path = f"{sf_dir}/{name}.parquet"
-    memo_key = (f"t:{os.path.abspath(sf_dir)}:{name}:"
-                + _table_fingerprint(sf_dir, name))
 
     def build():
         # a fingerprint MISS means the files changed (or first touch):
@@ -40,7 +38,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.catalog.refreshByPath(path)
         return spark.read.parquet(path)
 
-    return _memo_df(memo_key, build)
+    return _memo_df(spark, f"t:{os.path.abspath(sf_dir)}:{name}",
+                    _table_fingerprint(sf_dir, name), build)
 
 
 def _table_fingerprint(sf_dir: str, name: str) -> str:
@@ -70,18 +69,24 @@ def _table_fingerprint(sf_dir: str, name: str) -> str:
 #: band pipeline feeds EIGHT gates). Recomputing those per gate is pure
 #: sweep overhead — a per-gate cost the operator doesn't have in production,
 #: where the pipeline runs once. Memoized frames are .cache()'d (MEMORY_AND_
-#: DISK, so a bench-scale frame spills instead of OOMing) and keyed on the
-#: source-table content fingerprints + parallelism, so a regenerated dataset
-#: or a different master can never serve a stale plan.
-_DF_MEMO: dict[str, DataFrame] = {}
+#: DISK, so a bench-scale frame spills instead of OOMing). One entry per slot
+#: (what is memoized: path, name, params), stamped with the session's
+#: applicationId and the source-table content fingerprints: a regenerated
+#: dataset or a new session supersedes the entry instead of being served it,
+#: and a superseded frame of the live session is unpersisted, not leaked.
+_DF_MEMO: dict[str, tuple[tuple[str, str], DataFrame]] = {}
 
 
-def _memo_df(key: str, build) -> DataFrame:
-    df = _DF_MEMO.get(key)
-    if df is None:
+def _memo_df(spark: SparkSession, slot: str, fingerprint: str,
+             build) -> DataFrame:
+    stamp = (spark.sparkContext.applicationId, fingerprint)
+    old_stamp, df = _DF_MEMO.get(slot, (None, None))
+    if old_stamp != stamp:
+        if old_stamp and old_stamp[0] == stamp[0]:
+            df.unpersist()  # a stopped session's cache went with it
         df = build().cache()
         df.count()  # materialize once; every later consumer pays ~zero
-        _DF_MEMO[key] = df
+        _DF_MEMO[slot] = (stamp, df)
     return df
 
 
@@ -92,10 +97,9 @@ def _tp(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
     scale the many-file input provides this parallelism naturally, so the
     repartition exists only at bench scale (it shuffles KBs)."""
     n = spark.sparkContext.defaultParallelism
-    memo_key = (f"tp:{os.path.abspath(sf_dir)}:{name}:{key}:{n}:"
-                + _table_fingerprint(sf_dir, name))
     return _memo_df(
-        memo_key,
+        spark, f"tp:{os.path.abspath(sf_dir)}:{name}:{key}",
+        f"{n}:" + _table_fingerprint(sf_dir, name),
         lambda: _t(spark, sf_dir, name).repartition(n, F.col(key)))
 
 
@@ -2188,10 +2192,9 @@ def _lsh_pairs(spark, sf_dir) -> DataFrame:
     pay the shingle pass once too."""
     from cdcrypt.operators.docdedup import minhash_lsh_candidates
 
-    key = (f"lshpairs:{os.path.abspath(sf_dir)}:"
-           f"{sorted(_MINHASH.items())}:"
-           + _table_fingerprint(sf_dir, "documents"))
-    return _memo_df(key, lambda: minhash_lsh_candidates(
+    slot = f"lshpairs:{os.path.abspath(sf_dir)}:{sorted(_MINHASH.items())}"
+    fingerprint = _table_fingerprint(sf_dir, "documents")
+    return _memo_df(spark, slot, fingerprint, lambda: minhash_lsh_candidates(
         _tp(spark, sf_dir, "documents", "doc_id"),
         num_hashes=_MINHASH["num_hashes"], bands=_MINHASH["bands"],
         shingle_k=_MINHASH["shingle_k"],
@@ -2265,9 +2268,9 @@ def _simhash_fps(spark, sf_dir) -> DataFrame:
     # out, so the sweep pays the signature pass once too
     from cdcrypt.operators.docdedup import simhash64
 
-    key = (f"simhash:{os.path.abspath(sf_dir)}:"
-           + _table_fingerprint(sf_dir, "documents"))
-    return _memo_df(key, lambda: simhash64(
+    slot = f"simhash:{os.path.abspath(sf_dir)}"
+    fingerprint = _table_fingerprint(sf_dir, "documents")
+    return _memo_df(spark, slot, fingerprint, lambda: simhash64(
         _tp(spark, sf_dir, "documents", "doc_id")))
 
 

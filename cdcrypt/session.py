@@ -1,6 +1,7 @@
 """SparkSession factory with engine-tuned defaults.
 
-Scale rationale (local[32] sandbox, designed for 1000-executor clusters):
+Scale rationale (tuned on a single host's ``local[N]``, designed for
+1000-executor clusters):
 - Arrow vectorization on, 10k rows/batch: amortizes the JVM<->Python boundary
   for the crypto UDFs (one data-key wrap per 10k rows).
 - AQE on with coalescing + skew-join: runtime re-planning for the merge join;
@@ -8,6 +9,18 @@ Scale rationale (local[32] sandbox, designed for 1000-executor clusters):
   resolve_latest_salted) as the north rule requires, and can A/B the two.
 - shuffle.partitions defaults to 2x cores locally; on a real cluster set it
   near (executors * cores * 2) or rely on AQE coalescing from a higher value.
+
+Python daemon: PySpark re-reads the central directory of every zip archive
+on a worker's ``sys.path`` (``pyspark.zip``, the spark-core jar) before each
+task, ~0.1-0.4 s of worker CPU per task on CPython 3.11, which dominated the
+pandas-UDF crypto stages. ``spark.python.daemon.module`` is set to
+``cdcrypt._pydaemon``, which skips a re-read when the archive's inode, size
+and mtime are unchanged and invalidates every other import cache as before.
+The daemon starts before any ``--py-files`` arrive, so it is set only where
+the workers can import it (``daemon_importable``): a ``local``/``local[...]``
+master, with cdcrypt's parent directory on ``PYTHONPATH`` or the working
+directory. Elsewhere Spark's own daemon runs; ``extra_conf`` overrides the
+setting either way.
 """
 
 from __future__ import annotations
@@ -15,6 +28,23 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+DAEMON_CONF = "spark.python.daemon.module"
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+
+
+def daemon_importable(master: str) -> bool:
+    """Whether Python workers of ``master`` can import ``cdcrypt._pydaemon``
+    on their own. Local workers inherit this process's ``PYTHONPATH`` and
+    working directory. They need not run this interpreter (``PYSPARK_PYTHON``
+    defaults to ``python3`` on ``PATH``), so its site-packages prove nothing;
+    ``sys.path`` edits made here do not reach them, and a ``--py-files`` zip
+    is not a directory."""
+    if master != "local" and not master.startswith("local["):
+        return False
+    searched = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    return os.path.isdir(_PKG_PARENT) and any(
+        os.path.realpath(p) == _PKG_PARENT for p in [*searched, os.getcwd()])
 
 
 def get_spark(
@@ -66,6 +96,8 @@ def get_spark(
             pass
         b = (b.config("spark.shuffle.compress", "false")
              .config("spark.shuffle.spill.compress", "false"))
+    if daemon_importable(master):
+        b = b.config(DAEMON_CONF, "cdcrypt._pydaemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -1,7 +1,9 @@
 """The __spark_entry__ session-scoped DataFrame memo: correctness of the
 one risk it introduces — serving a stale frame after the source dataset
-changed in place. Keys embed the content fingerprint (file sizes +
-mtimes), so a regenerated dataset must produce a fresh frame."""
+changed in place. Entries are stamped with the session's applicationId and
+the content fingerprint (file sizes + mtimes), so a regenerated dataset or a
+new session must produce a fresh frame, and the superseded one is
+unpersisted."""
 
 from __future__ import annotations
 
@@ -40,6 +42,29 @@ def test_memo_invalidates_on_dataset_regeneration(spark, tmp_path):
     df2 = e._t(spark, sf, "documents")
     assert df2 is not df1
     assert df2.count() == 3
+    # the superseded frame is unpersisted and evicted, not leaked or served
+    assert not df1.is_cached
+    assert e._t(spark, sf, "documents") is df2
+    assert sum(df is df1 for _, df in e._DF_MEMO.values()) == 0
+
+
+def test_memo_entry_of_a_stopped_session_is_replaced(spark, tmp_path):
+    import __spark_entry__ as e
+
+    sf = str(tmp_path / "sf")
+    _write_docs(sf, ["alpha"])
+    df1 = e._t(spark, sf, "documents")
+    slot = f"t:{os.path.abspath(sf)}:documents"
+    (app, fingerprint), _ = e._DF_MEMO[slot]
+
+    class Dead:  # a frame of a stopped session: unpersist() would fail
+        def unpersist(self):
+            raise AssertionError("unpersist on a stopped session's frame")
+
+    e._DF_MEMO[slot] = (("local-stopped", fingerprint), Dead())
+    df2 = e._t(spark, sf, "documents")
+    assert df2 is not df1 and df2.count() == 1
+    assert e._DF_MEMO[slot] == ((app, fingerprint), df2)
 
 
 def test_memo_keys_isolate_datasets(spark, tmp_path):
