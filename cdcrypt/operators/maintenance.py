@@ -14,10 +14,10 @@ table that ingests forever degrades without it:
   every file spans ~the full `ts`/`op_seq` range and nothing prunes. One
   clustered rewrite makes the per-file bounds tight and disjoint, so a
   time-range scan opens O(range) files instead of O(table).
-- **File sizing**: `max_records_per_file` splits each bucket into
+- **File sizing**: `max_records_per_file` splits each bucket range into
   contiguous sorted chunks — the bin-packing lever. At 100 TB the rewrite
-  is one shuffle (bucket repartition) + a local sort per bucket, runs
-  bucket-parallel, and never touches the driver with data.
+  is one shuffle (bucket repartition) + a local sort per bucket range,
+  runs range-parallel, and never touches the driver with data.
 
 Scale contract: the rewrite goes through the same bucket-rewrite path as
 copy-on-write merges and MoR compaction (operators/merge.py
@@ -110,15 +110,15 @@ def rewrite_clustered(
     zorder_bits: int | None = None,
 ) -> dict:
     """Rewrite every live row of ``table`` into base files clustered by
-    ``sort_by`` within each bucket; commit as one new snapshot.
+    ``sort_by`` within each bucket range; commit as one new snapshot.
 
     Effects on the snapshot it produces:
 
     - all live data sits in ``kind='base'`` files, one-or-more per bucket
-      (``max_records_per_file`` splits a bucket into contiguous sorted
+      range (``max_records_per_file`` splits a range into contiguous sorted
       chunks), zero live deltas — reads are plain scans, no MoR resolve;
     - manifest bounds for the table keys AND ``sort_by`` are tight and
-      (within a bucket) disjoint across split files, so ``read(key_range=
+      (within a range) disjoint across split files, so ``read(key_range=
       {sort_col: (lo, hi)})`` prunes from metadata alone — and because no
       live deltas remain, ``key_range`` accepts NON-key columns too
       (table/lake.py relaxes the key-only rule for delta-free snapshots);
@@ -182,7 +182,7 @@ def rewrite_clustered(
         sort_key = list(sort_by)
 
     timings: dict = {}
-    new_files, rows = rewrite_buckets(
+    new_files, per_bucket = rewrite_buckets(
         spark, table, snap["files"], table.schema, _staging_dir(table),
         sort_key=sort_key, stats_cols=tuple(sort_by), bloom_cols=bloom_cols,
         max_records_per_file=max_records_per_file, timings=timings)
@@ -199,7 +199,7 @@ def rewrite_clustered(
         "sort_by": sort_by,
         "layout": layout,
         "batch_rows": 0,
-        "rows_written": int(rows),
+        "rows_written": sum(per_bucket.values()),
         "files_before": len([f for f in old_files
                              if f.get("kind", "base") == "base"
                              or not f.get("compacted")]),

@@ -4,8 +4,8 @@ Two apply strategies over micro-batches already resolved to one final change
 per key (operators/dedup.py):
 
 ``mode='mor'`` (the ingest pipeline's default, the 10^10-event path):
-merge-on-read — append the resolved batch as per-bucket delta files (write
-cost O(batch)); reads resolve last-writer-wins over base+delta
+merge-on-read — append the resolved batch as bucket-range delta files
+(write cost O(batch)); reads resolve last-writer-wins over base+delta
 (table/lake.py); buckets whose delta depth reaches ``compact_threshold`` are
 compacted back to base inside the same commit. For ingest-heavy CDC, where
 every epoch dirties most buckets, MoR replaces the per-epoch full-table
@@ -22,11 +22,15 @@ plus any batch rows, one repartition by bucket, then
 
 Physical-layout decisions (bench-driven, BENCH/BASELINE.md):
 - bucket(conv_id) == Spark HashPartitioning (table/lake.py bucket_col), so
-  bucketed writes are ``repartition(B, conv_id)`` + PLAIN parquet write:
-  no ``partitionBy`` => no per-task sort of wide rows; the file's
-  ``part-NNNNN`` index IS its bucket id. When the caller's plan is already
-  clustered by conv_id (``assume_bucketed=True``, the pipeline fuses
-  resolve+encrypt+write onto one exchange) the write adds NO shuffle.
+  bucketed writes are ``repartition(B, conv_id)`` + ``coalesce`` to about
+  one bucket range per core (table/lake.py coalesce_buckets) + PLAIN
+  parquet write: no ``partitionBy`` => no per-task sort of wide rows, and
+  a write costs ~cores tasks and files, not B. Each file stores its rows'
+  bucket ids as a physical ``bucket`` column; the manifest range and the
+  per-bucket lineage counts come from that column. When the caller's plan
+  is already clustered by conv_id (``assume_bucketed=True``, the pipeline
+  fuses resolve+encrypt+write onto one exchange) the write adds NO
+  shuffle.
 - lake files default to ``compression='none'``: the dominant bytes are
   AES-GCM ciphertext (maximum entropy) — snappy/zstd cannot shrink them and
   the codec CPU was a measured bottleneck.
@@ -41,6 +45,7 @@ from __future__ import annotations
 
 import glob
 import os
+from collections import Counter
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -49,7 +54,8 @@ from pyspark.sql.types import StructField, StructType
 
 from cdcrypt.operators.dedup import resolve_live
 from cdcrypt.table.lake import (
-    LakeTable, LakeTableError, bucket_col, repartition_by_bucket,
+    LakeTable, LakeTableError, _live_delta, bucket_col, coalesce_buckets,
+    repartition_by_bucket,
 )
 
 # kept as the documented default; the ACTUAL key/bucket columns come from
@@ -148,17 +154,23 @@ def _write_bucketed(
     stats_cols: tuple[str, ...] = (),
     max_records_per_file: int | None = None,
     bloom_cols: tuple[str, ...] = (),
-) -> tuple[list[dict], int]:
-    """Write ``df`` as one plain parquet file per bucket; return manifest
-    entries. partition_id == bucket (see table/lake.py bucket_col), so the
-    bucket id comes from the ``part-NNNNN`` filename index (which survives
-    ``maxRecordsPerFile`` splitting — split files share the partition's
-    part index with distinct c-suffixes, so bucket attribution holds for
-    many files per bucket)."""
+) -> tuple[list[dict], Counter]:
+    """Write ``df`` as plain parquet files of bucket ranges; return the
+    manifest entries and the rows written per bucket.
+
+    The bucket-clustered frame is coalesced to about one range per core
+    (table/lake.py coalesce_buckets) and every row carries its bucket id
+    in a physical ``bucket`` column. A file's ``[bucket_lo, bucket_hi]``
+    and the per-bucket counts are read back from that column, never
+    inferred from the file name: a coalesce over a cached parent may
+    interleave buckets, and ``maxRecordsPerFile`` splits one range task
+    into several files."""
     import time
     t0 = time.monotonic()
     out = df if assume_bucketed else repartition_by_bucket(
         df, bucket_count, bucket_by)
+    out = coalesce_buckets(out, bucket_count).withColumn(
+        "bucket", bucket_col(bucket_count, bucket_by))
     w = out.write.mode("overwrite").option("compression", LAKE_CODEC)
     if max_records_per_file:
         w = w.option("maxRecordsPerFile", str(int(max_records_per_file)))
@@ -167,7 +179,7 @@ def _write_bucketed(
             w = w.option(f"parquet.enable.dictionary#{c}", "false")
     w.parquet(staging)
     t1 = time.monotonic()
-    entries, total = [], 0
+    entries, per_bucket = [], Counter()
     want_bloom = tuple(c for c in bloom_cols if c in df.columns)
     for p in sorted(glob.glob(os.path.join(staging, "part-*.parquet"))):
         pf = pq.ParquetFile(p)
@@ -175,9 +187,12 @@ def _write_bucketed(
         nrows = md.num_rows
         if nrows == 0:
             continue
-        bkt = int(os.path.basename(p).split("-")[1])
-        entry = {"path": os.path.relpath(p, root), "bucket": bkt,
-                 "schema_id": None, "rows": nrows, "kind": kind}
+        counts = {c["values"]: c["counts"] for c in pf.read(
+            columns=["bucket"]).column("bucket").value_counts().to_pylist()}
+        per_bucket.update(counts)
+        entry = {"path": os.path.relpath(p, root), "bucket_lo": min(counts),
+                 "bucket_hi": max(counts), "schema_id": None, "rows": nrows,
+                 "kind": kind}
         bounds = _footer_bounds(md, stats_cols)
         if bounds:
             entry["bounds"] = bounds
@@ -199,11 +214,10 @@ def _write_bucketed(
                 side = write_bloom_sidecar(p, blooms)
                 entry["bloom"] = os.path.relpath(side, root)
         entries.append(entry)
-        total += nrows
     if timings is not None:
         timings[f"{kind}_write_sec"] = round(t1 - t0, 3)
         timings[f"{kind}_manifest_sec"] = round(time.monotonic() - t1, 3)
-    return entries, total
+    return entries, per_bucket
 
 
 def _stats_cols(table: LakeTable, df: DataFrame) -> tuple[str, ...]:
@@ -229,6 +243,25 @@ def _change_frame(resolved: DataFrame, target: StructType,
     )
 
 
+def _rewrite_scope(table: LakeTable, files: list[dict],
+                   buckets: set[int]) -> list[dict]:
+    """The files a rewrite of ``buckets`` must take: every file that may
+    hold one of them (LakeTable.file_buckets), closed under shared
+    buckets. A rewrite resolves each key over the files it reads, so a
+    key's versions left in an untaken file would outlive a delete the
+    rewrite folded away. Aligned ranges close at once; overlapping ones
+    (a cached frame's interleaved groups, a change of width or of
+    partition spec) widen the scope until no untaken file shares a
+    bucket with it."""
+    held = table.file_buckets(table.snapshot)
+    while True:
+        scope = [f for f in files if not held(f).isdisjoint(buckets)]
+        wider = set(buckets).union(*map(held, scope))
+        if wider == buckets:
+            return scope
+        buckets = wider
+
+
 def rewrite_buckets(
     spark: SparkSession,
     table: LakeTable,
@@ -242,15 +275,15 @@ def rewrite_buckets(
     bloom_cols: tuple[str, ...] | None = None,
     max_records_per_file: int | None = None,
     timings: dict | None = None,
-) -> tuple[list[dict], int]:
+) -> tuple[list[dict], Counter]:
     """Rewrite the live rows of ``files`` plus ``changes`` (change rows
     from :func:`_change_frame`) as base files under ``staging``; return
-    the manifest entries and row count.
+    the manifest entries and the rows written per bucket.
 
     One repartition by bucket, then ``dedup.resolve_live`` — the merge
     engine's read resolver and delete rule, exactly what ``read()``
-    applies — reusing that exchange, then an optional within-bucket
-    ``sort_key``. Stored rows enter at ``epoch=-1``
+    applies — reusing that exchange, then an optional ``sort_key``
+    within each bucket range. Stored rows enter at ``epoch=-1``
     (``LakeTable.change_rows``), so a change row at an equal ``op_seq``
     loses to the stored row. ``stats_cols`` extend the manifest bounds;
     ``bloom_cols`` default to the table's."""
@@ -266,11 +299,12 @@ def rewrite_buckets(
         # the resolve re-shuffled by key; partition id must be the bucket
         live = repartition_by_bucket(live, table.bucket_count,
                                      table.bucket_by)
+    live = coalesce_buckets(live, table.bucket_count)
     if sort_key:
         live = live.sortWithinPartitions(*sort_key)
     return _write_bucketed(
         live, staging, table.root, table.bucket_count, "base",
-        assume_bucketed=True, timings=timings,
+        assume_bucketed=True, timings=timings, bucket_by=table.bucket_by,
         stats_cols=tuple(dict.fromkeys([*_stats_cols(table, live),
                                         *stats_cols])),
         max_records_per_file=max_records_per_file,
@@ -331,12 +365,12 @@ def merge_upsert(
     batch = _change_frame(resolved, target, epoch).persist()
     dirty = {r[0] for r in batch.select(
         bucket_col(table.bucket_count, table.bucket_by)).distinct().collect()}
-    # spec-aware file selection: an old-partition-spec file whose keys
-    # overlap the dirty buckets is rewritten WHOLE (its co-located rows of
-    # other current buckets move to the current layout with it) and
-    # dropped from the snapshot, never duplicated
-    scope = table.files(buckets=dirty)
-    new_files, new_rows = rewrite_buckets(
+    # a file that may hold a dirty bucket is rewritten WHOLE (the rest of
+    # its range, or an old-spec file's co-located rows of other current
+    # buckets, move to the current layout with it) and dropped from the
+    # snapshot, never duplicated
+    scope = _rewrite_scope(table, table.snapshot["files"], dirty)
+    new_files, per_bucket = rewrite_buckets(
         spark, table, scope, target, _staging_dir(table), changes=batch)
     rewritten = {f["path"] for f in scope}
     keep_files = [f for f in table.snapshot["files"]
@@ -349,11 +383,11 @@ def merge_upsert(
         "mode": "cow",
         "batch_rows": batch_rows,
         "dirty_buckets": sorted(int(x) for x in dirty),
-        "rows_written": int(new_rows),
-        "buckets_rewritten": len({f["bucket"] for f in new_files}),
+        "rows_written": sum(per_bucket.values()),
+        "buckets_rewritten": len(per_bucket),
         # per-partition lineage (P8): live rows per rewritten bucket
         "rows_merged_per_bucket": {
-            str(f["bucket"]): int(f["rows"]) for f in new_files},
+            str(b): n for b, n in sorted(per_bucket.items())},
     }
     version = table.commit(epoch=epoch, keep_files=keep_files,
                            new_files=new_files, lineage=lineage,
@@ -384,7 +418,7 @@ def _merge_mor(
 
     staging_root = _staging_dir(table)
     staging_delta = os.path.join(staging_root, "delta")
-    new_delta, appended_rows = _write_bucketed(
+    new_delta, appended = _write_bucketed(
         delta_df, staging_delta, table.root, table.bucket_count, "delta",
         assume_bucketed=assume_bucketed, timings=timings,
         bucket_by=table.bucket_by, stats_cols=_stats_cols(table, delta_df),
@@ -392,35 +426,23 @@ def _merge_mor(
 
     keep = list(table.snapshot["files"])
 
-    # --- compaction decision: delta FILE depth per CURRENT-spec bucket
-    # after this append. Log-only deltas (compacted=True, below) are
-    # already folded into a base file and don't count toward depth. A
-    # delta written under an older partition spec contributes to every
-    # current bucket its residue class can hold (gcd rule, table/lake.py
-    # _file_bucket_filter) — so post-evolution writes naturally trigger
-    # the compaction that migrates old-spec files to the current layout.
-    import math
-
-    specs, default_spec = table._partition_specs(table.snapshot)
-    counts = {s["id"]: s["bucket_count"] for s in specs}
-    cur_b = table.bucket_count
-    depth: dict[int, int] = {}
-    for f in keep + new_delta:
-        if f.get("kind", "base") == "delta" and not f.get("compacted"):
-            fb = counts.get(f.get("spec_id", default_spec), cur_b)
-            if fb == cur_b:
-                depth[f["bucket"]] = depth.get(f["bucket"], 0) + 1
-            else:
-                g = math.gcd(cur_b, fb)
-                for b in range(f["bucket"] % g, cur_b, g):
-                    depth[b] = depth.get(b, 0) + 1
+    # --- compaction decision: live delta FILE depth per CURRENT-spec
+    # bucket after this append. Log-only deltas (compacted=True, below)
+    # are already folded into a base file and don't count toward depth. A
+    # delta adds depth to every current bucket it may hold
+    # (LakeTable.file_buckets: its range, or an older spec's residue
+    # classes) — so post-evolution writes naturally trigger the
+    # compaction that migrates old-spec files to the current layout.
+    held = table.file_buckets(table.snapshot)
+    depth = Counter(b for f in keep + new_delta if _live_delta(f)
+                    for b in held(f))
     compact = {b for b, d in depth.items() if d >= compact_threshold}
 
+    compacted = Counter()
     compact_files: list[dict] = []
-    compacted_rows = 0
     if compact:
-        in_compact = table._file_bucket_filter(table.snapshot, compact)
-        in_scope = [f for f in keep + new_delta if in_compact(f)]
+        in_scope = _rewrite_scope(table, keep + new_delta, compact)
+        compact = set().union(*map(held, in_scope))
         # id-projected scans: files written under since-renamed/widened
         # schemas surface under the CURRENT (+batch extras) names/types.
         # Partial-update/aggregate tables compact with their per-column
@@ -428,34 +450,34 @@ def _merge_mor(
         # sequence and drops delete cutoffs (the standard log-structured
         # partial-update contract — see resolve_partial_agg's docstring;
         # sum/max/min folds are exact under any batching).
-        compact_files, compacted_rows = rewrite_buckets(
+        compact_files, compacted = rewrite_buckets(
             spark, table, in_scope, target,
             os.path.join(staging_root, "compact"), timings=timings)
         compacted_away = {f["path"] for f in in_scope}
         keep = [f for f in keep if f["path"] not in compacted_away]
-        # the epoch's own delta rows are folded into the compacted base,
-        # but the FILE stays referenced as a LOG-ONLY delta
-        # (compacted=True): read() skips it (rows live in the base),
-        # read_incremental() still serves it — a fused append+compact
-        # commit must not erase the epoch's change log from the CDC-out
-        # feed (Iceberg gets this for free by separating append and
-        # rewrite commits; r4 fix — previously these changes silently
-        # vanished from the incremental feed)
-        new_delta = [dict(f, compacted=True) if f["bucket"] in compact else f
+        # the epoch's own delta rows in scope are folded into the
+        # compacted base, but each such FILE stays referenced as a
+        # LOG-ONLY delta (compacted=True): read() skips it (rows live in
+        # the base), read_incremental() still serves it — a fused
+        # append+compact commit must not erase the epoch's change log
+        # from the CDC-out feed (Iceberg gets this for free by separating
+        # append and rewrite commits)
+        new_delta = [dict(f, compacted=True)
+                     if f["path"] in compacted_away else f
                      for f in new_delta]
 
     lineage = {
         "epoch": epoch,
         "mode": "mor",
-        "batch_rows": int(appended_rows),
-        "rows_written": int(appended_rows + compacted_rows),
-        "dirty_buckets": sorted({f["bucket"] for f in new_delta + compact_files}),
-        "buckets_compacted": sorted(int(b) for b in compact),
-        "compacted_rows": int(compacted_rows),
-        # per-partition lineage: rows merged into each bucket this epoch
-        # (bucket == shuffle partition == file index; P8)
+        "batch_rows": sum(appended.values()),
+        "rows_written": sum(appended.values()) + sum(compacted.values()),
+        "dirty_buckets": sorted(appended.keys() | compacted.keys()),
+        "buckets_compacted": sorted(compact),
+        "compacted_rows": sum(compacted.values()),
+        # per-partition lineage (P8): rows merged into each bucket this
+        # epoch, counted from the delta files' bucket column
         "rows_merged_per_bucket": {
-            str(f["bucket"]): int(f["rows"]) for f in new_delta},
+            str(b): n for b, n in sorted(appended.items())},
     }
     t_commit = time.monotonic()
     version = table.commit(epoch=epoch, keep_files=keep,

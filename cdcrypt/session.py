@@ -94,8 +94,13 @@ def get_spark(
                 b = b.config("spark.local.dir", local_dir)
         except OSError:
             pass
+        # One host, so reduce-side locality says nothing; left on, it makes
+        # a coalesce over an adaptive plan's shuffle group bucket
+        # partitions by location, interleaving the bucket ranges of the
+        # files it writes (table/lake.py coalesce_buckets).
         b = (b.config("spark.shuffle.compress", "false")
-             .config("spark.shuffle.spill.compress", "false"))
+             .config("spark.shuffle.spill.compress", "false")
+             .config("spark.shuffle.reduceLocality.enabled", "false"))
     if daemon_importable(master):
         b = b.config(DAEMON_CONF, "cdcrypt._pydaemon")
     for k, v in (extra_conf or {}).items():

@@ -7,8 +7,9 @@ driver in structured.py):
 
     read epoch files -> cluster by bucket (ONE exchange)
         -> resolve one final change per key (dedup + LWW, exchange reused)
+        -> coalesce to ~one bucket range per core (no shuffle)
         -> FieldTransform(encrypt text/tool, AAD=conv_id) on winners only
-        -> merge_upsert delta append (no shuffle) -> atomic epoch commit
+        -> merge_upsert range-file append (no shuffle) -> atomic epoch commit
         -> checkpoint JSON with per-partition lineage
 
 Delivery semantics: exactly-once. The lake commit records the epoch
@@ -53,6 +54,7 @@ from cdcrypt.table.lake import (
     LakeTable,
     LakeTableError,
     LakeTableNotFound,
+    coalesce_buckets,
     repartition_by_bucket,
 )
 
@@ -407,14 +409,16 @@ class IngestPipeline:
 
             scan -> Exchange(B, conv_id) -> resolve (NO exchange: the
             groupBy/window reuses the bucket clustering via subset
-            satisfaction) -> encrypt UDF (partitioning preserved) ->
-            plain per-bucket file write (NO exchange, NO partitionBy sort)
+            satisfaction) -> coalesce to ~one bucket range per core
+            (narrow, NO exchange) -> encrypt UDF once per range ->
+            plain file write per range (NO exchange, NO partitionBy sort)
 
-        ONE shuffle end-to-end per batch. Encryption runs AFTER resolution
-        so superseded/duplicate events never pay crypto. Side outputs (DLQ,
-        integrity anomalies, aligner state) land BEFORE the table commit:
-        a crash between them replays the batch, which overwrites them
-        idempotently."""
+        ONE shuffle end-to-end per batch, and ~cores (not B) tasks,
+        Python UDF invocations and files after it. Encryption runs AFTER
+        resolution so superseded/duplicate events never pay crypto. Side
+        outputs (DLQ, integrity anomalies, aligner state) land BEFORE the
+        table commit: a crash between them replays the batch, which
+        overwrites them idempotently."""
         if self.audit is not None:
             # crash-recovery: a staged snapshot pending at batch start is a
             # leftover from a run that died between staging and its audit
@@ -453,10 +457,10 @@ class IngestPipeline:
             anomalies.unpersist(blocking=False)
         if self.aligner is not None:
             df = self.aligner.align(spark, df, epoch)
-        resolved = resolve_batch(
+        resolved = coalesce_buckets(resolve_batch(
             repartition_by_bucket(df, self.bucket_count, self._bucket_by),
             self.merge_engine, self.agg_spec, list(self.key_cols),
-            self.resolver, self.salt_buckets)
+            self.resolver, self.salt_buckets), self.bucket_count)
         encryptor = self._encryptor()
         lineage = merge_upsert(
             spark, table, encryptor.apply(resolved), epoch,

@@ -3,12 +3,14 @@
 Layout (all paths relative to the table root)::
 
     _meta/v{N}.json      immutable snapshot: schema list + current schema id,
-                         partition spec, file manifest (path, bucket, schema_id,
-                         rows), committed_epoch, lineage metrics, parent version
+                         partition spec, file manifest (path, bucket_lo,
+                         bucket_hi, schema_id, rows), committed_epoch,
+                         lineage metrics, parent version
     _meta/current        text file holding "N"; swapped atomically (os.replace)
-    data/v{N}/bucket=K/  data files written by snapshot N (copy-on-write:
-                         a snapshot's manifest mixes its own new files with
-                         carried-over files from parent snapshots)
+    data/v{N}-{token}/   data files written by snapshot N, one per bucket
+                         range (copy-on-write: a snapshot's manifest mixes
+                         its own new files with carried-over files from
+                         parent snapshots)
 
 Semantics ported from the Iceberg spec (public), not from any runtime:
 - snapshot isolation: readers resolve ``current`` once and read only that
@@ -34,13 +36,16 @@ Semantics ported from the Iceberg spec (public), not from any runtime:
   and later adding a new ``c`` does NOT resurrect old values (different
   ids — the Iceberg re-add test);
 - manifest-level partition pruning: ``read(buckets=...)`` selects files by
-  the manifest's bucket entries — no directory listing, no Spark partition
+  the manifest's bucket ranges — no directory listing, no Spark partition
   discovery, mirroring Iceberg's scan planning.
 
-Partition spec: ``bucket(conv_id, B)`` = ``pmod(xxhash64(conv_id), B)``,
-computed in-JVM on write and recomputed on read when needed (cheaper than
-storing it; files do not contain the bucket column, the directory name and
-manifest do).
+Partition spec: ``bucket(conv_id, B)`` = ``pmod(murmur3(conv_id), B)``,
+computed in-JVM on write. A data file covers a bucket range
+``[bucket_lo, bucket_hi]`` (about one range per core per write, see
+:func:`coalesce_buckets`) and stores each row's bucket as a physical
+``bucket`` column, outside the table schema; the range comes from that
+column's values. A manifest entry written before ranges existed carries
+``bucket: k`` and reads as ``[k, k]`` (:func:`file_bucket_range`).
 
 Single-writer assumption (one streaming ingest job), like a Connect task
 owning its topic partitions.
@@ -77,8 +82,8 @@ def bucket_col(bucket_count: int, col: str = DEFAULT_BUCKET_BY):
     """bucket(col) = pmod(murmur3(col), B) — deliberately the SAME
     function Spark's HashPartitioning uses, so ``df.repartition(B,
     col(<col>))`` yields partition_id == bucket. Writers then emit plain
-    parquet (no partitionBy => no per-task sort of wide rows) and the
-    manifest derives each file's bucket from its ``part-NNNNN`` index.
+    parquet (no partitionBy => no per-task sort of wide rows), each
+    file holding the contiguous partitions of one bucket range.
     Verified in tests: spark_partition_id() == bucket_col for all rows."""
     return F.pmod(F.hash(F.col(col)), F.lit(bucket_count)).cast("int")
 
@@ -88,6 +93,32 @@ def repartition_by_bucket(df: DataFrame, bucket_count: int,
     """Cluster rows so partition id == bucket id (one exchange; downstream
     groupBy(col, ...) reuses it — subset clustering satisfaction)."""
     return df.repartition(bucket_count, F.col(col))
+
+
+def coalesce_buckets(df: DataFrame, bucket_count: int) -> DataFrame:
+    """Group a bucket-clustered frame into ``min(defaultParallelism,
+    bucket_count)`` bucket ranges, so the stages after it (the encrypt
+    UDF, a sort, the file write) run once per range, not once per
+    bucket. ``coalesce`` is narrow: no exchange is added, and a frame
+    already that narrow is left as it is. Over a fresh shuffle it groups
+    contiguous partitions; over a cached parent it groups by block
+    locality and may interleave buckets, so writers take a file's range
+    from its own rows, never from its position."""
+    width = df.sparkSession.sparkContext.defaultParallelism
+    return df.coalesce(max(1, min(width, bucket_count)))
+
+
+def file_bucket_range(f: dict) -> tuple[int, int]:
+    """A manifest entry's ``[bucket_lo, bucket_hi]`` under the spec it
+    was written with; a one-bucket entry ``bucket: k`` is ``[k, k]``."""
+    if "bucket_lo" in f:
+        return f["bucket_lo"], f["bucket_hi"]
+    return f["bucket"], f["bucket"]
+
+
+def _live_delta(f: dict) -> bool:
+    """An appended change file whose rows no base file holds yet."""
+    return f.get("kind", "base") == "delta" and not f.get("compacted")
 
 
 class LakeTableError(RuntimeError):
@@ -165,37 +196,32 @@ class LakeTable:
                  "bucket_count": snap["bucket_count"]}], 0
 
     @classmethod
-    def _file_bucket_filter(cls, snap: dict, buckets: set[int]):
-        """Predicate: could this manifest file contain a key whose bucket
-        under the snapshot's DEFAULT spec is in ``buckets``?
+    def file_buckets(cls, snap: dict):
+        """Map a manifest entry to the buckets, under the snapshot's
+        DEFAULT spec, whose keys it may hold (a frozenset).
 
         A key k has bucket h(k) % B under a B-bucket spec. A file written
-        under an older spec with count Bo and bucket bo can contain a key
-        of current bucket bc iff an integer hashes to both residues, i.e.
-        iff bo ≡ bc (mod gcd(B, Bo)) — exact pruning when Bo divides B,
-        graceful no-pruning (g=1, everything matches) for unrelated
-        counts, and plain equality for same-spec files. Spec-id-aware
-        manifest pruning is the Iceberg partition-evolution scan contract."""
+        under a spec with count Bo over buckets [lo, hi] can hold a key of
+        current bucket bc iff some bo in [lo, hi] has bo ≡ bc (mod
+        gcd(B, Bo)) — the range itself for same-spec files, exact residue
+        classes when Bo divides B, and graceful no-pruning (g=1, every
+        bucket) for unrelated counts. Spec-id-aware manifest pruning is
+        the Iceberg partition-evolution scan contract."""
         import math
 
         specs, default_id = cls._partition_specs(snap)
-        cur_count = next(s["bucket_count"] for s in specs
-                         if s["id"] == default_id)
-        allowed: dict[int, set[int]] = {}
-        for s in specs:
-            g = math.gcd(cur_count, s["bucket_count"])
-            allowed[s["id"]] = {b % g for b in buckets}
+        counts = {s["id"]: s["bucket_count"] for s in specs}
+        cur = counts[default_id]
 
-        def match(f: dict) -> bool:
+        def held(f: dict) -> frozenset:
             sid = f.get("spec_id", default_id)
-            res = allowed.get(sid)
-            if res is None:
+            if sid not in counts:
                 raise LakeTableError(f"file spec id {sid} not in snapshot")
-            g = math.gcd(cur_count,
-                         next(s["bucket_count"] for s in specs
-                              if s["id"] == sid))
-            return f["bucket"] % g in res
-        return match
+            lo, hi = file_bucket_range(f)
+            g = math.gcd(cur, counts[sid])
+            res = {b % g for b in range(lo, min(hi, lo + g - 1) + 1)}
+            return frozenset(b for b in range(cur) if b % g in res)
+        return held
 
     def evolve_partitioning(self, bucket_count: int) -> int:
         """Metadata-only partition evolution (Iceberg spec §Partition
@@ -330,6 +356,10 @@ class LakeTable:
                agg_spec: dict | None = None,
                bloom_cols: tuple = ()) -> "LakeTable":
         names = {f.name for f in schema.fields}
+        if "bucket" in names:
+            raise LakeTableError(
+                "column name 'bucket' is reserved (data files store each "
+                "row's bucket id under it)")
         missing = [c for c in [bucket_by, *key_cols] if c not in names]
         if missing:
             raise LakeTableError(
@@ -462,7 +492,8 @@ class LakeTable:
         until publish.
 
         ``keep_files``/``new_files``: manifest entries
-        ``{path, bucket, schema_id, rows}`` (paths relative to root).
+        ``{path, bucket_lo, bucket_hi, schema_id, rows}`` (paths relative
+        to root; a legacy entry's ``bucket: k`` stands for ``[k, k]``).
 
         A changed ``new_schema`` without explicit ``new_schema_ids`` is the
         ADD-COLUMN path (merge_upsert): fields keep their id by name-match
@@ -676,7 +707,7 @@ class LakeTable:
                         f"{pair[0]} -> {pair[1]} (allowed: {sorted(SAFE_WIDEN)})")
                 dt = new_dt
             name = renames.get(f.name, f.name)
-            if name in taken:
+            if name in taken or name == "bucket":
                 raise LakeTableError(f"rename collision on '{name}'")
             taken.add(name)
             fields.append(SF(name, dt, f.nullable))
@@ -684,9 +715,10 @@ class LakeTable:
         next_fid = self._next_field_id(self.snapshot)
         for a in adds:
             f = a if isinstance(a, SF) else SF(a[0], a[1], True)
-            if f.name in taken:
+            if f.name in taken or f.name == "bucket":
                 raise LakeTableError(
-                    f"add collision: column '{f.name}' already exists")
+                    f"add collision: column '{f.name}' already exists "
+                    "or is reserved")
             taken.add(f.name)
             fields.append(SF(f.name, f.dataType, True))
             ids.append(next_fid)
@@ -742,7 +774,8 @@ class LakeTable:
         snap = self.snapshot if version is None else self.snapshot_at(version)
         out = snap["files"]
         if buckets is not None:
-            out = list(filter(self._file_bucket_filter(snap, buckets), out))
+            held = self.file_buckets(snap)
+            out = [f for f in out if not held(f).isdisjoint(buckets)]
         if key_range:
             exact = {c: lo for c, (lo, hi) in key_range.items()
                      if lo is not None and lo == hi}
@@ -891,8 +924,7 @@ class LakeTable:
         would add empty Python tasks to every read of a table that has
         never compacted, and to every copy-on-write merge."""
         base_fs = [f for f in files if f.get("kind", "base") == "base"]
-        delta_fs = [f for f in files if f.get("kind", "base") == "delta"
-                    and not f.get("compacted")]
+        delta_fs = [f for f in files if _live_delta(f)]
         delta = self.scan_projected(spark, delta_fs, snap, target_schema,
                                     changelog=True)
         if not base_fs:
@@ -931,11 +963,11 @@ class LakeTable:
 
         ``buckets`` selects rows whose key buckets into the given ids
         under the snapshot's DEFAULT spec. Manifest pruning is file-level
-        and spec-aware (gcd residue rule); when the selection includes
-        files written under an OLDER partition spec, those files can
-        carry co-located rows of other current buckets, so a row-level
-        bucket predicate is applied on top. Single-spec tables never need
-        the predicate and keep the pure-metadata pruning plan.
+        and spec-aware (:meth:`file_buckets`); when a selected file may
+        hold a bucket outside the request — a bucket range that is not
+        inside it, or an older-spec file's co-located rows — a row-level
+        bucket predicate is applied on top. Files that hold only
+        requested buckets keep the pure-metadata pruning plan.
 
         One parquet read for ALL files of a kind regardless of schema id:
         the current schema is pushed as the read schema, so old files yield
@@ -961,37 +993,26 @@ class LakeTable:
         if key_range:
             keyset = set(snap.get("key_cols", DEFAULT_KEY_COLS))
             bad = set(key_range) - keyset
-            if bad and any(f.get("kind", "base") == "delta"
-                           and not f.get("compacted")
-                           for f in snap.get("files", [])):
+            if bad and any(map(_live_delta, snap.get("files", []))):
                 raise LakeTableError(
                     f"key_range supports key columns only, got {sorted(bad)}"
                     " (non-key ranges under merge-on-read would resolve "
                     "against partial version history; rewrite_clustered or"
                     " compact the table first)")
         fs = self.files(buckets, version, key_range=key_range)
-        base_fs = [f for f in fs if f.get("kind", "base") == "base"]
-        # log-only deltas (compacted=True) were folded into a base file by
-        # the commit that references them — they exist for the incremental
-        # change feed only, and reading them here would double-apply rows
-        delta_fs = [f for f in fs
-                    if f.get("kind", "base") == "delta"
-                    and not f.get("compacted")]
-
-        if not delta_fs:
-            df = self.scan_projected(spark, base_fs, snap)
-        else:
+        # a plain scan when no live delta is in scope: the change columns
+        # change_rows attaches to base rows are literals the select drops
+        df = self.change_rows(spark, fs, snap)
+        if any(map(_live_delta, fs)):
             from cdcrypt.operators.dedup import resolve_live
 
             df = resolve_live(
-                self.change_rows(spark, fs, snap),
-                snap.get("merge_engine", "lww"), snap.get("agg_spec"),
-                snap.get("key_cols", list(DEFAULT_KEY_COLS)),
-            ).select(*[f.name for f in snap_schema.fields])
+                df, snap.get("merge_engine", "lww"), snap.get("agg_spec"),
+                snap.get("key_cols", list(DEFAULT_KEY_COLS)))
+        df = df.select(*[f.name for f in snap_schema.fields])
         if buckets is not None:
-            _, default_spec = self._partition_specs(snap)
-            if any(f.get("spec_id", default_spec) != default_spec
-                   for f in fs):
+            held = self.file_buckets(snap)
+            if not all(held(f) <= buckets for f in fs):
                 df = df.where(
                     bucket_col(snap["bucket_count"],
                                snap.get("bucket_by", DEFAULT_BUCKET_BY))
@@ -1386,8 +1407,7 @@ class LakeTable:
                 snap.get("created_ms"),
                 lin.get("mode"), lin.get("batch_rows"),
                 lin.get("rows_written"), len(fs),
-                sum(1 for f in fs if f.get("kind", "base") == "delta"
-                    and not f.get("compacted")),
+                sum(map(_live_delta, fs)),
                 int(sum(f.get("rows", 0) for f in fs
                         if not f.get("compacted"))),
                 int(snap.get("schema_id", 0)),
@@ -1407,7 +1427,7 @@ class LakeTable:
         snapshot, with its recorded column bounds as JSON."""
         snap = (self.snapshot if version is None
                 else self.snapshot_at(version))
-        rows = [(f["path"], int(f.get("bucket", -1)),
+        rows = [(f["path"], *file_bucket_range(f),
                  f.get("kind", "base"), bool(f.get("compacted", False)),
                  int(f.get("schema_id", 0)), int(f.get("spec_id", 0)),
                  int(f.get("rows", 0)),
@@ -1415,7 +1435,8 @@ class LakeTable:
                 for f in snap.get("files", [])]
         return spark.createDataFrame(
             rows,
-            "path string, bucket int, kind string, compacted boolean, "
+            "path string, bucket_lo int, bucket_hi int, kind string, "
+            "compacted boolean, "
             "schema_id int, spec_id int, rows long, bounds string")
 
     # ---------- consumers ----------

@@ -43,9 +43,11 @@ callable.
 from __future__ import annotations
 
 import base64
+import functools
 import hashlib
 import hmac
 import json
+import math
 import os
 from dataclasses import dataclass
 
@@ -258,12 +260,57 @@ def _context_b64(context: dict[str, str] | None) -> str | None:
     return base64.b64encode(blob).decode("ascii")
 
 
+def _probable_prime(rng, bits: int) -> int:
+    """A ``bits``-bit probable prime from ``rng`` (trial division, then
+    Fermat to four bases), with the top two bits set so that two of them
+    make a 2*bits-bit modulus."""
+    small = math.prod(p for p in range(3, 2000)
+                      if all(p % q for q in range(2, p)))
+    while True:
+        n = rng.getrandbits(bits) | (3 << (bits - 2)) | 1
+        if math.gcd(n, small) == 1 and all(
+                pow(a, n - 1, n) == 1 for a in (2, 3, 5, 7)):
+            return n
+
+
+@functools.lru_cache(maxsize=None)
+def _fake_rsa_pems(name: str) -> tuple[bytes, bytes]:
+    """(public, private) PEM of the fake's RSA-2048 key ``name``, derived
+    from the name alone: every process holding a pickled fake derives
+    the same pair, as it does the symmetric keys. Test double only."""
+    import random
+
+    from cryptography.hazmat.primitives import serialization
+    from cryptography.hazmat.primitives.asymmetric import rsa
+
+    rng = random.Random(hashlib.sha256(
+        b"fake-vault-transit-rsa-v1" + name.encode("utf-8")).digest())
+    e = 65537
+    while True:
+        p, q = _probable_prime(rng, 1024), _probable_prime(rng, 1024)
+        if p != q and math.gcd(e, (p - 1) * (q - 1)) == 1:
+            break
+    d = pow(e, -1, (p - 1) * (q - 1))
+    key = rsa.RSAPrivateNumbers(
+        p, q, d, rsa.rsa_crt_dmp1(d, p), rsa.rsa_crt_dmq1(d, q),
+        rsa.rsa_crt_iqmp(p, q), rsa.RSAPublicNumbers(e, p * q)
+    ).private_key()
+    priv = key.private_bytes(
+        serialization.Encoding.PEM, serialization.PrivateFormat.PKCS8,
+        serialization.NoEncryption())
+    pub = key.public_key().public_bytes(
+        serialization.Encoding.PEM,
+        serialization.PublicFormat.SubjectPublicKeyInfo)
+    return pub, priv
+
+
 class FakeVaultTransitServer:
     """In-process conformance double for the Transit REST surface.
 
-    Real crypto (AES-256-GCM under per-key-name server-side keys derived
-    deterministically, so any executor process the instance pickles into
-    can serve decrypts), Vault-shaped ``vault:v1:<b64>`` ciphertexts,
+    Real crypto (AES-256-GCM under per-key-name server-side keys, and an
+    RSA-2048 pair per key name, all derived deterministically from the
+    name, so any executor process the instance pickles into can serve
+    decrypts of either kind), Vault-shaped ``vault:v1:<b64>`` ciphertexts,
     context enforced as AAD (wrong context -> per-item ``error`` object,
     exactly what a derived-key Transit mount returns). Every request is
     recorded as ``(method, path, body)`` for wire-shape assertions.
@@ -278,7 +325,6 @@ class FakeVaultTransitServer:
         self.fail_marker = fail_marker
         self.force_status: tuple[int, dict] | None = None
         self._deleted: set[str] = set()
-        self._asym_pems: dict[str, tuple[bytes, bytes]] = {}
 
     # -- the injectable callable
 
@@ -328,7 +374,11 @@ class FakeVaultTransitServer:
         try:
             return AESGCM(self._key(name)).decrypt(raw[:12], raw[12:], aad)
         except InvalidTag:
-            raise ValueError("invalid ciphertext") from None
+            if len(raw) != 256:
+                raise ValueError("invalid ciphertext") from None
+        # an RSA-2048 key's OAEP ciphertext is 256 bytes and fails the AES
+        # tag check; the key type comes from the token, not from state
+        return self._asym_open(name, raw)
 
     # -- routes
 
@@ -354,11 +404,7 @@ class FakeVaultTransitServer:
                         {"ciphertext": self._seal(name, pt, aad),
                          "key_version": 1})
                 else:
-                    tok = it["ciphertext"]
-                    if name in self._asym_pems:
-                        pt = self._asym_open(name, tok)
-                    else:
-                        pt = self._open(name, tok, aad)
+                    pt = self._open(name, it["ciphertext"], aad)
                     results.append(
                         {"plaintext":
                          base64.b64encode(pt).decode("ascii")})
@@ -381,30 +427,11 @@ class FakeVaultTransitServer:
 
     # -- asymmetric (rsa-2048 transit keys)
 
-    def _asym_pair(self, name: str) -> tuple[bytes, bytes]:
-        if name not in self._asym_pems:
-            from cryptography.hazmat.primitives import serialization
-            from cryptography.hazmat.primitives.asymmetric import rsa
-            key = rsa.generate_private_key(public_exponent=65537,
-                                           key_size=2048)
-            priv = key.private_bytes(
-                serialization.Encoding.PEM,
-                serialization.PrivateFormat.PKCS8,
-                serialization.NoEncryption())
-            pub = key.public_key().public_bytes(
-                serialization.Encoding.PEM,
-                serialization.PublicFormat.SubjectPublicKeyInfo)
-            self._asym_pems[name] = (pub, priv)
-        return self._asym_pems[name]
-
-    def _asym_open(self, name: str, token: str) -> bytes:
+    def _asym_open(self, name: str, raw: bytes) -> bytes:
         from cryptography.hazmat.primitives import hashes, serialization
         from cryptography.hazmat.primitives.asymmetric import padding
-        if not token.startswith("vault:v1:"):
-            raise ValueError("invalid ciphertext: no vault:v1: prefix")
-        raw = base64.b64decode(token[len("vault:v1:"):])
         priv = serialization.load_pem_private_key(
-            self._asym_pair(name)[1], password=None)
+            _fake_rsa_pems(name)[1], password=None)
         try:
             return priv.decrypt(raw, padding.OAEP(
                 mgf=padding.MGF1(hashes.SHA256()),
@@ -416,7 +443,7 @@ class FakeVaultTransitServer:
         gone = self._check_key(name)
         if gone:
             return gone
-        pub, _priv = self._asym_pair(name)
+        pub, _priv = _fake_rsa_pems(name)
         return 200, {"data": {
             "type": "rsa-2048",
             "latest_version": 1,

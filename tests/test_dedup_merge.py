@@ -108,18 +108,30 @@ def test_merge_stale_guard_and_delete(spark, tmp_path):
 
 
 def test_merge_only_rewrites_dirty_buckets(spark, tmp_path):
+    from cdcrypt.table.lake import file_bucket_range
+
     root = str(tmp_path / "t2")
     table = LakeTable.create(root, BASE_TABLE_SCHEMA, bucket_count=16)
     merge_upsert(spark, table, resolve_latest_window(events_df(spark)), epoch=0)
-    files_v1 = {f["path"] for f in table.snapshot["files"]}
-    # touch ONE key -> only its bucket rewritten, other files carried over
+    files_v1 = {f["path"]: f for f in table.snapshot["files"]}
+    # touch ONE key -> only the file whose bucket range holds its bucket
+    # is rewritten, other files carried over
     one = spark.createDataFrame(
         [("U", "A", 0, 100, 1, "user", "a-new", None, TS)], COLS
     )
     lineage = merge_upsert(spark, table, one, epoch=1)
-    assert lineage["buckets_rewritten"] == 1
+    [dirty] = lineage["dirty_buckets"]
     files_v2 = {f["path"] for f in table.snapshot["files"]}
-    carried = files_v1 & files_v2
+    dropped = [f for p, f in files_v1.items() if p not in files_v2]
+    assert dropped == [f for f in files_v1.values()
+                       if file_bucket_range(f)[0] <= dirty
+                       <= file_bucket_range(f)[1]]
+    # the rewrite holds exactly the buckets of the file it replaced
+    old_buckets = {r["bucket"] for r in spark.read.parquet(
+        *[f"{root}/{f['path']}" for f in dropped]).collect()}
+    assert set(map(int, lineage["rows_merged_per_bucket"])) == old_buckets
+    assert lineage["buckets_rewritten"] == len(old_buckets)
+    carried = set(files_v1) & files_v2
     assert carried  # clean buckets kept their old files (copy-on-write)
 
 
@@ -276,8 +288,9 @@ def test_mor_compaction_keeps_what_read_returns(spark, tmp_path):
 def test_rewrite_files_hold_their_bucket_off_key(spark, tmp_path, mode):
     """A table bucketed by a non-key column: every base file a compaction
     or a copy-on-write merge writes holds only rows of its manifest
-    bucket, so a bucket-pruned read returns exactly that bucket's rows."""
-    from cdcrypt.table.lake import bucket_col
+    bucket range, each row's stored ``bucket`` is its bucket, and a
+    bucket-pruned read returns exactly that bucket's rows."""
+    from cdcrypt.table.lake import bucket_col, file_bucket_range
 
     t = LakeTable.create(
         str(tmp_path / mode),
@@ -295,6 +308,10 @@ def test_rewrite_files_hold_their_bucket_off_key(spark, tmp_path, mode):
     assert bases
     for f in bases:
         rows = spark.read.parquet(f"{t.root}/{f['path']}")
-        assert rows.where(bucket_col(4, "u") != f["bucket"]).count() == 0
-    truth = t.read(spark).where(bucket_col(4, "u") == 0).count()
-    assert t.read(spark, buckets={0}).count() == truth
+        lo, hi = file_bucket_range(f)
+        assert rows.where(~bucket_col(4, "u").between(lo, hi)
+                          | (F.col("bucket") != bucket_col(4, "u"))
+                          ).count() == 0
+    for b in range(4):
+        truth = t.read(spark).where(bucket_col(4, "u") == b).count()
+        assert t.read(spark, buckets={b}).count() == truth

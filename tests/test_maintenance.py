@@ -10,6 +10,7 @@ rewrite, epoch preservation (exactly-once resume), and the staged
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -60,14 +61,16 @@ def test_rewrite_bounds_prune_nonkey_range_scan(spark, tmp_path):
     with pytest.raises(LakeTableError, match="key columns only"):
         t.read(spark, key_range={"op_seq": (0, 10)})
     rewrite_clustered(spark, t, ["op_seq"], max_records_per_file=40)
-    # bin-packing: buckets split into several contiguous sorted chunks
-    per_bucket: dict[int, list] = {}
+    # bin-packing: bucket ranges split into several contiguous sorted
+    # chunks; the chunks of one range share its write task's part index
+    per_range: dict[str, list] = {}
     for f in t.files():
         if f.get("kind", "base") == "base":
-            per_bucket.setdefault(f["bucket"], []).append(f)
-    assert any(len(fs) > 1 for fs in per_bucket.values())
-    # within a bucket the sort-column bounds are disjoint (clustered)
-    for fs in per_bucket.values():
+            part = os.path.basename(f["path"]).split("-")[1]
+            per_range.setdefault(part, []).append(f)
+    assert any(len(fs) > 1 for fs in per_range.values())
+    # within a range the sort-column bounds are disjoint (clustered)
+    for fs in per_range.values():
         spans = sorted(f["bounds"]["op_seq"] for f in fs)
         for (_, hi), (lo2, _) in zip(spans, spans[1:]):
             assert hi <= lo2

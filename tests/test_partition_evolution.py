@@ -15,7 +15,9 @@ from pyspark.sql.types import (
 )
 
 from cdcrypt.operators.merge import merge_upsert
-from cdcrypt.table.lake import LakeTable, LakeTableError, bucket_col
+from cdcrypt.table.lake import (
+    LakeTable, LakeTableError, bucket_col, file_bucket_range,
+)
 
 SCHEMA = StructType([
     StructField("conv_id", StringType(), False),
@@ -73,10 +75,12 @@ def test_spec_aware_bucket_pruning_is_exact_on_growth(spark, tmp_path):
         got = {(r["conv_id"], r["turn_idx"])
                for r in t.read(spark, buckets={b}).collect()}
         assert got == want, f"bucket {b}"
-        # pruning really prunes: only the b%4 residue class of old-spec
-        # files is selected
+        # pruning really prunes: only old-spec files whose bucket range
+        # reaches the b%4 residue class are selected
         old = [f for f in t.files(buckets={b}) if f.get("spec_id") == 0]
-        assert all(f["bucket"] % 4 == b % 4 for f in old)
+        for f in old:
+            lo, hi = file_bucket_range(f)
+            assert b % 4 in {x % 4 for x in range(lo, hi + 1)}
 
 
 def test_cow_merge_across_mixed_specs(spark, tmp_path):
@@ -122,7 +126,8 @@ def test_mor_compaction_migrates_old_spec_files(spark, tmp_path):
     # no file claims a bucket beyond its spec's count
     counts = {s["id"]: s["bucket_count"]
               for s in t.snapshot["partition_specs"]}
-    assert all(f["bucket"] < counts[f.get("spec_id")] for f in t.files())
+    assert all(0 <= file_bucket_range(f)[0] <= file_bucket_range(f)[1]
+               < counts[f.get("spec_id")] for f in t.files())
 
 
 def test_time_travel_uses_the_old_spec(spark, tmp_path):

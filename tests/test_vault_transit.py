@@ -151,6 +151,29 @@ class TestTransportOverFakeServer:
             algorithm=hashes.SHA256(), label=None))
         assert t.asym_unwrap(wrapped, "rsa-key") == dek
 
+    def test_pickled_fake_opens_asymmetric_without_key_read(self):
+        """The fake's RSA pair comes from the key name, so a fake pickled
+        into another process (an executor) that never served the key read
+        opens the asymmetric wrap, and symmetric tokens still open."""
+        import pickle
+
+        from cryptography.hazmat.primitives import hashes, serialization
+        from cryptography.hazmat.primitives.asymmetric import padding
+
+        pem = VaultTransitTransport(
+            FakeVaultTransitServer().http).fetch_public_pem("rsa-key")
+        dek = os.urandom(32)
+        wrapped = serialization.load_pem_public_key(pem).encrypt(
+            dek, padding.OAEP(mgf=padding.MGF1(hashes.SHA256()),
+                              algorithm=hashes.SHA256(), label=None))
+        shipped = pickle.loads(pickle.dumps(FakeVaultTransitServer()))
+        assert not any(m == "GET" for m, _, _ in shipped.requests)
+        t = VaultTransitTransport(shipped.http)
+        assert t.asym_unwrap(wrapped, "rsa-key") == dek
+        sym = VaultTransitTransport(FakeVaultTransitServer().http)
+        plain, sealed = sym.generate_data_key("rsa-key")
+        assert t.unwrap(sealed, "rsa-key", None) == plain
+
     def test_deterministic_dek_refused_typed(self):
         t = VaultTransitTransport(FakeVaultTransitServer().http)
         with pytest.raises(ClientErrorException, match="deterministic"):
