@@ -176,19 +176,35 @@ def _partial_agg(df: DataFrame, key_cols=None) -> DataFrame:
     return df.groupBy(*keys).agg(*aggs), keys, payload
 
 
-def _partial_live_row(keys: list[str], payload: list[str]):
-    """Projection of the aggregated frame to the resolved LIVE row:
-    per-column value iff its setter is newer than the newest delete."""
+def _partial_rows(agg: DataFrame, keys: list[str], payload: list[str]):
+    """The aggregated frame's resolved LIVE row (per-column value iff its
+    setter is newer than the newest delete) and its tombstone (null
+    payload at the newest delete), as two struct columns."""
     cutoff = F.coalesce(F.col("_d.op_seq"), F.lit(-(1 << 62)))
-    cols = [*[F.col(k) for k in keys]]
+    live = [*[F.col(k) for k in keys]]
     for c in payload:
         w = F.col(f"_w_{c}")
-        cols.append(F.when(w.isNotNull() & (w["op_seq"] > cutoff),
+        live.append(F.when(w.isNotNull() & (w["op_seq"] > cutoff),
                            w["v"]).alias(c))
-    cols += [F.lit("U").alias("op"),
+    live += [F.lit("U").alias("op"),
              F.col("_l.op_seq").alias("op_seq"),
              F.col("_l.epoch").alias("epoch")]
-    return cols
+    dead = [*[F.col(k) for k in keys],
+            *[F.lit(None).cast(agg.schema[f"_w_{c}"].dataType[
+                "v"].dataType).alias(c) for c in payload],
+            F.lit("D").alias("op"),
+            F.coalesce(F.col("_d.op_seq"), F.col("_l.op_seq")).alias("op_seq"),
+            F.coalesce(F.col("_d.epoch"), F.col("_l.epoch")).alias("epoch")]
+    return F.struct(*live), F.struct(*dead)
+
+
+def _key_rows(agg: DataFrame, *rows) -> DataFrame:
+    """Per key of ``agg``, each of the struct columns ``rows`` that is not
+    NULL, as output rows: one narrow projection of the one aggregation,
+    so a key's live row and its tombstone need no cached or re-scanned
+    ``agg``."""
+    return agg.select(F.inline(F.filter(F.array(*rows),
+                                        lambda r: r.isNotNull())))
 
 
 def resolve_partial_agg(df: DataFrame, key_cols=None) -> DataFrame:
@@ -210,15 +226,8 @@ def resolve_partial_agg(df: DataFrame, key_cols=None) -> DataFrame:
     live = F.col("_l").isNotNull() & (
         F.col("_d").isNull()
         | (F.col("_l.op_seq") > F.col("_d.op_seq")))
-    cols = _partial_live_row(keys, payload)
-    dead = [*[F.col(k) for k in keys],
-            *[F.lit(None).cast(agg.schema[f"_w_{c}"].dataType[
-                "v"].dataType).alias(c) for c in payload],
-            F.lit("D").alias("op"),
-            F.coalesce(F.col("_d.op_seq"), F.col("_l.op_seq")).alias("op_seq"),
-            F.coalesce(F.col("_d.epoch"), F.col("_l.epoch")).alias("epoch")]
-    return agg.select(*[F.when(live, F.struct(*cols)).otherwise(
-        F.struct(*dead)).alias("_r")]).select("_r.*")
+    live_row, dead_row = _partial_rows(agg, keys, payload)
+    return _key_rows(agg, F.when(live, live_row).otherwise(dead_row))
 
 
 AGG_FNS = ("sum", "max", "min", "last_non_null")
@@ -280,7 +289,7 @@ def _agg_base(df: DataFrame, agg_spec, key_cols):
                  F.lit("D").alias("op"),
                  F.col("_cut").alias("op_seq"),
                  F.lit(-1).cast("long").alias("epoch")]
-    return agg, live_cols, dead_cols
+    return agg, F.struct(*live_cols), F.struct(*dead_cols)
 
 
 def resolve_aggregate(df: DataFrame, agg_spec=None,
@@ -293,10 +302,9 @@ def resolve_aggregate(df: DataFrame, agg_spec=None,
     caller's filter. Deletes RESET the accumulator (contributions at or
     below the newest delete's op_seq drop) — unlike Paimon, which needs
     retract functions to honor deletes at all."""
-    agg, live_cols, dead_cols = _agg_base(df, agg_spec, key_cols)
-    live = F.col("_l").isNotNull()
-    return agg.select(F.when(live, F.struct(*live_cols)).otherwise(
-        F.struct(*dead_cols)).alias("_r")).select("_r.*")
+    agg, live_row, dead_row = _agg_base(df, agg_spec, key_cols)
+    return _key_rows(agg, F.when(F.col("_l").isNotNull(), live_row)
+                     .otherwise(dead_row))
 
 
 def resolve_aggregate_update(df: DataFrame, agg_spec=None,
@@ -305,11 +313,9 @@ def resolve_aggregate_update(df: DataFrame, agg_spec=None,
     the partial-aggregate row per live key PLUS the key's newest delete
     tombstone (the read/compaction resolver needs the cutoff — same
     contract as :func:`resolve_partial_update`)."""
-    agg, live_cols, dead_cols = _agg_base(df, agg_spec, key_cols)
-    agg = agg.persist()
-    live = agg.where(F.col("_l").isNotNull()).select(*live_cols)
-    dead = agg.where(F.col("_cut").isNotNull()).select(*dead_cols)
-    return live.unionByName(dead)
+    agg, live_row, dead_row = _agg_base(df, agg_spec, key_cols)
+    return _key_rows(agg, F.when(F.col("_l").isNotNull(), live_row),
+                     F.when(F.col("_cut").isNotNull(), dead_row))
 
 
 def resolve_partial_update(df: DataFrame, key_cols=None) -> DataFrame:
@@ -317,21 +323,11 @@ def resolve_partial_update(df: DataFrame, key_cols=None) -> DataFrame:
     resolved live row per key PLUS the key's newest delete tombstone —
     both must land in the delta so the read/compaction resolver sees the
     delete cutoff (collapsing them would let a pre-delete base column
-    leak through). Built as two projections of one aggregation."""
+    leak through). Both come from one aggregation in one projection."""
     agg, keys, payload = _partial_agg(df, key_cols)
-    agg = agg.persist()
-    live = agg.where(F.col("_l").isNotNull()).select(
-        *_partial_live_row(keys, payload))
-    null_payload = [
-        F.lit(None).cast(
-            agg.schema[f"_w_{c}"].dataType["v"].dataType).alias(c)
-        for c in payload]
-    dead = agg.where(F.col("_d").isNotNull()).select(
-        *[F.col(k) for k in keys], *null_payload,
-        F.lit("D").alias("op"),
-        F.col("_d.op_seq").alias("op_seq"),
-        F.col("_d.epoch").alias("epoch"))
-    return live.unionByName(dead)
+    live_row, dead_row = _partial_rows(agg, keys, payload)
+    return _key_rows(agg, F.when(F.col("_l").isNotNull(), live_row),
+                     F.when(F.col("_d").isNotNull(), dead_row))
 
 
 # lww batch strategies (``IngestPipeline.resolver``); all three give the

@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdcrypt.operators.merge import _staging_dir, rewrite_buckets
-from cdcrypt.table.lake import LakeTable, LakeTableError
+from cdcrypt.table.lake import LakeTable, LakeTableError, _live_delta
 
 # dtypes a z-order dimension may have: anything with a meaningful linear
 # order under cast-to-double. Strings/binary hash away their locality and
@@ -188,21 +188,17 @@ def rewrite_clustered(
         max_records_per_file=max_records_per_file, timings=timings)
 
     # keep uncompacted deltas as log-only feed history; drop replaced bases
-    keep = [dict(f, compacted=True)
-            if f.get("kind", "base") == "delta" and not f.get("compacted")
-            else f
-            for f in snap["files"] if f.get("kind", "base") == "delta"]
+    keep = [dict(f, compacted=True) if _live_delta(f) else f
+            for f in snap["files"] if f["kind"] == "delta"]
 
-    old_files = snap["files"]
     lineage = {
         "mode": "rewrite",
         "sort_by": sort_by,
         "layout": layout,
         "batch_rows": 0,
         "rows_written": sum(per_bucket.values()),
-        "files_before": len([f for f in old_files
-                             if f.get("kind", "base") == "base"
-                             or not f.get("compacted")]),
+        "files_before": sum(f["kind"] == "base" or _live_delta(f)
+                            for f in snap["files"]),
         "files_after": len(new_files),
         "max_records_per_file": max_records_per_file,
     }

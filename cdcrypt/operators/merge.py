@@ -191,8 +191,8 @@ def _write_bucketed(
             columns=["bucket"]).column("bucket").value_counts().to_pylist()}
         per_bucket.update(counts)
         entry = {"path": os.path.relpath(p, root), "bucket_lo": min(counts),
-                 "bucket_hi": max(counts), "schema_id": None, "rows": nrows,
-                 "kind": kind}
+                 "bucket_hi": max(counts), "schema_id": None,
+                 "spec_id": None, "rows": nrows, "kind": kind}
         bounds = _footer_bounds(md, stats_cols)
         if bounds:
             entry["bounds"] = bounds

@@ -44,8 +44,24 @@ computed in-JVM on write. A data file covers a bucket range
 ``[bucket_lo, bucket_hi]`` (about one range per core per write, see
 :func:`coalesce_buckets`) and stores each row's bucket as a physical
 ``bucket`` column, outside the table schema; the range comes from that
-column's values. A manifest entry written before ranges existed carries
-``bucket: k`` and reads as ``[k, k]`` (:func:`file_bucket_range`).
+column's values.
+
+Manifest shape: every snapshot in memory carries ``format``, ``version``,
+``parent``, ``schema_id``, ``schemas`` (each with per-field ``ids``),
+``next_field_id``, ``partition_spec``, ``partition_specs``,
+``default_spec_id``, ``bucket_by``, ``bucket_count``, ``key_cols``,
+``merge_engine``, ``agg_spec``, ``bloom_cols``, ``files``,
+``committed_epoch``, ``lineage`` and ``created_ms``. Every manifest entry
+carries ``path``, ``bucket_lo``, ``bucket_hi``, ``kind`` ('base' or
+'delta'), ``schema_id``, ``spec_id``, ``rows`` and ``bounds`` (per-column
+[min, max], possibly empty); ``compacted: true`` (a log-only delta) and
+``bloom`` (a sidecar path) are present only where they apply. Snapshots
+written by older versions lack some of these keys: no ``bucket_by``,
+``key_cols`` or ``merge_engine``, no partition specs, no field ids,
+one-bucket ``bucket: k`` entries, entries with no ``kind``, ``spec_id``
+or ``bounds``. :func:`_canonical` upgrades them where a snapshot enters
+memory and where ``commit`` receives entries, by adding the missing keys
+only; nothing else in the table layer spells a default.
 
 Single-writer assumption (one streaming ingest job), like a Connect task
 owning its topic partitions.
@@ -101,7 +117,8 @@ def coalesce_buckets(df: DataFrame, bucket_count: int) -> DataFrame:
     UDF, a sort, the file write) run once per range, not once per
     bucket. ``coalesce`` is narrow: no exchange is added, and a frame
     already that narrow is left as it is. Over a fresh shuffle it groups
-    contiguous partitions; over a cached parent it groups by block
+    contiguous partitions when reduce-side shuffle locality is off (as
+    ``session.get_spark`` sets it); over a cached parent it groups by block
     locality and may interleave buckets, so writers take a file's range
     from its own rows, never from its position."""
     width = df.sparkSession.sparkContext.defaultParallelism
@@ -110,15 +127,64 @@ def coalesce_buckets(df: DataFrame, bucket_count: int) -> DataFrame:
 
 def file_bucket_range(f: dict) -> tuple[int, int]:
     """A manifest entry's ``[bucket_lo, bucket_hi]`` under the spec it
-    was written with; a one-bucket entry ``bucket: k`` is ``[k, k]``."""
-    if "bucket_lo" in f:
-        return f["bucket_lo"], f["bucket_hi"]
-    return f["bucket"], f["bucket"]
+    was written with."""
+    return f["bucket_lo"], f["bucket_hi"]
 
 
 def _live_delta(f: dict) -> bool:
     """An appended change file whose rows no base file holds yet."""
-    return f.get("kind", "base") == "delta" and not f.get("compacted")
+    return f["kind"] == "delta" and not f.get("compacted")
+
+
+# Table properties a commit carries over from its parent and a rollback
+# restores from its target. The schema and partition-spec lists are
+# append-only, so both always take those from the parent.
+TABLE_PROPS = ("partition_spec", "bucket_by", "bucket_count",
+               "default_spec_id", "key_cols", "merge_engine", "agg_spec",
+               "bloom_cols")
+
+
+def _canonical(snap: dict) -> dict:
+    """Upgrade ``snap`` in place to the one manifest shape (module
+    docstring) and return it: add each key a legacy snapshot or entry
+    lacks, with the value it always implied. No key is removed or
+    renamed. Legacy field ids are back-filled by name: before field ids a
+    schema could only add columns, so walking the schemas in id order,
+    a name's first appearance takes the next id."""
+    snap.setdefault("bucket_by", DEFAULT_BUCKET_BY)
+    snap.setdefault("key_cols", list(DEFAULT_KEY_COLS))
+    snap.setdefault("merge_engine", "lww")
+    snap.setdefault("agg_spec", {})
+    snap.setdefault("bloom_cols", [])
+    if "partition_specs" not in snap:  # one implicit spec
+        snap["partition_specs"] = [{"id": 0, "bucket_by": snap["bucket_by"],
+                                    "bucket_count": snap["bucket_count"]}]
+        snap["default_spec_id"] = 0
+    assigned: dict[str, int] = {}
+    for e in sorted(snap["schemas"], key=lambda e: e["id"]):
+        names = [f["name"] for f in e["spark"]["fields"]]
+        for n in names:
+            assigned.setdefault(n, len(assigned))
+        e.setdefault("ids", [assigned[n] for n in names])
+    snap.setdefault("next_field_id", 1 + max(
+        (i for e in snap["schemas"] for i in e["ids"]), default=-1))
+    snap["files"] = [_canonical_file(f, snap["default_spec_id"])
+                     for f in snap["files"]]
+    return snap
+
+
+def _canonical_file(f: dict, spec_id: int) -> dict:
+    """A copy of ``f`` with ``kind``, ``bounds``, ``bucket_lo``/
+    ``bucket_hi`` and ``spec_id``: a missing kind is 'base', missing
+    bounds are none, a one-bucket entry ``bucket: k`` covers ``[k, k]``
+    (and keeps ``bucket``), and a missing or in-flight (None) spec id is
+    ``spec_id``, the snapshot's default."""
+    out = {"kind": "base", "bounds": {}, **f}
+    if "bucket_lo" not in f:
+        out["bucket_lo"] = out["bucket_hi"] = f["bucket"]
+    if f.get("spec_id") is None:
+        out["spec_id"] = spec_id
+    return out
 
 
 class LakeTableError(RuntimeError):
@@ -155,8 +221,7 @@ class LakeTable:
             raise LakeTableNotFound(f"not a lake table: {self.root}")
         with open(cur) as f:
             v = int(f.read().strip())
-        with open(os.path.join(self.meta_dir, f"v{v}.json")) as f:
-            self._snapshot = json.load(f)
+        self._snapshot = self.snapshot_at(v)
 
     def refresh(self) -> "LakeTable":
         self._load()
@@ -181,22 +246,12 @@ class LakeTable:
 
     @property
     def bucket_by(self) -> str:
-        """Partition column (pre-r3 snapshots default to conv_id)."""
-        return self.snapshot.get("bucket_by", DEFAULT_BUCKET_BY)
+        """Partition column."""
+        return self.snapshot["bucket_by"]
 
     # ---------- partition specs ----------
     @staticmethod
-    def _partition_specs(snap: dict) -> tuple[list[dict], int]:
-        """(spec list, default spec id). Legacy snapshots (written before
-        partition evolution existed) have exactly one implicit spec."""
-        if "partition_specs" in snap:
-            return snap["partition_specs"], snap["default_spec_id"]
-        return [{"id": 0,
-                 "bucket_by": snap.get("bucket_by", DEFAULT_BUCKET_BY),
-                 "bucket_count": snap["bucket_count"]}], 0
-
-    @classmethod
-    def file_buckets(cls, snap: dict):
+    def file_buckets(snap: dict):
         """Map a manifest entry to the buckets, under the snapshot's
         DEFAULT spec, whose keys it may hold (a frozenset).
 
@@ -209,12 +264,13 @@ class LakeTable:
         the Iceberg partition-evolution scan contract."""
         import math
 
-        specs, default_id = cls._partition_specs(snap)
-        counts = {s["id"]: s["bucket_count"] for s in specs}
-        cur = counts[default_id]
+        counts = {s["id"]: s["bucket_count"]
+                  for s in snap["partition_specs"]}
+        cur = counts[snap["default_spec_id"]]
+        counts[None] = cur  # staged by the in-flight commit: default spec
 
         def held(f: dict) -> frozenset:
-            sid = f.get("spec_id", default_id)
+            sid = f["spec_id"]
             if sid not in counts:
                 raise LakeTableError(f"file spec id {sid} not in snapshot")
             lo, hi = file_bucket_range(f)
@@ -237,7 +293,8 @@ class LakeTable:
         generation (never wrong results) until compaction migrates them."""
         if bucket_count < 1:
             raise LakeTableError("bucket_count must be >= 1")
-        specs, default_id = self._partition_specs(self.snapshot)
+        specs = self.snapshot["partition_specs"]
+        default_id = self.snapshot["default_spec_id"]
         cur = next(s for s in specs if s["id"] == default_id)
         if bucket_count == cur["bucket_count"]:
             raise LakeTableError(
@@ -245,13 +302,9 @@ class LakeTable:
         new_spec = {"id": max(s["id"] for s in specs) + 1,
                     "bucket_by": cur["bucket_by"],
                     "bucket_count": bucket_count}
-        # files from the legacy-keyed era need their implicit spec pinned
-        # before the default moves
-        pinned = [dict(f, spec_id=f.get("spec_id", default_id))
-                  for f in self.snapshot["files"]]
         return self.commit(
             epoch=self.committed_epoch,
-            keep_files=pinned,
+            keep_files=list(self.snapshot["files"]),
             new_files=[],
             lineage={"mode": "partition_evolution",
                      "from": {"spec_id": default_id,
@@ -269,9 +322,8 @@ class LakeTable:
 
     @property
     def key_cols(self) -> list[str]:
-        """MERGE/resolution key columns (pre-r3 snapshots default to the
-        transcript key)."""
-        return list(self.snapshot.get("key_cols", DEFAULT_KEY_COLS))
+        """MERGE/resolution key columns."""
+        return list(self.snapshot["key_cols"])
 
     @property
     def merge_engine(self) -> str:
@@ -280,22 +332,22 @@ class LakeTable:
         its non-null columns; Paimon partial-update analogue) or
         'aggregate' (per-column folds configured by ``agg_spec``; Paimon
         aggregation analogue, with delete-reset semantics). Recorded at
-        create; pre-existing snapshots default to 'lww'."""
-        return self.snapshot.get("merge_engine", "lww")
+        create."""
+        return self.snapshot["merge_engine"]
 
     @property
     def agg_spec(self) -> dict:
         """merge_engine='aggregate' column -> fn map (sum|max|min|
         last_non_null); unlisted payload columns default to
         last_non_null."""
-        return dict(self.snapshot.get("agg_spec", {}))
+        return dict(self.snapshot["agg_spec"])
 
     @property
     def bloom_cols(self) -> list[str]:
         """Columns the writers attach per-file bloom sidecars for
         (table/bloom.py) — point-lookup file skipping beyond min/max
         bounds. Empty (the default) keeps the write path bloom-free."""
-        return list(self.snapshot.get("bloom_cols", []))
+        return list(self.snapshot["bloom_cols"])
 
     @property
     def schema(self) -> StructType:
@@ -307,45 +359,17 @@ class LakeTable:
 
     def snapshot_at(self, version: int) -> dict:
         with open(os.path.join(self.meta_dir, f"v{version}.json")) as f:
-            return json.load(f)
+            return _canonical(json.load(f))
 
     # ---------- field ids ----------
     @staticmethod
-    def _schemas_with_ids(snap: dict) -> list[dict]:
-        """The snapshot's schema list with a per-field ``ids`` list on every
-        entry. New-format snapshots persist ids; legacy snapshots (written
-        before field-id evolution existed) could only ever evolve by
-        add-column, so name identity == id identity there and ids are
-        back-filled deterministically: walking schemas in id order, the
-        first appearance of a NAME gets the next sequential id."""
-        entries = sorted(snap["schemas"], key=lambda e: e["id"])
-        if all("ids" in e for e in entries):
-            return entries
-        assigned: dict[str, int] = {}
-        out = []
-        for e in entries:
-            names = [f["name"] for f in e["spark"]["fields"]]
-            for n in names:
-                if n not in assigned:
-                    assigned[n] = len(assigned)
-            out.append({**e, "ids": [assigned[n] for n in names]})
-        return out
-
-    @classmethod
-    def _current_name_to_id(cls, snap: dict) -> dict[str, int]:
+    def _current_name_to_id(snap: dict) -> dict[str, int]:
         """name -> field id for the snapshot's CURRENT schema."""
-        for e in cls._schemas_with_ids(snap):
+        for e in snap["schemas"]:
             if e["id"] == snap["schema_id"]:
                 return {f["name"]: fid
                         for f, fid in zip(e["spark"]["fields"], e["ids"])}
         raise LakeTableError(f"schema id {snap['schema_id']} missing")
-
-    @classmethod
-    def _next_field_id(cls, snap: dict) -> int:
-        if "next_field_id" in snap:
-            return snap["next_field_id"]
-        return 1 + max(fid for e in cls._schemas_with_ids(snap)
-                       for fid in e["ids"])
 
     # ---------- create ----------
     @classmethod
@@ -401,12 +425,15 @@ class LakeTable:
                          "ids": list(range(len(schema.fields)))}],
             "next_field_id": len(schema.fields),
             "partition_spec": f"bucket({bucket_by}, {bucket_count})",
+            "partition_specs": [{"id": 0, "bucket_by": bucket_by,
+                                 "bucket_count": bucket_count}],
+            "default_spec_id": 0,
             "bucket_by": bucket_by,
+            "bucket_count": bucket_count,
             "key_cols": list(key_cols),
             "merge_engine": merge_engine,
-            **({"agg_spec": dict(agg_spec)} if agg_spec else {}),
-            **({"bloom_cols": list(bloom_cols)} if bloom_cols else {}),
-            "bucket_count": bucket_count,
+            "agg_spec": dict(agg_spec or {}),
+            "bloom_cols": list(bloom_cols),
             "files": [],
             "committed_epoch": -1,
             "lineage": {},
@@ -493,7 +520,9 @@ class LakeTable:
 
         ``keep_files``/``new_files``: manifest entries
         ``{path, bucket_lo, bucket_hi, schema_id, rows}`` (paths relative
-        to root; a legacy entry's ``bucket: k`` stands for ``[k, k]``).
+        to root), upgraded by :func:`_canonical`. A new file's ``schema_id``
+        None is stamped with the commit's schema id, and its ``spec_id``
+        None with the parent's default spec: it was written under it.
 
         A changed ``new_schema`` without explicit ``new_schema_ids`` is the
         ADD-COLUMN path (merge_upsert): fields keep their id by name-match
@@ -504,16 +533,13 @@ class LakeTable:
         """
         prev = self.snapshot
         version = prev["version"] + 1
-        schemas = list(prev["schemas"])
+        schemas = prev["schemas"]
         schema_id = prev["schema_id"]
-        next_fid = self._next_field_id(prev)
+        next_fid = prev["next_field_id"]
         if new_schema is not None:
             cur_json = json.dumps(self.schema.jsonValue(), sort_keys=True)
             new_json = json.dumps(new_schema.jsonValue(), sort_keys=True)
             if cur_json != new_json:
-                # legacy parents: materialize back-filled ids so the new
-                # entry's ids share one consistent id space with history
-                schemas = [dict(e) for e in self._schemas_with_ids(prev)]
                 if new_schema_ids is not None:
                     if len(new_schema_ids) != len(new_schema.fields):
                         raise LakeTableError("new_schema_ids length mismatch")
@@ -537,43 +563,28 @@ class LakeTable:
                             ids.append(next_fid)
                             next_fid += 1
                 schema_id = max(s["id"] for s in schemas) + 1
-                schemas.append({"id": schema_id,
-                                "spark": new_schema.jsonValue(),
-                                "ids": ids})
-        # files written by this commit carry the commit's schema id and
-        # the default partition spec id
-        _, default_spec = self._partition_specs(prev)
+                schemas = [*schemas, {"id": schema_id,
+                                      "spark": new_schema.jsonValue(),
+                                      "ids": ids}]
         new_files = [
             {**f, "schema_id": schema_id} if f.get("schema_id") is None else f
             for f in new_files
         ]
-        new_files = [
-            {**f, "spec_id": default_spec} if f.get("spec_id") is None else f
-            for f in new_files
-        ]
-        snap = {
+        # canonical before meta_updates: entries take the parent's spec
+        snap = _canonical({
             "format": "cdcrypt-lake/1",
             "version": version,
             "parent": prev["version"],
+            **{k: prev[k] for k in TABLE_PROPS},
             "schema_id": schema_id,
             "schemas": schemas,
             "next_field_id": next_fid,
-            "partition_spec": prev["partition_spec"],
-            "bucket_by": prev.get("bucket_by", DEFAULT_BUCKET_BY),
-            "key_cols": list(prev.get("key_cols", DEFAULT_KEY_COLS)),
-            "merge_engine": prev.get("merge_engine", "lww"),
-            **({"agg_spec": prev["agg_spec"]} if "agg_spec" in prev else {}),
-            **({"bloom_cols": prev["bloom_cols"]}
-               if "bloom_cols" in prev else {}),
-            "bucket_count": prev["bucket_count"],
-            **({"partition_specs": prev["partition_specs"],
-                "default_spec_id": prev["default_spec_id"]}
-               if "partition_specs" in prev else {}),
+            "partition_specs": prev["partition_specs"],
             "files": keep_files + new_files,
             "committed_epoch": epoch,
             "lineage": lineage,
             "created_ms": int(time.time() * 1000),
-        }
+        })
         if meta_updates:
             allowed = {"bucket_by", "key_cols", "partition_spec",
                        "partition_specs", "default_spec_id", "bucket_count"}
@@ -712,7 +723,7 @@ class LakeTable:
             taken.add(name)
             fields.append(SF(name, dt, f.nullable))
             ids.append(n2i[f.name])
-        next_fid = self._next_field_id(self.snapshot)
+        next_fid = self.snapshot["next_field_id"]
         for a in adds:
             f = a if isinstance(a, SF) else SF(a[0], a[1], True)
             if f.name in taken or f.name == "bucket":
@@ -730,10 +741,9 @@ class LakeTable:
             meta_updates["bucket_by"] = new_bucket_by
             meta_updates["partition_spec"] = (
                 f"bucket({new_bucket_by}, {self.bucket_count})")
-            if "partition_specs" in self.snapshot:
-                meta_updates["partition_specs"] = [
-                    {**s, "bucket_by": new_bucket_by}
-                    for s in self.snapshot["partition_specs"]]
+            meta_updates["partition_specs"] = [
+                {**s, "bucket_by": new_bucket_by}
+                for s in self.snapshot["partition_specs"]]
         if any(k in renames for k in self.key_cols):
             meta_updates["key_cols"] = [renames.get(k, k)
                                         for k in self.key_cols]
@@ -782,7 +792,7 @@ class LakeTable:
 
             def hit(f: dict) -> bool:
                 for c, (lo, hi) in key_range.items():
-                    b = f.get("bounds", {}).get(c)
+                    b = f["bounds"].get(c)
                     if b is None:
                         continue
                     if (hi is not None and b[0] > hi) or \
@@ -856,11 +866,11 @@ class LakeTable:
         n2i = self._current_name_to_id(snap)
         tgt = [(f.name, f.dataType, n2i.get(f.name))
                for f in target_schema.fields]
-        schemas = {e["id"]: e for e in self._schemas_with_ids(snap)}
+        schemas = {e["id"]: e for e in snap["schemas"]}
 
         groups: dict[int | None, list[str]] = {}
         for f in files:
-            groups.setdefault(f.get("schema_id"), []).append(
+            groups.setdefault(f["schema_id"], []).append(
                 os.path.join(self.root, f["path"]))
 
         pooled: list[str] = []
@@ -923,7 +933,7 @@ class LakeTable:
         ``createDataFrame`` is an RDD scan Catalyst cannot prune, which
         would add empty Python tasks to every read of a table that has
         never compacted, and to every copy-on-write merge."""
-        base_fs = [f for f in files if f.get("kind", "base") == "base"]
+        base_fs = [f for f in files if f["kind"] == "base"]
         delta_fs = [f for f in files if _live_delta(f)]
         delta = self.scan_projected(spark, delta_fs, snap, target_schema,
                                     changelog=True)
@@ -991,9 +1001,8 @@ class LakeTable:
             next(s["spark"] for s in snap["schemas"]
                  if s["id"] == snap["schema_id"]))
         if key_range:
-            keyset = set(snap.get("key_cols", DEFAULT_KEY_COLS))
-            bad = set(key_range) - keyset
-            if bad and any(map(_live_delta, snap.get("files", []))):
+            bad = set(key_range) - set(snap["key_cols"])
+            if bad and any(map(_live_delta, snap["files"])):
                 raise LakeTableError(
                     f"key_range supports key columns only, got {sorted(bad)}"
                     " (non-key ranges under merge-on-read would resolve "
@@ -1006,16 +1015,14 @@ class LakeTable:
         if any(map(_live_delta, fs)):
             from cdcrypt.operators.dedup import resolve_live
 
-            df = resolve_live(
-                df, snap.get("merge_engine", "lww"), snap.get("agg_spec"),
-                snap.get("key_cols", list(DEFAULT_KEY_COLS)))
+            df = resolve_live(df, snap["merge_engine"], snap["agg_spec"],
+                              snap["key_cols"])
         df = df.select(*[f.name for f in snap_schema.fields])
         if buckets is not None:
             held = self.file_buckets(snap)
             if not all(held(f) <= buckets for f in fs):
                 df = df.where(
-                    bucket_col(snap["bucket_count"],
-                               snap.get("bucket_by", DEFAULT_BUCKET_BY))
+                    bucket_col(snap["bucket_count"], snap["bucket_by"])
                     .isin(*buckets))
         if key_range:
             for c, (lo, hi) in key_range.items():
@@ -1025,9 +1032,7 @@ class LakeTable:
                     df = df.where(F.col(c) <= F.lit(hi))
         if with_bucket:
             df = df.withColumn(
-                "bucket",
-                bucket_col(snap["bucket_count"],
-                           snap.get("bucket_by", DEFAULT_BUCKET_BY)))
+                "bucket", bucket_col(snap["bucket_count"], snap["bucket_by"]))
         return df
 
     def total_rows(self) -> int:
@@ -1063,12 +1068,12 @@ class LakeTable:
         picked: list[dict] = []
         for v in range(from_version + 1, to_version + 1):
             snap = self.snapshot_at(v)
-            if snap.get("lineage", {}).get("mode") == "cow":
+            if snap["lineage"].get("mode") == "cow":
                 raise LakeTableError(
                     "incremental read requires merge-on-read deltas; "
                     f"snapshot v{v} was committed copy-on-write")
             added = [f for f in snap["files"] if f["path"] not in prev_paths]
-            picked.extend(f for f in added if f.get("kind") == "delta")
+            picked.extend(f for f in added if f["kind"] == "delta")
             prev_paths = {f["path"] for f in snap["files"]}
         # change rows are served in the CURRENT schema (id-projected:
         # deltas written before a rename surface under the new name)
@@ -1108,7 +1113,7 @@ class LakeTable:
         to_version = self.version if to_version is None else to_version
         raw = self.read_incremental(spark, from_version, to_version)
         cur = self.snapshot
-        key_cols = list(cur.get("key_cols", DEFAULT_KEY_COLS))
+        key_cols = self.key_cols
         cur_schema = self.schema
         payload = [f.name for f in cur_schema.fields
                    if f.name not in key_cols]
@@ -1117,7 +1122,7 @@ class LakeTable:
 
         def endpoint(version: int) -> DataFrame:
             snap = self.snapshot_at(version)
-            bb = snap.get("bucket_by", DEFAULT_BUCKET_BY)
+            bb = snap["bucket_by"]
             buckets = None
             if bb in key_cols:
                 buckets = {r["_b"] for r in keys.select(
@@ -1185,7 +1190,7 @@ class LakeTable:
                 snap = self.snapshot_at(v)
             except LakeTableError:
                 break  # fell off retained history
-            if int(snap.get("created_ms", 0)) <= ms:
+            if snap["created_ms"] <= ms:
                 return v
             v -= 1
         raise LakeTableError(
@@ -1355,21 +1360,11 @@ class LakeTable:
                 # schemas/specs lists are append-only across commits, so
                 # prev's lists are supersets containing old's entries;
                 # only the DEFAULTS revert
+                **{k: old[k] for k in TABLE_PROPS},
                 "schema_id": old["schema_id"],
                 "schemas": prev["schemas"],
-                "next_field_id": self._next_field_id(prev),
-                "partition_spec": old["partition_spec"],
-                "bucket_by": old.get("bucket_by", DEFAULT_BUCKET_BY),
-                "key_cols": list(old.get("key_cols", DEFAULT_KEY_COLS)),
-                "merge_engine": old.get("merge_engine", "lww"),
-                **({"agg_spec": old["agg_spec"]}
-                   if "agg_spec" in old else {}),
-                **({"bloom_cols": old["bloom_cols"]}
-                   if "bloom_cols" in old else {}),
-                "bucket_count": old["bucket_count"],
-                **({"partition_specs": prev["partition_specs"],
-                    "default_spec_id": self._partition_specs(old)[1]}
-                   if "partition_specs" in prev else {}),
+                "next_field_id": prev["next_field_id"],
+                "partition_specs": prev["partition_specs"],
                 "files": old["files"],
                 "committed_epoch": (old["committed_epoch"] if reset_epoch
                                     else prev["committed_epoch"]),
@@ -1391,27 +1386,21 @@ class LakeTable:
         reads — metadata, not data."""
         rows = []
         for n in sorted(os.listdir(self.meta_dir)):
-            if not (n.startswith("v") and n.endswith(".json")):
-                continue
+            if not (n.startswith("v") and n.endswith(".json")) \
+                    or int(n[1:-5]) > self.version:
+                continue  # staged, or a crash orphan beyond current
             try:
                 snap = self.snapshot_at(int(n[1:-5]))
-            except (LakeTableError, OSError, json.JSONDecodeError):
-                continue  # torn crash-orphan beyond current
-            if snap["version"] > self.version:
-                continue  # staged but never current-swapped
-            lin = snap.get("lineage") or {}
-            fs = snap.get("files", [])
+            except OSError:
+                continue  # expired since the listing
+            lin, fs = snap["lineage"], snap["files"]
             rows.append((
-                int(snap["version"]), snap.get("parent"),
-                int(snap.get("committed_epoch", 0)),
-                snap.get("created_ms"),
-                lin.get("mode"), lin.get("batch_rows"),
+                snap["version"], snap["parent"], snap["committed_epoch"],
+                snap["created_ms"], lin.get("mode"), lin.get("batch_rows"),
                 lin.get("rows_written"), len(fs),
                 sum(map(_live_delta, fs)),
-                int(sum(f.get("rows", 0) for f in fs
-                        if not f.get("compacted"))),
-                int(snap.get("schema_id", 0)),
-                snap.get("partition_spec"),
+                sum(f["rows"] for f in fs if not f.get("compacted")),
+                snap["schema_id"], snap["partition_spec"],
             ))
         return spark.createDataFrame(
             rows,
@@ -1427,12 +1416,10 @@ class LakeTable:
         snapshot, with its recorded column bounds as JSON."""
         snap = (self.snapshot if version is None
                 else self.snapshot_at(version))
-        rows = [(f["path"], *file_bucket_range(f),
-                 f.get("kind", "base"), bool(f.get("compacted", False)),
-                 int(f.get("schema_id", 0)), int(f.get("spec_id", 0)),
-                 int(f.get("rows", 0)),
-                 json.dumps(f["bounds"]) if f.get("bounds") else None)
-                for f in snap.get("files", [])]
+        rows = [(f["path"], f["bucket_lo"], f["bucket_hi"], f["kind"],
+                 bool(f.get("compacted")), f["schema_id"], f["spec_id"],
+                 f["rows"], json.dumps(f["bounds"]) if f["bounds"] else None)
+                for f in snap["files"]]
         return spark.createDataFrame(
             rows,
             "path string, bucket_lo int, bucket_hi int, kind string, "

@@ -353,3 +353,29 @@ def test_mor_partial_replay_idempotent(spark, tmp_path):
     r = _apply(spark, t, [("U", "A", 0, 2, 1, None, "b2", None)], epoch=1)
     assert r["skipped"]
     assert _state(t.read(spark)) == before == {("A", 0): ("a1", "b2", None)}
+
+
+def test_batch_resolvers_leave_no_cached_frame(spark, tmp_path):
+    """The partial and aggregate batch resolvers emit each key's live row
+    and tombstone from one aggregation without caching it: replaying
+    epochs into both engines leaves no persisted RDD behind, where a
+    persist per batch would pin one cached frame per epoch for the life
+    of the session."""
+    from cdcrypt.operators.dedup import resolve_batch
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for engine, spec in (("partial", None), ("aggregate", {"a": "max"})):
+        t = LakeTable.create(str(tmp_path / engine), TABLE_SCHEMA,
+                             bucket_count=2, merge_engine=engine,
+                             agg_spec=spec)
+        for ep in range(3):
+            rows = [("I", "A", 0, 10 * ep + 1, ep, f"a{ep}", None, None),
+                    ("D", "B", 1, 10 * ep + 2, ep, None, None, None),
+                    ("U", "B", 1, 10 * ep + 3, ep, None, f"b{ep}", None)]
+            batch = resolve_batch(_df(spark, rows), engine, t.agg_spec,
+                                  t.key_cols)
+            merge_upsert(spark, t, batch, epoch=ep, mode="mor")
+        assert _state(t.read(spark)) == {("A", 0): ("a2", None, None),
+                                         ("B", 1): (None, "b2", None)}
+    assert jsc.getPersistentRDDs().size() == before
