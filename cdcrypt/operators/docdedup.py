@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cdcrypt.functions.hash64 import h60, h60_combine
+from cdcrypt.table.commitfile import atomic_write_json
 
 _FAMILIES = ("md5", "xx64")
 
@@ -995,12 +996,8 @@ class MinHashIndex:
 
 
 def _write_minhash_meta(root: str, meta: dict) -> None:
-    import json
     import os
-    tmp = os.path.join(root, f".{MinHashIndex.META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(root, MinHashIndex.META))
+    atomic_write_json(os.path.join(root, MinHashIndex.META), meta)
 
 
 def build_minhash_index(docs: DataFrame, root: str, text_col: str = "text",

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from cdcrypt.functions.hash64 import h60
 from cdcrypt.operators.docdedup import _words
+from cdcrypt.table.commitfile import atomic_write_json
 
 __all__ = ["BigramLM", "BigramLMIndex", "LMIndexError",
            "append_to_lm_index", "build_lm_index", "compact_lm_index",
@@ -200,12 +201,8 @@ class BigramLMIndex:
 
 
 def _write_lm_meta(root: str, meta: dict) -> None:
-    import json
     import os
-    tmp = os.path.join(root, f".{BigramLMIndex.META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(root, BigramLMIndex.META))
+    atomic_write_json(os.path.join(root, BigramLMIndex.META), meta)
 
 
 def _write_lm_segment(counts: DataFrame, root: str, n_partitions: int,

@@ -474,6 +474,7 @@ def _merge_mor(
         "dirty_buckets": sorted(appended.keys() | compacted.keys()),
         "buckets_compacted": sorted(compact),
         "compacted_rows": sum(compacted.values()),
+        "delta_files": len(new_delta),
         # per-partition lineage (P8): rows merged into each bucket this
         # epoch, counted from the delta files' bucket column
         "rows_merged_per_bucket": {

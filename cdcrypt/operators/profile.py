@@ -47,6 +47,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cdcrypt.functions.hash64 import h60, h60_sql
+from cdcrypt.table.commitfile import atomic_write_json
 
 DEFAULT_P = 12  # 4096 registers, ~1.6% standard error
 
@@ -476,12 +477,8 @@ def _write_profile_state(root: str, version: int,
 
 
 def _write_profile_meta(root: str, meta: dict) -> None:
-    import json
     import os
-    tmp = os.path.join(root, f".{ProfileIndex.META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(root, ProfileIndex.META))
+    atomic_write_json(os.path.join(root, ProfileIndex.META), meta)
 
 
 def build_profile_index(df: DataFrame, root: str, cols: list[str],

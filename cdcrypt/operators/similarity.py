@@ -21,6 +21,7 @@ from cdcrypt.operators._idxfiles import (
     gc_uncommitted as _emblsh_gc_uncommitted,
     list_parquet_files as _emblsh_list_files,
 )
+from cdcrypt.table.commitfile import atomic_write_json
 from pyspark.sql.types import (
     ArrayType, IntegerType, LongType, StructField, StructType,
 )
@@ -624,7 +625,6 @@ def build_ivf_index(
     :func:`_train_centroids`) and write the assigned base table partitioned
     by cell. One assignment pass over the base, ever; queries then run
     against the artifact via :func:`ann_ivf_topk_indexed`."""
-    import json
     import os
 
     train = base if sample_fraction >= 1.0 else base.sample(
@@ -650,10 +650,7 @@ def build_ivf_index(
         # mean nearest-centroid squared distance over the training sample
         "train_err": _quantization_error(X, cents),
     }
-    tmp = os.path.join(root, f".{IvfIndex.META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(root, IvfIndex.META))
+    atomic_write_json(os.path.join(root, IvfIndex.META), meta)
     return IvfIndex(root)
 
 
@@ -674,7 +671,6 @@ def append_to_ivf_index(index: "IvfIndex | str",
     schedule a rebuild (the same policy lever as compaction thresholds).
     Single-writer per index, like build — concurrent appends need an
     external lock."""
-    import json
     import os
 
     idx = IvfIndex(index) if isinstance(index, str) else index
@@ -688,10 +684,7 @@ def append_to_ivf_index(index: "IvfIndex | str",
         os.path.join(idx.root, idx.cells_dirname))
     meta = dict(idx.meta)
     meta["appends"] = int(meta.get("appends", 0)) + 1
-    tmp = os.path.join(idx.root, f".{IvfIndex.META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(idx.root, IvfIndex.META))
+    atomic_write_json(os.path.join(idx.root, IvfIndex.META), meta)
     return IvfIndex(idx.root)
 
 
@@ -759,7 +752,6 @@ def rebuild_ivf_index(spark, index: "IvfIndex | str",
     training-sample collect + ONE assignment pass over the contents,
     O(corpus) — which is why drift is measured and rebuilds scheduled,
     not done per tick."""
-    import json
     import os
     import shutil
 
@@ -801,11 +793,8 @@ def rebuild_ivf_index(spark, index: "IvfIndex | str",
         "rebuilds": gen,
         "cells_dir": new_name,
     })
-    tmp = os.path.join(idx.root, f".{IvfIndex.META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
     # COMMIT: new centroids + new cells_dir become visible atomically
-    os.replace(tmp, os.path.join(idx.root, IvfIndex.META))
+    atomic_write_json(os.path.join(idx.root, IvfIndex.META), meta)
     shutil.rmtree(os.path.join(idx.root, live_name), ignore_errors=True)
     return IvfIndex(idx.root)
 
@@ -1028,12 +1017,8 @@ def _vpart(id_col: str, n_partitions: int):
 
 
 def _write_emblsh_meta(root: str, meta: dict) -> None:
-    import json
     import os
-    tmp = os.path.join(root, f".{EmbeddingLSHIndex.META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(root, EmbeddingLSHIndex.META))
+    atomic_write_json(os.path.join(root, EmbeddingLSHIndex.META), meta)
 
 
 

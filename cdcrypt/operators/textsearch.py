@@ -50,6 +50,7 @@ from pyspark.sql.window import Window
 
 from cdcrypt.functions.hash64 import h60
 from cdcrypt.operators.docdedup import _words
+from cdcrypt.table.commitfile import atomic_write_json
 
 __all__ = [
     "TextIndex", "TextIndexError", "append_to_text_index",
@@ -194,10 +195,7 @@ class TextIndex:
 
 
 def _write_text_meta(root: str, meta: dict) -> None:
-    tmp = os.path.join(root, f".{TextIndex.META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(root, TextIndex.META))
+    atomic_write_json(os.path.join(root, TextIndex.META), meta)
 
 
 def _stats_and_len(docs: DataFrame, text_col: str) -> tuple[int, int]:

@@ -61,6 +61,7 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
+from cdcrypt.table.commitfile import atomic_write_json
 from cdcrypt.table.lake import LakeTable
 
 RETRACTABLE_FNS = ("count", "sum", "avg")
@@ -158,10 +159,10 @@ class AggView:
                          bucket_count=bucket_count,
                          bucket_by=group_cols[0], key_cols=list(group_cols),
                          merge_engine="aggregate", agg_spec=spec)
-        with open(os.path.join(root, cls.META), "w") as f:
-            json.dump({"group_cols": list(group_cols),
-                       "aggs": {k: list(v) for k, v in aggs.items()},
-                       "sum_srcs": srcs}, f)
+        atomic_write_json(os.path.join(root, cls.META),
+                          {"group_cols": list(group_cols),
+                           "aggs": {k: list(v) for k, v in aggs.items()},
+                           "sum_srcs": srcs})
         return cls(root)
 
     # ---------- lifecycle ----------

@@ -51,6 +51,8 @@ import math
 import os
 from dataclasses import dataclass, field
 
+from cdcrypt.table.commitfile import atomic_write_json
+
 
 @dataclass
 class BatchSizeController:
@@ -113,12 +115,10 @@ class BatchSizeController:
 
     def save(self, checkpoint_dir: str) -> None:
         os.makedirs(checkpoint_dir, exist_ok=True)
-        tmp = self._state_path(checkpoint_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"size": self.size,
-                       "last_epoch_sec": self.last_epoch_sec,
-                       "target_sec": self.target_sec}, f)
-        os.replace(tmp, self._state_path(checkpoint_dir))
+        atomic_write_json(self._state_path(checkpoint_dir),
+                          {"size": self.size,
+                           "last_epoch_sec": self.last_epoch_sec,
+                           "target_sec": self.target_sec})
 
     def load(self, checkpoint_dir: str) -> "BatchSizeController":
         """Restore the learned size (not the tuning constants — those are

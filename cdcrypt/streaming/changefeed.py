@@ -9,8 +9,9 @@ The lake's version log IS the offset log: versions are monotone, commits
 are atomic pointer swaps, and ``read_incremental((from, to])`` is exact
 even across compaction (fused append+compact keeps a log-only delta
 reference — table/lake.py). The feed therefore persists a single offset,
-the last version whose changes the sink processed, with the same
-tmp+``os.replace`` discipline as the lake's own current-pointer.
+the last version whose changes the sink processed, through the same
+commit-file writer as the lake's own current-pointer
+(``commitfile.atomic_write_json``).
 
 Delivery contract — the engine's standard two layers:
 
@@ -40,10 +41,10 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cdcrypt.table.commitfile import atomic_write_json
 from cdcrypt.table.lake import LakeTable, LakeTableError
 
 
@@ -161,11 +162,7 @@ class ChangeFeedStream:
 
     # ---------- offsets ----------
     def _write_state(self) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.checkpoint_dir,
-                                   prefix=".offset-", suffix=".json")
-        with os.fdopen(fd, "w") as f:
-            json.dump(self._state, f)
-        os.replace(tmp, self._offset_path)
+        atomic_write_json(self._offset_path, self._state)
 
     @property
     def last_version(self) -> int:
@@ -173,15 +170,15 @@ class ChangeFeedStream:
 
     def _check_serviceable(self, from_version: int) -> None:
         """Fail fast at (re)start if snapshot expiration has removed the
-        JSONs the next window needs, instead of an opaque FileNotFoundError
-        mid-drain."""
+        JSONs the next window needs, instead of a bare missing-snapshot
+        error mid-drain."""
         t = self.table.refresh()
         if from_version >= t.version:
             return
         try:
             t.snapshot_at(from_version) if from_version > 0 else None
             t.snapshot_at(from_version + 1)
-        except (OSError, LakeTableError) as e:
+        except LakeTableError as e:
             raise ChangeFeedError(
                 f"change feed needs snapshots v{from_version}.. but they "
                 "have been expired (expire_snapshots retention window is "

@@ -50,25 +50,17 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from cdcrypt.table.commitfile import atomic_write_json
 from cdcrypt.table.lake import LakeTable, bucket_col
 
 
 class JoinViewError(RuntimeError):
     pass
-
-
-def _atomic_json(path: str, obj: dict) -> None:
-    d = os.path.dirname(path)
-    fd, tmp = tempfile.mkstemp(dir=d, prefix=".jv-", suffix=".json")
-    with os.fdopen(fd, "w") as f:
-        json.dump(obj, f)
-    os.replace(tmp, path)
 
 
 class JoinView:
@@ -135,11 +127,11 @@ class JoinView:
                          bucket_count=bucket_count,
                          bucket_by=on_fact,
                          key_cols=list(fact.key_cols))
-        with open(os.path.join(root, cls.META), "w") as f:
-            json.dump({"fact_root": fact.root, "dim_root": dim.root,
-                       "on_fact": on_fact, "on_dim": on_dim, "how": how,
-                       "fact_keys": list(fact.key_cols),
-                       "dim_payload": dim_payload}, f)
+        atomic_write_json(os.path.join(root, cls.META),
+                          {"fact_root": fact.root, "dim_root": dim.root,
+                           "on_fact": on_fact, "on_dim": on_dim, "how": how,
+                           "fact_keys": list(fact.key_cols),
+                           "dim_payload": dim_payload})
         return cls(root)
 
     # ---------- state ----------
@@ -188,9 +180,9 @@ class JoinView:
             F.lit(2).cast("long").alias("op_seq"),  # 2*tick, see tick()
             F.lit(1).cast("long").alias("epoch"))
         merge_upsert(spark, t, batch, epoch=1, mode="mor")
-        _atomic_json(self._state_path,
-                     {"fact_last": a_ver, "dim_last": b_ver,
-                      "tick": 1, "pending": None})
+        atomic_write_json(self._state_path,
+                          {"fact_last": a_ver, "dim_last": b_ver,
+                           "tick": 1, "pending": None})
         return a_ver, b_ver
 
     # ---------- maintenance ----------
@@ -216,7 +208,7 @@ class JoinView:
                 return None
             tick = st["tick"] + 1
             st["pending"] = {"a_to": a_to, "b_to": b_to, "tick": tick}
-            _atomic_json(self._state_path, st)
+            atomic_write_json(self._state_path, st)
         a_from, b_from = st["fact_last"], st["dim_last"]
 
         cl_a = (fact.read_changelog(spark, a_from, a_to)
@@ -313,7 +305,7 @@ class JoinView:
         if not pieces:
             st = {"fact_last": a_to, "dim_last": b_to,
                   "tick": tick, "pending": None}
-            _atomic_json(self._state_path, st)
+            atomic_write_json(self._state_path, st)
             return {"tick": tick, "rows": 0, "skipped": "empty window"}
         batch = pieces[0]
         for p in pieces[1:]:
@@ -322,9 +314,9 @@ class JoinView:
             "*", F.lit(tick).cast("long").alias("epoch"))
         lineage = merge_upsert(spark, self.table.refresh(), batch,
                                epoch=tick, mode="mor")
-        _atomic_json(self._state_path,
-                     {"fact_last": a_to, "dim_last": b_to,
-                      "tick": tick, "pending": None})
+        atomic_write_json(self._state_path,
+                          {"fact_last": a_to, "dim_last": b_to,
+                           "tick": tick, "pending": None})
         return {"tick": tick, "fact_to": a_to, "dim_to": b_to,
                 "merge": lineage}
 

@@ -85,7 +85,7 @@ class MultiTableIngest:
         }
         if out["dlq"] is not None:
             lineage["dlq_rows"] = write_epoch_parquet(
-                out["dlq"], self.dlq_dir, epoch)
+                out["dlq"], os.path.join(self.dlq_dir, f"epoch={epoch:06d}"))
         if self.aligner is not None:
             lineage["txn_pending_rows"] = self.aligner.last_pending_rows
         lineage["wall_sec"] = round(time.monotonic() - t0, 3)

@@ -50,6 +50,7 @@ from cdcrypt.kms import MockKMS
 from cdcrypt.operators.dedup import STRATEGIES, resolve_batch
 from cdcrypt.operators.merge import merge_upsert
 from cdcrypt.operators.transform import FieldTransform, TransformConfig
+from cdcrypt.table.commitfile import atomic_write_json
 from cdcrypt.table.lake import (
     LakeTable,
     LakeTableError,
@@ -98,18 +99,19 @@ def aqe_disabled(spark: SparkSession):
         spark.conf.set(key, prev)
 
 
-def write_epoch_parquet(df: DataFrame, out_dir: str, epoch: int) -> int:
+def write_epoch_parquet(df: DataFrame, final: str) -> int:
     """Idempotent per-epoch parquet sink (dead letters, integrity
-    anomalies): hidden tmp + atomic rename into ``out_dir/epoch=NNNNNN``;
-    an epoch replay overwrites its own output. Returns the row count from
-    the written footers (no second job)."""
+    anomalies, transaction-aligner state): a hidden tmp directory beside
+    ``final``, then an atomic rename onto it; an epoch replay overwrites
+    its own output. Returns the row count from the written footers (no
+    second job)."""
     import shutil
 
     import pyarrow.parquet as pq
 
-    os.makedirs(out_dir, exist_ok=True)
-    tmp = os.path.join(out_dir, f".epoch_{epoch:06d}.tmp")
-    final = os.path.join(out_dir, f"epoch={epoch:06d}")
+    parent, name = os.path.split(final)
+    os.makedirs(parent, exist_ok=True)
+    tmp = os.path.join(parent, f".{name}.tmp")
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
     df.write.mode("overwrite").parquet(tmp)
@@ -126,10 +128,9 @@ def write_epoch_parquet(df: DataFrame, out_dir: str, epoch: int) -> int:
 def write_checkpoint(checkpoint_dir: str, epoch: int, lineage: dict) -> None:
     """Atomic per-epoch lineage JSON: ``checkpoint_dir/epoch_NNNNNN.json``."""
     os.makedirs(checkpoint_dir, exist_ok=True)
-    tmp = os.path.join(checkpoint_dir, f".epoch_{epoch:06d}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(lineage, f, indent=1, default=str)
-    os.replace(tmp, os.path.join(checkpoint_dir, f"epoch_{epoch:06d}.json"))
+    atomic_write_json(
+        os.path.join(checkpoint_dir, f"epoch_{epoch:06d}.json"), lineage,
+        indent=1, default=str)
 
 
 @dataclass
@@ -434,7 +435,7 @@ class IngestPipeline:
             df, dead = self.dlq_adapter(raw_cached)
             dlq_rows = write_epoch_parquet(
                 dead.withColumn("epoch", F.lit(epoch).cast("long")),
-                self.dlq_dir, epoch)
+                os.path.join(self.dlq_dir, f"epoch={epoch:06d}"))
         if "epoch" not in df.columns:
             # adapter sources (Debezium lines) carry no epoch column; the
             # resolvers tie-break on (op_seq, epoch), so stamp the batch's
@@ -452,8 +453,8 @@ class IngestPipeline:
                        anomalies.groupBy("kind").count().collect()}
             integrity = {"anomalies": sum(by_kind.values()), **by_kind}
             if self.integrity_audit_dir is not None:
-                write_epoch_parquet(anomalies, self.integrity_audit_dir,
-                                    epoch)
+                write_epoch_parquet(anomalies, os.path.join(
+                    self.integrity_audit_dir, f"epoch={epoch:06d}"))
             anomalies.unpersist(blocking=False)
         if self.aligner is not None:
             df = self.aligner.align(spark, df, epoch)

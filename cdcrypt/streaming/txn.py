@@ -23,12 +23,12 @@ immediately — a mixed stream of transactional and autocommit producers
 is the common case.
 
 Crash/replay contract (mirrors the pipeline's checkpoint floor): pending
-state is written per RELEASE epoch to ``state_dir/pending_epoch=N`` via
-hidden-tmp + atomic rename, and ``align(epoch=e)`` reads the state of
-``e-1`` — so replaying epoch ``e`` after a crash anywhere before the
-table commit recomputes the IDENTICAL release set and overwrites its own
-pending idempotently. Earlier pendings are kept (they are boundary-txn
-sized, not stream sized); a stuck transaction (its producer died
+state is written per RELEASE epoch to ``state_dir/pending_epoch=N`` by
+the pipeline's per-epoch parquet sink (hidden tmp + atomic rename), and
+``align(epoch=e)`` reads the state of ``e-1`` — so replaying epoch ``e``
+after a crash anywhere before the table commit recomputes the IDENTICAL
+release set and overwrites its own pending idempotently. Earlier
+pendings are kept (they are boundary-txn sized, not stream sized); a stuck transaction (its producer died
 mid-emit) is visible as rows aging in pending — ``flush(spark, epoch)``
 is the operator override that releases everything held.
 
@@ -55,10 +55,11 @@ per partition-stream, not O(batch)). The corpus/table is never touched.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from cdcrypt.streaming.pipeline import write_epoch_parquet
 
 
 class TxnAligner:
@@ -101,28 +102,6 @@ class TxnAligner:
         if not any(n.endswith(".parquet") for n in os.listdir(d)):
             return None  # ran, held nothing (empty write = no part files)
         return spark.read.parquet(d)
-
-    def _write_state(self, df: DataFrame, final: str, tag: str,
-                     epoch: int) -> int:
-        """Atomic epoch-keyed state write (the DLQ idiom: hidden tmp +
-        os.replace, so an epoch replay overwrites idempotently). Row
-        count from the written footers — no second job."""
-        import pyarrow.parquet as pq
-
-        os.makedirs(self.state_dir, exist_ok=True)
-        tmp = os.path.join(self.state_dir, f".{tag}_{epoch:06d}.tmp")
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        df.write.mode("overwrite").parquet(tmp)
-        rows = 0
-        for name in os.listdir(tmp):
-            if name.endswith(".parquet"):
-                rows += pq.ParquetFile(
-                    os.path.join(tmp, name)).metadata.num_rows
-        if os.path.exists(final):
-            shutil.rmtree(final)  # replayed epoch: overwrite
-        os.replace(tmp, final)
-        return rows
 
     def _retired_ids(self, spark: SparkSession,
                      epoch: int) -> DataFrame | None:
@@ -188,10 +167,9 @@ class TxnAligner:
         # call replays deterministically; released ids BEFORE pending so
         # a crash between the two is also replay-safe (the replay
         # overwrites both from the same inputs).
-        self._write_state(complete, self._released_dir(epoch),
-                          "released", epoch)
-        self.last_pending_rows = self._write_state(
-            pending, self._pending_dir(epoch), "pending", epoch)
+        write_epoch_parquet(complete, self._released_dir(epoch))
+        self.last_pending_rows = write_epoch_parquet(
+            pending, self._pending_dir(epoch))
         out = passthrough.unionByName(release, allowMissingColumns=True)
         if stale is not None:
             out = out.unionByName(stale, allowMissingColumns=True)

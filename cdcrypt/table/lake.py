@@ -15,9 +15,12 @@ Layout (all paths relative to the table root)::
 Semantics ported from the Iceberg spec (public), not from any runtime:
 - snapshot isolation: readers resolve ``current`` once and read only that
   manifest's files; old snapshots stay readable (time travel via version=N);
-- atomic commit: write ``v{N}.json`` fully, then ``os.replace`` a temp file
-  onto ``current`` — POSIX-atomic, torn commits impossible; a crash before
-  the swap leaves only orphan files, never a corrupt table;
+- atomic commit: write ``v{N}.json`` fully, then swap ``current`` — both
+  through the one commit-file writer, ``commitfile.atomic_write_json``
+  (unique temp file, fsync, then ``os.replace``), which also writes the
+  refs, the consumer offsets and the stream drivers' checkpoints; each is
+  fsynced before its rename, so torn commit files are impossible and a
+  crash before the swap leaves only orphan files, never a corrupt table;
 - idempotent epoch commit (exactly-once sink, SURVEY.md P3): every snapshot
   records ``committed_epoch``; the ingest driver skips any epoch <= that,
   so replayed micro-batches are no-ops;
@@ -71,12 +74,14 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from cdcrypt.table.commitfile import atomic_write_json
 
 BUCKET_EXPR = "pmod(hash({col}), {b})"
 DEFAULT_BUCKET_BY = "conv_id"
@@ -215,13 +220,15 @@ class LakeTable:
     def meta_dir(self) -> str:
         return os.path.join(self.root, "_meta")
 
-    def _load(self) -> None:
+    def _current_version(self) -> int:
         cur = os.path.join(self.meta_dir, "current")
         if not os.path.exists(cur):
             raise LakeTableNotFound(f"not a lake table: {self.root}")
         with open(cur) as f:
-            v = int(f.read().strip())
-        self._snapshot = self.snapshot_at(v)
+            return int(f.read().strip())
+
+    def _load(self) -> None:
+        self._snapshot = self.snapshot_at(self._current_version())
 
     def refresh(self) -> "LakeTable":
         self._load()
@@ -358,8 +365,20 @@ class LakeTable:
         raise LakeTableError(f"schema id {sid} missing")
 
     def snapshot_at(self, version: int) -> dict:
-        with open(os.path.join(self.meta_dir, f"v{version}.json")) as f:
-            return _canonical(json.load(f))
+        """Snapshot ``version``; a version with no JSON on disk (expired,
+        abandoned or never committed) raises :class:`LakeTableError`."""
+        try:
+            with open(os.path.join(self.meta_dir, f"v{version}.json")) as f:
+                return _canonical(json.load(f))
+        except FileNotFoundError:
+            raise LakeTableError(
+                f"no snapshot v{version}: no such snapshot on disk (expired "
+                "or never committed)") from None
+
+    def _versions(self) -> list[int]:
+        """Versions with a snapshot JSON in ``_meta``, ascending."""
+        return sorted(int(n[1:-5]) for n in os.listdir(self.meta_dir)
+                      if n.startswith("v") and n.endswith(".json"))
 
     # ---------- field ids ----------
     @staticmethod
@@ -413,8 +432,12 @@ class LakeTable:
             if badfn:
                 raise LakeTableError(
                     f"unknown aggregate fns {badfn}; supported {AGG_FNS}")
+        # a _meta without ``current`` is a create that crashed before its
+        # pointer swap: nothing can have committed to it, so finish it
         meta = os.path.join(root, "_meta")
-        os.makedirs(meta, exist_ok=False)
+        if os.path.exists(os.path.join(meta, "current")):
+            raise FileExistsError(f"a lake table already exists at {root}")
+        os.makedirs(meta, exist_ok=True)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         snap = {
             "format": "cdcrypt-lake/1",
@@ -439,34 +462,32 @@ class LakeTable:
             "lineage": {},
             "created_ms": int(time.time() * 1000),
         }
-        with open(os.path.join(meta, "v0.json"), "w") as f:
-            json.dump(snap, f)
+        atomic_write_json(os.path.join(meta, "v0.json"), snap)
         cls._swap_current(meta, 0)
         return cls(root)
 
     @staticmethod
     def _swap_current(meta_dir: str, version: int) -> None:
-        fd, tmp = tempfile.mkstemp(dir=meta_dir, prefix=".current.")
-        with os.fdopen(fd, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, os.path.join(meta_dir, "current"))  # atomic
+        atomic_write_json(os.path.join(meta_dir, "current"), version)
 
     # ---------- commit lock ----------
-    # flock(2) on a well-known file: acquisition is ATOMIC in the kernel
-    # (no read-pid/overwrite race — two stealers of the old pid-file
-    # scheme could both enter the critical section) and the lock dies
-    # WITH the holder (kernel releases on process exit), so crashed
-    # writers leave nothing to steal and a same-pid-under-another-user
-    # EPERM can never be mistaken for a dead holder. The lock file itself
-    # is never unlinked (unlink + recreate would let two processes hold
-    # flocks on different inodes of the same path). One-host scope, like
-    # the pid lock before it; across hosts a real catalog provides the
-    # CAS, as in Iceberg.
+    # Every snapshot, pointer and ref change after create runs inside
+    # ``with self._commit_lock(purpose):``. flock(2) on a well-known file:
+    # acquisition is ATOMIC in the kernel (no read-pid/overwrite race —
+    # two stealers of the old pid-file scheme could both enter the
+    # critical section) and the lock dies WITH the holder (kernel releases
+    # on process exit), so crashed writers leave nothing to steal and a
+    # same-pid-under-another-user EPERM can never be mistaken for a dead
+    # holder. The lock file itself is never unlinked (unlink + recreate
+    # would let two processes hold flocks on different inodes of the same
+    # path). One-host scope, like the pid lock before it; across hosts a
+    # real catalog provides the CAS, as in Iceberg.
     @property
     def _lock_path(self) -> str:
         return os.path.join(self.meta_dir, "commit.lock")
 
-    def _acquire_commit_lock(self, purpose: str) -> int:
+    @contextmanager
+    def _commit_lock(self, purpose: str):
         import fcntl
         fd = os.open(self._lock_path, os.O_CREAT | os.O_RDWR, 0o644)
         try:
@@ -482,16 +503,15 @@ class LakeTable:
                 f"commit conflict: another writer holds the commit lock "
                 f"(holder pid {holder.decode(errors='replace').strip() or '?'}, "
                 f"while acquiring for {purpose}); retry later")
-        try:  # holder pid recorded for debugging only, not for liveness
-            os.ftruncate(fd, 0)
-            os.pwrite(fd, str(os.getpid()).encode(), 0)
-        except OSError:
-            pass
-        return fd
-
-    @staticmethod
-    def _release_commit_lock(fd: int) -> None:
-        os.close(fd)  # closing the fd releases the flock
+        try:
+            try:  # holder pid recorded for debugging only, not liveness
+                os.ftruncate(fd, 0)
+                os.pwrite(fd, str(os.getpid()).encode(), 0)
+            except OSError:
+                pass
+            yield
+        finally:
+            os.close(fd)  # closing the fd releases the flock
 
     # ---------- commit ----------
     def commit(
@@ -596,14 +616,10 @@ class LakeTable:
         if stage_only:
             snap["staged"] = True
         # Commit lock: the write-snapshot -> swap-pointer sequence is not
-        # atomic, so the orphan-recovery path below must not mistake a
-        # writer currently INSIDE that window for a crash orphan; see
-        # _acquire_commit_lock for why flock (not a pid file).
-        lock_fd = self._acquire_commit_lock("commit")
-        try:
+        # atomic, so the orphan-recovery path in _persist_snapshot must not
+        # mistake a writer currently INSIDE that window for a crash orphan
+        with self._commit_lock("commit"):
             self._persist_snapshot(snap, make_current=not stage_only)
-        finally:
-            self._release_commit_lock(lock_fd)
         if not stage_only:
             self._snapshot = snap
         return version
@@ -613,44 +629,28 @@ class LakeTable:
         called holding the commit lock."""
         version = snap["version"]
         path = os.path.join(self.meta_dir, f"v{version}.json")
-        try:
-            # O_EXCL create = optimistic concurrency (Iceberg commit
-            # semantics): a v{N+1} that already exists means either a
-            # COMMITTED snapshot from another writer (current advanced
-            # -> hard conflict, refresh and retry) or an orphan left by
-            # a crash between snapshot write and pointer swap (current
-            # still behind; safe under the lock held here)
-            with open(path, "x") as f:
-                json.dump(snap, f)
-                f.flush()
-                os.fsync(f.fileno())
-        except FileExistsError as e:
-            with open(os.path.join(self.meta_dir, "current")) as f:
-                cur_v = int(f.read().strip())
-            if cur_v >= version:
+        # optimistic concurrency (Iceberg commit semantics): a v{N+1} that
+        # already exists is a COMMITTED snapshot from another writer
+        # (current advanced -> hard conflict, refresh and retry), a PENDING
+        # write-audit-publish snapshot (never overwritten: publish_staged /
+        # abandon_staged first), or an orphan left by a crash between
+        # snapshot write and pointer swap (replaced; safe under the lock)
+        if os.path.exists(path):
+            if self._current_version() >= version:
                 raise LakeTableError(
                     f"commit conflict: snapshot v{version} already "
-                    "committed by another writer; refresh() and retry"
-                ) from e
-            # a parseable existing v{N} marked staged is a PENDING
-            # write-audit-publish snapshot, not a crash orphan — never
-            # overwrite it (publish_staged / abandon_staged first)
+                    "committed by another writer; refresh() and retry")
             try:
                 with open(path) as f:
-                    existing = json.load(f)
+                    staged = json.load(f).get("staged")
             except (OSError, json.JSONDecodeError):
-                existing = None
-            if existing is not None and existing.get("staged"):
+                staged = False  # torn crash orphan
+            if staged:
                 raise LakeTableError(
                     f"snapshot v{version} is staged pending audit "
                     "(write-audit-publish); publish_staged() or "
-                    "abandon_staged() it first") from e
-            fd, tmp = tempfile.mkstemp(dir=self.meta_dir, prefix=".snap.")
-            with os.fdopen(fd, "w") as f:
-                json.dump(snap, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, path)
+                    "abandon_staged() it first")
+        atomic_write_json(path, snap)
         if make_current:
             self._swap_current(self.meta_dir, version)
 
@@ -1117,7 +1117,7 @@ class LakeTable:
         cur_schema = self.schema
         payload = [f.name for f in cur_schema.fields
                    if f.name not in key_cols]
-        keys = raw.select(*key_cols).distinct().persist()
+        keys = raw.select(*key_cols).distinct()
         cur_n2i = self._current_name_to_id(cur)
 
         def endpoint(version: int) -> DataFrame:
@@ -1182,8 +1182,9 @@ class LakeTable:
         snapshot whose ``created_ms`` <= ``ms``. Driver-side metadata walk
         from the current version downward — snapshot JSONs are local and
         commit timestamps are monotone (commits serialize under the table
-        lock), so the first hit is the answer. Retention-expired versions
-        surface as the same missing-snapshot error a version read gives."""
+        lock), so the first hit is the answer. The walk stops at the first
+        retention-expired version, so a ``ms`` older than the retained
+        history raises this method's "no snapshot at or before" error."""
         v = self.version
         while v >= 0:
             try:
@@ -1197,12 +1198,6 @@ class LakeTable:
             f"no snapshot at or before ts {ms} ms (oldest retained is "
             f"newer, or history was expired)")
 
-    def _write_refs(self, refs: dict[str, int]) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.meta_dir, prefix=".refs-")
-        with os.fdopen(fd, "w") as f:
-            json.dump(refs, f)
-        os.replace(tmp, self._refs_path)
-
     def create_tag(self, name: str, version: int | None = None) -> int:
         """Pin a snapshot under a name — auditable releases ('the corpus
         we trained run 7 on') that survive :meth:`expire_snapshots`
@@ -1211,70 +1206,50 @@ class LakeTable:
         pass cannot race the pin."""
         if not name or "/" in name:
             raise LakeTableError(f"bad tag name {name!r}")
-        lock_fd = self._acquire_commit_lock("create_tag")
-        try:
+        with self._commit_lock("create_tag"):
             self._load()
             v = self.version if version is None else int(version)
-            try:
-                self.snapshot_at(v)  # must exist (and not be expired)
-            except FileNotFoundError:
-                raise LakeTableError(
-                    f"cannot tag v{v}: no such snapshot (expired or "
-                    "never committed)") from None
+            self.snapshot_at(v)  # must exist (and not be expired)
             refs = self.tags()
             if refs.get(name, v) != v:
                 raise LakeTableError(
                     f"tag {name!r} already pins v{refs[name]} — tags are "
                     "immutable; drop_tag first")
             refs[name] = v
-            self._write_refs(refs)
+            atomic_write_json(self._refs_path, refs)
             return v
-        finally:
-            self._release_commit_lock(lock_fd)
 
     def drop_tag(self, name: str) -> bool:
-        lock_fd = self._acquire_commit_lock("drop_tag")
-        try:
+        with self._commit_lock("drop_tag"):
             refs = self.tags()
             if name not in refs:
                 return False
             del refs[name]
-            self._write_refs(refs)
+            atomic_write_json(self._refs_path, refs)
             return True
-        finally:
-            self._release_commit_lock(lock_fd)
 
     # ---------- write-audit-publish ----------
     def staged_versions(self) -> list[int]:
         """Versions with a pending staged (unpublished) snapshot."""
         out = []
-        cur = self.version
-        for n in os.listdir(self.meta_dir):
-            if not (n.startswith("v") and n.endswith(".json")):
-                continue
-            v = int(n[1:-5])
-            if v <= cur:
+        for v in self._versions():
+            if v <= self.version:
                 continue
             try:
                 if self.snapshot_at(v).get("staged"):
                     out.append(v)
-            except (OSError, json.JSONDecodeError):
-                continue
-        return sorted(out)
+            except (LakeTableError, json.JSONDecodeError):
+                continue  # abandoned since the listing, or a torn orphan
+        return out
 
     def publish_staged(self, version: int) -> int:
         """Make a staged snapshot current (the P of write-audit-publish).
         Atomic: the staged JSON is rewritten without the marker, then the
         pointer swaps — a crash between the two leaves a publishable
         snapshot, and re-running publish_staged is idempotent-safe."""
-        lock_fd = self._acquire_commit_lock("publish_staged")
-        try:
+        with self._commit_lock("publish_staged"):
             self._load()
-            try:
-                snap = self.snapshot_at(version)
-            except FileNotFoundError:
-                raise LakeTableError(
-                    f"no snapshot v{version} to publish") from None
+            snap = self.snapshot_at(version)
             if not snap.get("staged"):
                 if self.version >= version:
                     raise LakeTableError(
@@ -1286,37 +1261,27 @@ class LakeTable:
                     f"publish conflict: staged v{version} has parent "
                     f"v{snap['parent']} but current is v{self.version}")
             snap.pop("staged")
-            fd, tmp = tempfile.mkstemp(dir=self.meta_dir, prefix=".snap.")
-            with os.fdopen(fd, "w") as f:
-                json.dump(snap, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, os.path.join(self.meta_dir, f"v{version}.json"))
+            atomic_write_json(
+                os.path.join(self.meta_dir, f"v{version}.json"), snap)
             self._swap_current(self.meta_dir, version)
             self._snapshot = snap
             return version
-        finally:
-            self._release_commit_lock(lock_fd)
 
     def abandon_staged(self, version: int) -> bool:
         """Drop a staged snapshot that failed its audit. Its data files
         become unreferenced and are reclaimed by the next
         :meth:`expire_snapshots` pass (after the orphan grace window)."""
-        lock_fd = self._acquire_commit_lock("abandon_staged")
-        try:
+        with self._commit_lock("abandon_staged"):
             self._load()
-            try:
-                snap = self.snapshot_at(version)
-            except FileNotFoundError:
+            path = os.path.join(self.meta_dir, f"v{version}.json")
+            if not os.path.exists(path):
                 return False
-            if not snap.get("staged"):
+            if not self.snapshot_at(version).get("staged"):
                 raise LakeTableError(
                     f"v{version} is not staged (refusing to delete a "
                     "published snapshot; use expire_snapshots)")
-            os.remove(os.path.join(self.meta_dir, f"v{version}.json"))
+            os.remove(path)
             return True
-        finally:
-            self._release_commit_lock(lock_fd)
 
     # ---------- rollback ----------
     def rollback(self, to_version: int, *, reset_epoch: bool = False) -> int:
@@ -1337,8 +1302,7 @@ class LakeTable:
         deliberate reprocessing: the ingest will re-apply every epoch
         after ``to_version``'s (requires the source stream to still hold
         them — the consumer-retention contract)."""
-        lock_fd = self._acquire_commit_lock("rollback")
-        try:
+        with self._commit_lock("rollback"):
             self._load()
             prev = self.snapshot
             if to_version == prev["version"]:
@@ -1347,12 +1311,7 @@ class LakeTable:
                 raise LakeTableError(
                     f"cannot rollback forward (to v{to_version} from "
                     f"v{prev['version']})")
-            try:
-                old = self.snapshot_at(to_version)
-            except FileNotFoundError:
-                raise LakeTableError(
-                    f"cannot rollback to v{to_version}: no such snapshot "
-                    "(expired or never committed)") from None
+            old = self.snapshot_at(to_version)
             snap = {
                 "format": prev["format"],
                 "version": prev["version"] + 1,
@@ -1375,8 +1334,6 @@ class LakeTable:
             self._persist_snapshot(snap, make_current=True)
             self._snapshot = snap
             return snap["version"]
-        finally:
-            self._release_commit_lock(lock_fd)
 
     # ---------- metadata tables ----------
     def history(self, spark: SparkSession) -> DataFrame:
@@ -1385,13 +1342,12 @@ class LakeTable:
         lineage metrics. Driver-side work is O(retained snapshots) JSON
         reads — metadata, not data."""
         rows = []
-        for n in sorted(os.listdir(self.meta_dir)):
-            if not (n.startswith("v") and n.endswith(".json")) \
-                    or int(n[1:-5]) > self.version:
+        for v in self._versions():
+            if v > self.version:
                 continue  # staged, or a crash orphan beyond current
             try:
-                snap = self.snapshot_at(int(n[1:-5]))
-            except OSError:
+                snap = self.snapshot_at(v)
+            except LakeTableError:
                 continue  # expired since the listing
             lin, fs = snap["lineage"], snap["files"]
             rows.append((
@@ -1445,11 +1401,8 @@ class LakeTable:
         prev = self.consumers().get(consumer_id)
         if prev is not None and prev["last_version"] > int(last_version):
             return
-        fd, tmp = tempfile.mkstemp(dir=self.consumers_dir, prefix=".c-")
-        with os.fdopen(fd, "w") as f:
-            json.dump({"last_version": int(last_version),
-                       "updated_ms": int(time.time() * 1000)}, f)
-        os.replace(tmp, path)
+        atomic_write_json(path, {"last_version": int(last_version),
+                                 "updated_ms": int(time.time() * 1000)})
 
     def consumers(self) -> dict[str, dict]:
         """Registered consumer offsets: id -> {last_version, updated_ms}."""
@@ -1502,13 +1455,10 @@ class LakeTable:
         garbage and are removed regardless of age."""
         if keep_last < 1:
             raise LakeTableError("keep_last must be >= 1")
-        lock_fd = self._acquire_commit_lock("expire_snapshots")
-        try:
+        with self._commit_lock("expire_snapshots"):
             self._load()  # re-resolve under the lock
             cur = self.version
-            all_versions = {
-                int(n[1:-5]) for n in os.listdir(self.meta_dir)
-                if n.startswith("v") and n.endswith(".json")}
+            all_versions = set(self._versions())
             keep_versions = {v for v in all_versions
                              if cur - keep_last + 1 <= v <= cur}
             keep_versions |= set(self.tags().values()) & all_versions
@@ -1519,7 +1469,7 @@ class LakeTable:
                     try:
                         if self.snapshot_at(v).get("staged"):
                             keep_versions.add(v)
-                    except (OSError, json.JSONDecodeError):
+                    except json.JSONDecodeError:
                         continue
             protected_by: list[str] = []
             if respect_consumers:
@@ -1591,5 +1541,3 @@ class LakeTable:
                     "removed_data_files": removed_files,
                     "kept_versions": sorted(keep_versions),
                     "protected_by_consumers": sorted(protected_by)}
-        finally:
-            self._release_commit_lock(lock_fd)

@@ -188,3 +188,16 @@ def test_changelog_prunes_untouched_buckets(spark, tmp_path, monkeypatch):
     assert set(got) == {("K3", 0)} and got[("K3", 0)][0] == "update"
     endpoint_sets = [b for b in seen if b is not None]
     assert len(endpoint_sets) == 2 and all(len(b) == 1 for b in endpoint_sets)
+
+
+def test_changelog_leaves_no_cached_frame(spark, tmp_path):
+    """Each window's touched-key frame is planned, not cached: distinct
+    windows over one table leave the session's persistent RDDs as they
+    were."""
+    t, _ = _mk(spark, tmp_path)
+    _apply(spark, t, [("U", "D", 1, 30, 3, "user", "d2", None, TS)], epoch=3)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for lo, hi in ((0, 1), (0, 2), (1, 3), (0, 4)):
+        t.read_changelog(spark, lo, hi).collect()
+    assert jsc.getPersistentRDDs().size() == before

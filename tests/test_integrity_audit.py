@@ -127,3 +127,9 @@ def test_lineage_metrics_surface(spark, tmp_path):
     # dlq disabled -> null, and the rate column computes
     assert rows[0]["dlq_rows"] is None
     assert rows[0]["rows_per_sec"] and rows[0]["rows_per_sec"] > 0
+    # each merge-on-read epoch records the delta files it appended, and
+    # together they are the manifest's delta entries (nothing compacted)
+    from cdcrypt.table.lake import LakeTable
+    assert all(r["delta_files"] >= 1 for r in rows.values())
+    assert sum(r["delta_files"] for r in rows.values()) == sum(
+        f["kind"] == "delta" for f in LakeTable(str(tmp_path / "t")).files())

@@ -534,3 +534,56 @@ def test_as_of_timestamp_travel(tmp_path):
     # read() plumbing + exclusivity
     with pytest.raises(LakeTableError, match="at most one"):
         t.read(None, version=1, as_of_ms=ts[1])
+
+
+def test_as_of_before_retained_history_is_a_lake_error(tmp_path):
+    """A version expired from ``_meta`` is the same LakeTableError to
+    every caller: ``resolve_as_of`` walks down to the gap and reports
+    its own "no snapshot at or before" error, not the missing JSON."""
+    t = LakeTable.create(str(tmp_path / "t"), SCHEMA, bucket_count=2)
+    for e in range(4):
+        t.commit(epoch=e, keep_files=[], new_files=[], lineage={})
+    t.expire_snapshots(keep_last=2)
+    with pytest.raises(LakeTableError, match="no such snapshot"):
+        t.snapshot_at(2)
+    with pytest.raises(LakeTableError, match="no snapshot at or before"):
+        t.resolve_as_of(0)
+    with pytest.raises(LakeTableError, match="no snapshot at or before"):
+        t.read(None, as_of_ms=0)
+    with pytest.raises(LakeTableError, match="no such snapshot"):
+        t.create_tag("gone", version=1)
+    assert t.abandon_staged(2) is False
+
+
+def test_crash_inside_create_is_finished_by_the_next_open(tmp_path,
+                                                          monkeypatch):
+    """A crash after ``create`` made ``_meta`` but before it swapped
+    ``current`` (here with a torn ``v0.json`` left behind) is an
+    unfinished create: the pipeline's open-or-create completes it."""
+    import cdcrypt.table.lake as lakemod
+    from cdcrypt.streaming.pipeline import IngestPipeline
+    from cdcrypt.table.lake import LakeTableNotFound
+
+    root = str(tmp_path / "t")
+    pipe = IngestPipeline(str(tmp_path / "src"), root, str(tmp_path / "c"),
+                          bucket_count=4)
+
+    def boom(meta_dir, version):  # noqa: ARG001
+        raise RuntimeError("injected crash before pointer swap")
+
+    monkeypatch.setattr(lakemod.LakeTable, "_swap_current",
+                        staticmethod(boom))
+    with pytest.raises(RuntimeError, match="injected"):
+        pipe.table()
+    monkeypatch.undo()
+    with open(os.path.join(root, "_meta", "v0.json"), "w") as f:
+        f.write('{"format": "cdcrypt-la')
+    with pytest.raises(LakeTableNotFound):
+        LakeTable(root)
+
+    t = pipe.table()
+    assert t.version == 0 and t.committed_epoch == -1
+    assert t.bucket_count == 4 and t.key_cols == ["conv_id", "turn_idx"]
+    assert LakeTable(root).version == 0
+    with pytest.raises(FileExistsError):
+        LakeTable.create(root, SCHEMA)
