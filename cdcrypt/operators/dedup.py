@@ -7,10 +7,11 @@ events to ONE final event per ``(conv_id, turn_idx)``:
    the north rule names. Two logical windows but ONE physical shuffle:
    both windows partition by a prefix of the same keys, so Catalyst reuses
    the exchange (verified in tests via explain).
-2. ``resolve_latest_agg`` — ``groupBy(key).agg(max_by(payload, op_seq))``.
-   Hash aggregation gets map-side partial combine for free, so duplicate
-   and hot-key rows collapse BEFORE the shuffle — at 10^10 events this is
-   the plan that survives; window row_number shuffles every row.
+2. ``resolve_latest_agg`` — ``groupBy(key).agg(max(struct(op_seq, ...)))``.
+   Over an unpartitioned input the partial aggregate collapses duplicate
+   and hot-key rows before the exchange. In the ingest plan the explicit
+   range shuffle (table/lake.py partition_by_range) comes first, so the
+   partial aggregate runs after it, inside each range task.
 3. ``resolve_latest_salted`` — explicit two-phase salting: phase 1 aggregates
    per ``(key, salt)`` spreading a hot key over ``salt_buckets`` reducers,
    phase 2 aggregates the survivors per key. The north rule demands explicit
@@ -91,13 +92,15 @@ def _payload_cols(df: DataFrame, key_cols=None) -> list[str]:
 def _winner_struct(df: DataFrame, key_cols=None) -> "F.Column":
     """Comparator struct: lexicographic max = (max op_seq, then min epoch).
 
-    Deliberately ``max(struct(...))`` and NOT ``max_by``: max_by is a
-    TypedImperativeAggregate that runs as ObjectHashAggregate and silently
-    falls back to SORT-based aggregation after 128 distinct groups per
-    partition — at 10^6+ keys that is a full sort of wide rows per task.
-    Plain struct max is declarative, stays inside whole-stage-codegen hash
-    aggregation, and still gets map-side partial combine. (Found via the
-    anti-scaling compaction epoch in bench — see BENCH/BASELINE.md.)
+    ``max(struct(...))`` rather than ``max_by``: max_by is a
+    TypedImperativeAggregate that runs as ObjectHashAggregate and falls
+    back to sort-based aggregation after 128 distinct groups per
+    partition. A struct with string fields cannot use hash aggregation
+    either: on Spark 4.1.2 struct max plans as an interpreted
+    ``SortAggregate`` (a sort plus an aggregate per partition, no
+    whole-stage codegen), with a partial aggregate before the final one.
+    Sorting once per range partition, not once per bucket, is what keeps
+    that cost proportional to rows (table/lake.py partition_by_range).
     """
     payload = _payload_cols(df, key_cols)
     return F.struct(
@@ -115,8 +118,11 @@ def _unpack_winner(agg: DataFrame, payload: list[str],
 
 
 def resolve_latest_agg(df: DataFrame, key_cols=None) -> DataFrame:
-    """groupBy + max(struct(op_seq, -epoch, payload)): map-side partial
-    aggregation collapses duplicates/hot keys before the shuffle."""
+    """groupBy + max(struct(op_seq, -epoch, payload)). The partial
+    aggregate collapses duplicates and hot keys before an exchange the
+    grouping itself adds; over an input already range-partitioned (the
+    ingest plan), it runs after that exchange, in the same task as the
+    final aggregate."""
     payload = _payload_cols(df, key_cols)
     agg = df.groupBy(*_keys(key_cols)).agg(
         F.max(_winner_struct(df, key_cols)).alias("_w"))
@@ -235,9 +241,9 @@ AGG_FNS = ("sum", "max", "min", "last_non_null")
 
 def _agg_base(df: DataFrame, agg_spec, key_cols):
     """Shared two-phase skeleton of the aggregation merge engine: phase 1
-    computes the per-key delete cutoff, phase 2 (joined back on the SAME
-    hash keys — Catalyst reuses the exchange, and the final groupBy rides
-    the join's partitioning) folds contributing events per column.
+    computes the per-key delete cutoff as a window over the key, phase 2
+    folds contributing events per column. Both group by the same keys, so
+    they share the input's one exchange, and the input is scanned once.
 
     Contribution rule: live events with op_seq strictly above the key's
     newest delete. sum/max/min are associative+commutative, so folding
@@ -258,9 +264,8 @@ def _agg_base(df: DataFrame, agg_spec, key_cols):
             f"agg_spec columns {sorted(unknown)} not in payload {payload}")
     spec = {c: spec.get(c, "last_non_null") for c in payload}
     is_live = F.col("op") != "D"
-    cuts = df.groupBy(*keys).agg(
-        F.max(F.when(~is_live, F.col("op_seq"))).alias("_cut"))
-    j = df.join(cuts, keys, "left")
+    j = df.withColumn("_cut", F.max(F.when(~is_live, F.col("op_seq")))
+                      .over(Window.partitionBy(*keys)))
     contrib = is_live & (F.col("_cut").isNull()
                          | (F.col("op_seq") > F.col("_cut")))
     aggs = [

@@ -16,13 +16,13 @@ table that ingests forever degrades without it:
   time-range scan opens O(range) files instead of O(table).
 - **File sizing**: `max_records_per_file` splits each bucket range into
   contiguous sorted chunks — the bin-packing lever. At 100 TB the rewrite
-  is one shuffle (bucket repartition) + a local sort per bucket range,
+  is one shuffle (into bucket ranges) + a local sort per bucket range,
   runs range-parallel, and never touches the driver with data.
 
 Scale contract: the rewrite goes through the same bucket-rewrite path as
 copy-on-write merges and MoR compaction (operators/merge.py
 ``rewrite_buckets``): it reads the table's change rows once, shuffles once
-on the bucket column, resolves live rows on that exchange, sorts within
+into bucket ranges, resolves live rows on that exchange, sorts within
 partitions (spillable), and writes sequentially. Snapshot isolation makes
 it non-blocking for readers; `stage_only=True` makes it auditable
 (write-audit-publish) before the pointer swaps.

@@ -17,20 +17,20 @@ with the batch as one more delta. Reads stay plain scans.
 Copy-on-write merges, MoR compaction and clustered rewrites
 (operators/maintenance.py) write base files through one helper,
 :func:`rewrite_buckets`: the scope's change rows (``LakeTable.change_rows``)
-plus any batch rows, one repartition by bucket, then
+plus any batch rows, one shuffle by bucket range, then
 ``dedup.resolve_live`` — the survivor and delete rule ``read()`` applies.
 
 Physical-layout decisions (bench-driven, BENCH/BASELINE.md):
-- bucket(conv_id) == Spark HashPartitioning (table/lake.py bucket_col), so
-  bucketed writes are ``repartition(B, conv_id)`` + ``coalesce`` to about
-  one bucket range per core (table/lake.py coalesce_buckets) + PLAIN
-  parquet write: no ``partitionBy`` => no per-task sort of wide rows, and
-  a write costs ~cores tasks and files, not B. Each file stores its rows'
-  bucket ids as a physical ``bucket`` column; the manifest range and the
-  per-bucket lineage counts come from that column. When the caller's plan
-  is already clustered by conv_id (``assume_bucketed=True``, the pipeline
-  fuses resolve+encrypt+write onto one exchange) the write adds NO
-  shuffle.
+- bucket(conv_id) = pmod(murmur3(conv_id), B) (table/lake.py bucket_col).
+  A bucketed write is one shuffle into about one contiguous bucket range
+  per core (table/lake.py partition_by_range: the range id passes through
+  as the partition id) + PLAIN parquet write: no ``partitionBy`` => no
+  per-task sort of wide rows, and a write costs ~cores tasks and files,
+  not B. Each file stores its rows' bucket ids as a physical ``bucket``
+  column; the manifest range and the per-bucket lineage counts come from
+  that column. When the caller's plan is already range-partitioned
+  (``assume_bucketed=True``: the pipeline fuses resolve+encrypt+write
+  onto one exchange) the write adds NO shuffle.
 - lake files default to ``compression='none'``: the dominant bytes are
   AES-GCM ciphertext (maximum entropy) — snappy/zstd cannot shrink them and
   the codec CPU was a measured bottleneck.
@@ -54,8 +54,8 @@ from pyspark.sql.types import StructField, StructType
 
 from cdcrypt.operators.dedup import resolve_live
 from cdcrypt.table.lake import (
-    LakeTable, LakeTableError, _live_delta, bucket_col, coalesce_buckets,
-    repartition_by_bucket,
+    RANGE_ID, LakeTable, LakeTableError, _live_delta, bucket_col,
+    partition_by_range,
 )
 
 # kept as the documented default; the ACTUAL key/bucket columns come from
@@ -158,19 +158,20 @@ def _write_bucketed(
     """Write ``df`` as plain parquet files of bucket ranges; return the
     manifest entries and the rows written per bucket.
 
-    The bucket-clustered frame is coalesced to about one range per core
-    (table/lake.py coalesce_buckets) and every row carries its bucket id
-    in a physical ``bucket`` column. A file's ``[bucket_lo, bucket_hi]``
-    and the per-bucket counts are read back from that column, never
-    inferred from the file name: a coalesce over a cached parent may
+    A frame not yet range-partitioned (``assume_bucketed=False``) is
+    shuffled into about one bucket range per core (table/lake.py
+    partition_by_range); with ``assume_bucketed=True`` each partition is
+    written as it comes. Every row carries its bucket id in a physical
+    ``bucket`` column. A file's ``[bucket_lo, bucket_hi]`` and the
+    per-bucket counts are read back from that column, never inferred from
+    the file name or the partition: a caller's own partitioning may
     interleave buckets, and ``maxRecordsPerFile`` splits one range task
     into several files."""
     import time
     t0 = time.monotonic()
-    out = df if assume_bucketed else repartition_by_bucket(
-        df, bucket_count, bucket_by)
-    out = coalesce_buckets(out, bucket_count).withColumn(
-        "bucket", bucket_col(bucket_count, bucket_by))
+    out = df if assume_bucketed else partition_by_range(
+        df, bucket_count, bucket_by).drop(RANGE_ID)
+    out = out.withColumn("bucket", bucket_col(bucket_count, bucket_by))
     w = out.write.mode("overwrite").option("compression", LAKE_CODEC)
     if max_records_per_file:
         w = w.option("maxRecordsPerFile", str(int(max_records_per_file)))
@@ -280,10 +281,11 @@ def rewrite_buckets(
     from :func:`_change_frame`) as base files under ``staging``; return
     the manifest entries and the rows written per bucket.
 
-    One repartition by bucket, then ``dedup.resolve_live`` — the merge
-    engine's read resolver and delete rule, exactly what ``read()``
-    applies — reusing that exchange, then an optional ``sort_key``
-    within each bucket range. Stored rows enter at ``epoch=-1``
+    One range-id shuffle (table/lake.py partition_by_range), then
+    ``dedup.resolve_live`` — the merge engine's read resolver and delete
+    rule, exactly what ``read()`` applies — reusing that exchange with the
+    range id as one more group key, then an optional ``sort_key`` within
+    each bucket range. Stored rows enter at ``epoch=-1``
     (``LakeTable.change_rows``), so a change row at an equal ``op_seq``
     loses to the stored row. ``stats_cols`` extend the manifest bounds;
     ``bloom_cols`` default to the table's."""
@@ -292,14 +294,9 @@ def rewrite_buckets(
         stored = table.change_rows(spark, files, target_schema=target)
         rows = stored if changes is None else stored.unionByName(changes)
     live = resolve_live(
-        repartition_by_bucket(rows, table.bucket_count, table.bucket_by),
-        table.merge_engine, table.agg_spec, table.key_cols,
+        partition_by_range(rows, table.bucket_count, table.bucket_by),
+        table.merge_engine, table.agg_spec, [*table.key_cols, RANGE_ID],
     ).select(*[f.name for f in target.fields])
-    if table.bucket_by not in table.key_cols:
-        # the resolve re-shuffled by key; partition id must be the bucket
-        live = repartition_by_bucket(live, table.bucket_count,
-                                     table.bucket_by)
-    live = coalesce_buckets(live, table.bucket_count)
     if sort_key:
         live = live.sortWithinPartitions(*sort_key)
     return _write_bucketed(
@@ -336,8 +333,8 @@ def merge_upsert(
     epoch + after-image payload. Idempotent: epochs at or below
     ``table.committed_epoch`` are skipped (exactly-once under replay).
     ``assume_bucketed``: caller guarantees ``resolved`` is already
-    repartition(B, conv_id)-clustered — the MoR delta write then adds no
-    shuffle.
+    range-partitioned (table/lake.py partition_by_range) — the MoR delta
+    write then adds no shuffle.
 
     ``mode='cow'`` rewrites the batch's dirty buckets through
     :func:`rewrite_buckets` with the batch as one more delta: there is no

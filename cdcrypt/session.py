@@ -9,15 +9,6 @@ Scale rationale (tuned on a single host's ``local[N]``, designed for
   resolve_latest_salted) as the north rule requires, and can A/B the two.
 - shuffle.partitions defaults to 2x cores locally; on a real cluster set it
   near (executors * cores * 2) or rely on AQE coalescing from a higher value.
-- Reduce-side shuffle locality off, on every master. With it on, a
-  ``coalesce`` over an adaptive plan's shuffle groups the bucket partitions
-  by the executors holding their map output, so each data file would span
-  interleaved buckets instead of one contiguous range
-  (table/lake.py ``coalesce_buckets``): reads stay exact, but bucket
-  pruning weakens and rewrite scopes widen. The trade is reducer
-  locality: reducers may fetch shuffle blocks from remote executors that
-  the scheduler would otherwise have placed them next to. A session not
-  built here must set ``spark.shuffle.reduceLocality.enabled=false`` too.
 
 Python daemon: PySpark re-reads the central directory of every zip archive
 on a worker's ``sys.path`` (``pyspark.zip``, the spark-core jar) before each
@@ -84,7 +75,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("CDCRYPT_DRIVER_MEM", "16g"))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
-        .config("spark.shuffle.reduceLocality.enabled", "false")
     )
     if master.startswith("local"):
         # Single-node: shuffle bytes never cross a network, so compression is

@@ -5,9 +5,8 @@ JAR; epoch files stand in for topic offsets, SURVEY.md P1). Each epoch
 (``IngestPipeline.ingest_batch``, shared with the Structured Streaming
 driver in structured.py):
 
-    read epoch files -> cluster by bucket (ONE exchange)
+    read epoch files -> shuffle into ~one bucket range per core (ONE exchange)
         -> resolve one final change per key (dedup + LWW, exchange reused)
-        -> coalesce to ~one bucket range per core (no shuffle)
         -> FieldTransform(encrypt text/tool, AAD=conv_id) on winners only
         -> merge_upsert range-file append (no shuffle) -> atomic epoch commit
         -> checkpoint JSON with per-partition lineage
@@ -55,8 +54,8 @@ from cdcrypt.table.lake import (
     LakeTable,
     LakeTableError,
     LakeTableNotFound,
-    coalesce_buckets,
-    repartition_by_bucket,
+    RANGE_ID,
+    partition_by_range,
 )
 
 _EPOCH_FILE = re.compile(r"epoch=(\d+)\b")
@@ -289,7 +288,7 @@ class IngestPipeline:
         except LakeTableNotFound:
             pass  # fresh path: fall through to create
         else:
-            # the pipeline repartitions each epoch by ITS bucket spec and
+            # the pipeline partitions each epoch by ITS bucket spec and
             # merges with assume_bucketed=True, so every physical-layout
             # knob of an existing table must match — a silent mismatch
             # writes delta files clustered by the wrong column/modulus and
@@ -408,14 +407,14 @@ class IngestPipeline:
         (``StructuredIngest.apply_batch``). ``df`` is the batch as read
         (raw lines when ``dlq_adapter`` is set). Physical shape:
 
-            scan -> Exchange(B, conv_id) -> resolve (NO exchange: the
-            groupBy/window reuses the bucket clustering via subset
-            satisfaction) -> coalesce to ~one bucket range per core
-            (narrow, NO exchange) -> encrypt UDF once per range ->
+            scan -> Exchange(range id, ~cores) -> resolve per range (NO
+            exchange: the groupBy/window takes the range id as one more
+            key and reuses the exchange) -> encrypt UDF once per range ->
             plain file write per range (NO exchange, NO partitionBy sort)
 
-        ONE shuffle end-to-end per batch, and ~cores (not B) tasks,
-        Python UDF invocations and files after it. Encryption runs AFTER
+        ONE shuffle end-to-end per batch (table/lake.py
+        partition_by_range), and ~cores (not B) sorts, tasks, Python UDF
+        invocations and files after it. Encryption runs AFTER
         resolution so superseded/duplicate events never pay crypto. Side
         outputs (DLQ, integrity anomalies, aligner state) land BEFORE the
         table commit: a crash between them replays the batch, which
@@ -458,10 +457,10 @@ class IngestPipeline:
             anomalies.unpersist(blocking=False)
         if self.aligner is not None:
             df = self.aligner.align(spark, df, epoch)
-        resolved = coalesce_buckets(resolve_batch(
-            repartition_by_bucket(df, self.bucket_count, self._bucket_by),
-            self.merge_engine, self.agg_spec, list(self.key_cols),
-            self.resolver, self.salt_buckets), self.bucket_count)
+        resolved = resolve_batch(
+            partition_by_range(df, self.bucket_count, self._bucket_by),
+            self.merge_engine, self.agg_spec, [*self.key_cols, RANGE_ID],
+            self.resolver, self.salt_buckets).drop(RANGE_ID)
         encryptor = self._encryptor()
         lineage = merge_upsert(
             spark, table, encryptor.apply(resolved), epoch,

@@ -45,7 +45,7 @@ Semantics ported from the Iceberg spec (public), not from any runtime:
 Partition spec: ``bucket(conv_id, B)`` = ``pmod(murmur3(conv_id), B)``,
 computed in-JVM on write. A data file covers a bucket range
 ``[bucket_lo, bucket_hi]`` (about one range per core per write, see
-:func:`coalesce_buckets`) and stores each row's bucket as a physical
+:func:`partition_by_range`) and stores each row's bucket as a physical
 ``bucket`` column, outside the table schema; the range comes from that
 column's values.
 
@@ -100,34 +100,42 @@ SAFE_WIDEN = {
 
 
 def bucket_col(bucket_count: int, col: str = DEFAULT_BUCKET_BY):
-    """bucket(col) = pmod(murmur3(col), B) — deliberately the SAME
-    function Spark's HashPartitioning uses, so ``df.repartition(B,
-    col(<col>))`` yields partition_id == bucket. Writers then emit plain
-    parquet (no partitionBy => no per-task sort of wide rows), each
-    file holding the contiguous partitions of one bucket range.
-    Verified in tests: spark_partition_id() == bucket_col for all rows."""
+    """bucket(col) = pmod(murmur3(col), B) — the same function Spark's
+    HashPartitioning uses. Writers compute it into a physical ``bucket``
+    column; :func:`partition_by_range` groups rows by contiguous ranges of
+    it, and reads prune files by it."""
     return F.pmod(F.hash(F.col(col)), F.lit(bucket_count)).cast("int")
 
 
 def repartition_by_bucket(df: DataFrame, bucket_count: int,
                           col: str = DEFAULT_BUCKET_BY) -> DataFrame:
-    """Cluster rows so partition id == bucket id (one exchange; downstream
-    groupBy(col, ...) reuses it — subset clustering satisfaction)."""
+    """One partition per bucket (partition id == bucket id). No write path
+    uses it; ``perfbench/phases.py:traced_epoch`` still does, until the
+    benchmark change of ROADMAP item 2 retires that re-spelled epoch."""
     return df.repartition(bucket_count, F.col(col))
 
 
-def coalesce_buckets(df: DataFrame, bucket_count: int) -> DataFrame:
-    """Group a bucket-clustered frame into ``min(defaultParallelism,
-    bucket_count)`` bucket ranges, so the stages after it (the encrypt
-    UDF, a sort, the file write) run once per range, not once per
-    bucket. ``coalesce`` is narrow: no exchange is added, and a frame
-    already that narrow is left as it is. Over a fresh shuffle it groups
-    contiguous partitions when reduce-side shuffle locality is off (as
-    ``session.get_spark`` sets it); over a cached parent it groups by block
-    locality and may interleave buckets, so writers take a file's range
-    from its own rows, never from its position."""
-    width = df.sparkSession.sparkContext.defaultParallelism
-    return df.coalesce(max(1, min(width, bucket_count)))
+RANGE_ID = "_rid"
+
+
+def partition_by_range(df: DataFrame, bucket_count: int,
+                       col: str = DEFAULT_BUCKET_BY) -> DataFrame:
+    """Shuffle ``df`` into ``n = min(defaultParallelism, bucket_count)``
+    contiguous bucket ranges: partition r holds exactly the buckets ``b``
+    with ``floor(b * n / B) == r``, so the stages after it (resolve,
+    encrypt UDF, sort, file write) run once per range, not once per
+    bucket. The range id is materialized as the :data:`RANGE_ID` column
+    and the exchange passes it through as the partition id. A resolver
+    that takes it as one more group key reuses the exchange; an
+    expression of ``col`` would not, so callers keep the column until the
+    resolve is done, then drop it. The extra key leaves the grouping as
+    it is while each key's rows carry one ``col`` value: always when
+    ``col`` is a key column; an off-key bucket column must be a function
+    of the key, as bucket pruning and copy-on-write scopes assume."""
+    n = min(df.sparkSession.sparkContext.defaultParallelism, bucket_count)
+    rid = F.floor(bucket_col(bucket_count, col) * n / bucket_count)
+    return df.withColumn(RANGE_ID, rid.cast("int")).repartitionById(
+        n, RANGE_ID)
 
 
 def file_bucket_range(f: dict) -> tuple[int, int]:
@@ -603,7 +611,6 @@ class LakeTable:
             "files": keep_files + new_files,
             "committed_epoch": epoch,
             "lineage": lineage,
-            "created_ms": int(time.time() * 1000),
         })
         if meta_updates:
             allowed = {"bucket_by", "key_cols", "partition_spec",
@@ -625,8 +632,8 @@ class LakeTable:
         return version
 
     def _persist_snapshot(self, snap: dict, *, make_current: bool) -> None:
-        """Write ``v{N}.json`` and (optionally) swap ``current``. MUST be
-        called holding the commit lock."""
+        """Stamp ``created_ms``, write ``v{N}.json`` and (optionally) swap
+        ``current``. MUST be called holding the commit lock."""
         version = snap["version"]
         path = os.path.join(self.meta_dir, f"v{version}.json")
         # optimistic concurrency (Iceberg commit semantics): a v{N+1} that
@@ -650,6 +657,10 @@ class LakeTable:
                     f"snapshot v{version} is staged pending audit "
                     "(write-audit-publish); publish_staged() or "
                     "abandon_staged() it first")
+        # one millisecond past the parent at least, so commit instants
+        # strictly increase even when two commits share a millisecond
+        snap["created_ms"] = max(int(time.time() * 1000),
+                                 self.snapshot["created_ms"] + 1)
         atomic_write_json(path, snap)
         if make_current:
             self._swap_current(self.meta_dir, version)
@@ -1181,10 +1192,11 @@ class LakeTable:
         """Timestamp time-travel (Iceberg ``TIMESTAMP AS OF``): the newest
         snapshot whose ``created_ms`` <= ``ms``. Driver-side metadata walk
         from the current version downward — snapshot JSONs are local and
-        commit timestamps are monotone (commits serialize under the table
-        lock), so the first hit is the answer. The walk stops at the first
-        retention-expired version, so a ``ms`` older than the retained
-        history raises this method's "no snapshot at or before" error."""
+        commit instants strictly increase (``_persist_snapshot`` stamps
+        each after its parent's), so the first hit is the answer. The
+        walk stops at the first retention-expired version, so a ``ms``
+        older than the retained history raises this method's "no snapshot
+        at or before" error."""
         v = self.version
         while v >= 0:
             try:
@@ -1329,7 +1341,6 @@ class LakeTable:
                                     else prev["committed_epoch"]),
                 "lineage": {"mode": "rollback", "to_version": to_version,
                             "reset_epoch": reset_epoch},
-                "created_ms": int(time.time() * 1000),
             }
             self._persist_snapshot(snap, make_current=True)
             self._snapshot = snap

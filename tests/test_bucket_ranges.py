@@ -1,6 +1,6 @@
-"""Bucket-range data files (table/lake.py coalesce_buckets, file_buckets).
+"""Bucket-range data files (table/lake.py partition_by_range, file_buckets).
 
-A write coalesces its bucket-clustered frame to about one range per core
+A write shuffles its frame into about one contiguous bucket range per core
 and each file records ``[bucket_lo, bucket_hi]`` from its own rows' stored
 ``bucket`` column. Reads, compaction scopes and copy-on-write scopes map a
 file to the buckets it may hold through one helper, and a legacy
@@ -21,7 +21,8 @@ from cdcrypt.operators.merge import merge_upsert
 from cdcrypt.sources.changegen import GenSpec, generate_to_dir
 from cdcrypt.streaming.pipeline import IngestPipeline
 from cdcrypt.table.lake import (
-    LakeTable, bucket_col, file_bucket_range, repartition_by_bucket,
+    RANGE_ID, LakeTable, bucket_col, file_bucket_range, partition_by_range,
+    repartition_by_bucket,
 )
 
 KV = StructType([StructField("k", StringType(), False),
@@ -161,10 +162,12 @@ def test_compaction_folds_exactly_what_it_marks(spark, tmp_path):
 
 
 def test_cached_frame_gets_footer_true_ranges(spark, tmp_path):
-    """A frame cached before merge_upsert(assume_bucketed=True) coalesces
-    by block locality, so a range task may hold interleaved buckets; each
-    file's manifest range still matches its own rows, and reads, bucket
-    reads and a compaction over the overlapping ranges stay exact."""
+    """A caller's own bucket partitioning, cached and passed with
+    ``assume_bucketed=True``, is written as it comes: one file per bucket
+    partition here, where the range shuffle would have written one per
+    range. Each file's manifest range still matches its own rows, and
+    reads, bucket reads and a compaction of those files into range files
+    stay exact."""
     B = 16
     t = _kv_table(tmp_path, "t", B)
     epochs = [[("I", f"k{i}", "v0", i) for i in range(200)],
@@ -176,10 +179,9 @@ def test_cached_frame_gets_footer_true_ranges(spark, tmp_path):
         merge_upsert(spark, t, cached, e, mode="mor", compact_threshold=2,
                      assume_bucketed=True)
         cached.unpersist()
-        if e == 0:  # the grouping did interleave: written ranges overlap
+        if e == 0:  # the caller's partitions, one bucket per file
             ranges = sorted(map(file_bucket_range, t.files()))
-            assert any(hi >= lo2 for (_, hi), (lo2, _)
-                       in zip(ranges, ranges[1:])), ranges
+            assert all(lo == hi for lo, hi in ranges), ranges
         for f in t.files():
             lo, hi = file_bucket_range(f)
             stored = _stored_buckets(spark, t, f)
@@ -245,3 +247,108 @@ def test_bucket_column_name_is_reserved(tmp_path):
     t = _kv_table(tmp_path, "u", 4)
     with pytest.raises(LakeTableError, match="reserved"):
         t.evolve_schema(adds=[("bucket", LongType())])
+
+
+def _range_of(b, n, B):
+    """The range id partition_by_range gives bucket ``b``."""
+    return b * n // B
+
+
+@pytest.mark.parametrize("B", [64, 2])
+def test_partition_holds_one_contiguous_bucket_range(spark, B):
+    """Partition r of partition_by_range holds exactly the buckets b with
+    floor(b * n / B) == r, n = min(defaultParallelism, B)."""
+    n = min(spark.sparkContext.defaultParallelism, B)
+    df = partition_by_range(spark.createDataFrame(
+        [(f"k{i}",) for i in range(2000)], "k string"), B, "k")
+    assert df.rdd.getNumPartitions() == n
+    got = df.select(F.spark_partition_id().alias("p"),
+                    bucket_col(B, "k").alias("b"), RANGE_ID).collect()
+    assert all(r["p"] == r[RANGE_ID] == _range_of(r["b"], n, B)
+               for r in got)
+    assert {r["b"] for r in got} == set(range(B))
+
+
+def _record_base_plans(monkeypatch):
+    import cdcrypt.operators.merge as merge_mod
+
+    real_write = merge_mod._write_bucketed
+    plans = []
+
+    def recording_write(df, staging, root, bucket_count, kind, *a, **kw):
+        if kind == "base":
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real_write(df, staging, root, bucket_count, kind, *a, **kw)
+
+    monkeypatch.setattr(merge_mod, "_write_bucketed", recording_write)
+    return plans
+
+
+def test_off_key_compaction_shuffles_once(spark, tmp_path, monkeypatch):
+    """A table bucketed by a non-key column compacts with one exchange
+    (the range id, a function of the bucket column, is a group key), not
+    a resolve by key plus a re-shuffle by bucket, and each base file
+    holds only rows of its manifest bucket range."""
+    plans = _record_base_plans(monkeypatch)
+    B = 8
+    t = LakeTable.create(
+        str(tmp_path / "t"),
+        StructType([StructField("e", StringType(), False),
+                    StructField("u", StringType(), True),
+                    StructField("op_seq", LongType(), True)]),
+        bucket_count=B, key_cols=["e"], bucket_by="u")
+    epochs = [[("U", f"e{i}", f"u{i % 13}", 100 * e + i, e)
+               for i in range(60)] for e in range(2)]
+    for e, rows in enumerate(epochs):
+        merge_upsert(spark, t, spark.createDataFrame(
+            rows, "op string, e string, u string, op_seq long, epoch long"),
+            e, mode="mor", compact_threshold=2)
+    assert t.snapshot["lineage"]["buckets_compacted"]
+    assert len(plans) == 1
+    plan = plans[0]
+    assert plan.count("Exchange") == 1, plan
+    assert "Exchange shufflepartitionidpassthrough" in plan, plan
+    bases = [f for f in t.files() if f["kind"] == "base"]
+    assert bases
+    for f in bases:
+        lo, hi = file_bucket_range(f)
+        rows = spark.read.parquet(os.path.join(t.root, f["path"]))
+        assert rows.where(~bucket_col(B, "u").between(lo, hi)
+                          | (F.col("bucket") != bucket_col(B, "u"))
+                          ).count() == 0
+    assert sorted((r["e"], r["u"], r["op_seq"]) for r in
+                  t.read(spark).collect()) == sorted(
+        (r[1], r[2], r[3]) for r in epochs[1])
+    _assert_exact_bucket_reads(spark, t)
+
+
+def test_clustered_rewrite_with_aqe_writes_contiguous_ranges(spark, tmp_path):
+    """With adaptive execution on, rewrite_clustered's range shuffle is
+    neither coalesced nor split: one file per range, each inside the
+    range partition_by_range assigns, none overlapping."""
+    from cdcrypt.operators.maintenance import rewrite_clustered
+
+    B = 64
+    n = min(spark.sparkContext.defaultParallelism, B)
+    t = _kv_table(tmp_path, "t", B)
+    epochs = [[("I", f"k{i}", "v0", i) for i in range(600)],
+              [("U", f"k{i}", "v1", 1000 + i) for i in range(0, 600, 5)]]
+    for e, rows in enumerate(epochs):
+        merge_upsert(spark, t, _batch(spark, rows, e), e, mode="mor",
+                     compact_threshold=99)
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        rewrite_clustered(spark, t, ["k"])
+    finally:
+        spark.conf.set(key, prev)
+    bases = [f for f in t.files() if f["kind"] == "base"]
+    slots = [_range_of(file_bucket_range(f)[0], n, B) for f in bases]
+    assert sorted(slots) == list(range(n))  # one file per range
+    for f, r in zip(bases, slots):
+        lo, hi = file_bucket_range(f)
+        assert _range_of(hi, n, B) == r, (lo, hi)
+        assert _stored_buckets(spark, t, f) <= set(range(lo, hi + 1))
+    assert _state(t.read(spark)) == _lww(epochs)
+    _assert_exact_bucket_reads(spark, t)

@@ -536,6 +536,19 @@ def test_as_of_timestamp_travel(tmp_path):
         t.read(None, version=1, as_of_ms=ts[1])
 
 
+def test_back_to_back_commits_resolve_to_themselves(tmp_path):
+    """Commits in one millisecond still get strictly increasing instants,
+    so ``resolve_as_of`` of each snapshot's own ``created_ms`` is that
+    snapshot, a rollback commit included."""
+    t = LakeTable.create(str(tmp_path / "t"), SCHEMA, bucket_count=2)
+    for e in range(60):
+        t.commit(epoch=e, keep_files=[], new_files=[], lineage={})
+    t.rollback(3)
+    ts = [int(t.snapshot_at(v)["created_ms"]) for v in range(t.version + 1)]
+    assert all(a < b for a, b in zip(ts, ts[1:])), ts
+    assert [t.resolve_as_of(m) for m in ts] == list(range(t.version + 1))
+
+
 def test_as_of_before_retained_history_is_a_lake_error(tmp_path):
     """A version expired from ``_meta`` is the same LakeTableError to
     every caller: ``resolve_as_of`` walks down to the gap and reports

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
 import duckdb
 import pytest
@@ -172,11 +173,23 @@ def test_full_replay_binary_encoding_matches_oracle(spark, stream_dir,
         stream_dir)
 
 
+def _range_exchanges(plan: str) -> list[int]:
+    """The partition counts of ``plan``'s range-id (pass-through)
+    exchanges; asserts that ``plan`` has no other Exchange."""
+    got = re.findall(r"Exchange shufflepartitionidpassthrough\("
+                     r"direct_shuffle_partition_id\(\w+#\d+\), (\d+)\)",
+                     plan)
+    assert plan.count("Exchange") == len(got), plan
+    return [int(n) for n in got]
+
+
 def test_default_epoch_plan_has_one_exchange(spark, stream_dir, tmp_path,
                                              monkeypatch):
-    """A default epoch shuffles once: the bucket clustering's Exchange
-    feeds resolve (subset satisfaction), encrypt and the per-bucket write
-    with no second exchange."""
+    """A default epoch shuffles once: the range-id Exchange feeds resolve
+    (the range id is one more group key), encrypt and the per-range write
+    with no second exchange. It has min(defaultParallelism, bucket_count)
+    partitions, and the same holds for every lww resolver and for the
+    partial and aggregate merge engines."""
     import cdcrypt.streaming.pipeline as pipeline_mod
 
     real_merge = pipeline_mod.merge_upsert
@@ -191,13 +204,26 @@ def test_default_epoch_plan_has_one_exchange(spark, stream_dir, tmp_path,
                    str(tmp_path / "c")).run(spark, max_epochs=1)
     assert len(plans) == 1
     assert plans[0].count("Exchange") == 1, plans[0]
+    width = min(spark.sparkContext.defaultParallelism, 64)
+    assert _range_exchanges(plans[0]) == [width]
+    for name, kw in [("window", {"resolver": "window"}),
+                     ("salted", {"resolver": "salted"}),
+                     ("partial", {"merge_engine": "partial"}),
+                     ("aggregate", {"merge_engine": "aggregate",
+                                    "agg_spec": {"ts": "max"}})]:
+        plans.clear()
+        IngestPipeline(stream_dir, str(tmp_path / name),
+                       str(tmp_path / f"{name}-c"), **kw).run(
+                           spark, max_epochs=1)
+        assert len(plans) == 1, name
+        assert _range_exchanges(plans[0]) == [width], name
 
 
 def test_bucket_rewrite_plans_have_one_exchange(spark, tmp_path,
                                                monkeypatch):
     """A copy-on-write merge and a MoR compaction each shuffle once: the
     frame they hand to the bucketed base-file write has one Exchange
-    (the bucket repartition, which the live-row resolve reuses)."""
+    (the range-id shuffle, which the live-row resolve reuses)."""
     import cdcrypt.operators.merge as merge_mod
     from cdcrypt.operators.merge import merge_upsert
     from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -229,7 +255,8 @@ def test_bucket_rewrite_plans_have_one_exchange(spark, tmp_path,
                          compact_threshold=2)
         assert len(plans) == {"cow": 2, "mor": 3}[mode]
     for plan in plans:
-        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert _range_exchanges(plan) == [
+            min(spark.sparkContext.defaultParallelism, 2)], plan
 
 
 def test_crash_resume(spark, stream_dir, tmp_path):
